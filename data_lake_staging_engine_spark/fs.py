@@ -169,10 +169,6 @@ def filesystem_for(path: str, spark: SparkSession | None = None):
     return LocalFS()
 
 
-def read_json(fs, path: str) -> dict:
-    return json.loads(fs.read_text(path))
-
-
 def write_json_replace(fs, path: str, obj: dict) -> None:
     """Write ``obj`` to ``path`` via the ``.tmp`` + replace protocol:
     atomic on LocalFS; on HadoopFS the crash window leaves ``.tmp``

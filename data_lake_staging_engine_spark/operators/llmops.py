@@ -386,12 +386,6 @@ def _bitmap_vocab(
     return vocab, vocab_n
 
 
-def _bitmap_vocab_n(toks: DataFrame, probe: DataFrame | None = None) -> int | None:
-    """Size-only view of ``_bitmap_vocab`` (tests / size-only callers)."""
-    hit = _bitmap_vocab(toks, probe=probe)
-    return None if hit is None else hit[1]
-
-
 def _n_shuffle_parts(spark: SparkSession) -> int:
     """Scale-adaptive partition count for explicit re-spreads: the
     session's shuffle-partition conf, falling back to the cluster's
@@ -1012,47 +1006,6 @@ def _verify_pairs_token_join(
         .join(s2, F.col("d2") == F.col("s2.doc_id"))
         .filter(jac >= threshold)
         .select("d1", "d2", duck_round(jac, 6).alias("jaccard"))
-    )
-
-
-def _verify_pairs_bitmap(
-    cands: DataFrame,
-    toks: DataFrame,
-    vocab_n: int,
-    threshold: float,
-    vocab: DataFrame | None = None,
-) -> DataFrame:
-    """Exact-Jaccard verify of candidate (d1, d2) pairs via packed
-    bitmaps: one popcount expression per candidate pair (pure codegen)
-    instead of re-joining token lists. Small-universe only — callers
-    must have validated ``vocab_n`` via ``_bitmap_vocab``. Masks are
-    staged once (see ``_g02_bitmask``) for the two join sides."""
-    masks, wcols = _doc_bitmaps(toks, vocab_n, vocab=vocab)
-    masks = masks.localCheckpoint(eager=True)
-    m1 = masks.select(
-        F.col("doc_id").alias("d1"), *[F.col(c).alias(f"a_{c}") for c in wcols]
-    )
-    m2 = masks.select(
-        F.col("doc_id").alias("d2"), *[F.col(c).alias(f"b_{c}") for c in wcols]
-    )
-    paired = cands.join(m1, "d1").join(m2, "d2")
-    shared = sum(
-        (
-            F.bit_count(F.col(f"a_{c}").bitwiseAND(F.col(f"b_{c}")))
-            for c in wcols
-        ),
-        F.lit(0),
-    )
-    union = sum(
-        (
-            F.bit_count(F.col(f"a_{c}").bitwiseOR(F.col(f"b_{c}")))
-            for c in wcols
-        ),
-        F.lit(0),
-    )
-    jac = shared * F.lit(1.0) / union
-    return paired.filter(jac >= threshold).select(
-        "d1", "d2", duck_round(jac, 6).alias("jaccard")
     )
 
 

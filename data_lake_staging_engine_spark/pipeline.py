@@ -636,7 +636,7 @@ class Engine:
 
     @staticmethod
     def query_names() -> list[str]:
-        return sorted(registry())
+        return list(registry())
 
     # -- staging surface --------------------------------------------------
     def staging_pipeline(self, *args, **kwargs) -> StagingPipeline:

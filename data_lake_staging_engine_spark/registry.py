@@ -8,6 +8,9 @@ oracle the driver runs on DuckDB (driver contract: ``__spark_entry__.py``
 Queries with ``oracle=None`` are rows-only tier (approximate algorithms,
 corrupt-record handling — SURVEY.md §2 tier R).
 
+The contract is a set of (query, oracle) pairs: ``registry()`` returns
+them in name order, and that order carries no meaning.
+
 Cross-engine determinism rules applied throughout (SURVEY.md §5.4):
 ROUND every computed double on both sides; cast to DECIMAL before
 SUM-ing money so accumulation order can't matter; cast Spark int32
@@ -59,23 +62,9 @@ def _load_all_modules() -> None:
 
 
 def registry() -> dict[str, RegisteredQuery]:
-    """All registered queries, ordered for the driver's capped sweep.
-
-    The driver iterates ``__spark_entry__.queries()`` in insertion order
-    and records at most 50 CORRECTNESS rows per round, so ordering IS
-    evidence policy: never-driver-verified queries come first (hash-tier
-    before rows-only, c-g families before b35+), already-verified ones
-    last.  See driver_evidence.py for the recorded-green set and rationale.
-    """
-    from data_lake_staging_engine_spark.driver_evidence import sweep_rank
-
+    """All registered queries, in name order."""
     _load_all_modules()
-    return dict(
-        sorted(
-            _REGISTRY.items(),
-            key=lambda kv: sweep_rank(kv[0], kv[1].oracle is not None),
-        )
-    )
+    return dict(sorted(_REGISTRY.items()))
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -99,13 +99,6 @@ def _gate_event_time(df, observe_name=None):
     return gate_event_time(df, "ts", _TS_LO, _TS_HI, observe_name=observe_name)
 
 
-def _win_agg(stream):
-    return (
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double"),
-        F.count(F.lit(1)),
-    )
-
-
 @query(
     "e01_stream_tumbling",
     oracle=f"""
