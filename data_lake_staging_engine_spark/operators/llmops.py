@@ -9,15 +9,16 @@ multimodal column plumbing, and an iterative k-means representative.
 Scale design notes:
 - Exact dedup: hash-groupBy — one shuffle on the digest; digests are
   uniform so no skew.
-- Exact near-dup (`_jaccard_pairs`): runtime strategy pick — small/
-  saturated universes (vocab <= 4096) pack token sets into multi-word
-  bitmaps, generate candidates with a prefix-filtered equi-join over
-  one representative per DISTINCT set, and verify with popcount
-  Jaccard (pure codegen, linear in corpus growth — round-12 scaling
-  study); open universes use the AllPairs-style prefix-filtered token
-  join (candidates only from rare-token collisions).
-  The approximate 100 TB path is MinHash banding (g02b), whose
-  candidates are ALSO verified via the bitmap packing.
+- Exact near-dup: one strategy pick (`_bitmap_vocab`).  Small/
+  saturated universes (vocab <= 4096) share ONE mask-group core,
+  `_mask_groups`: multi-word token bitmaps, one checkpointed min-doc_id
+  representative per DISTINCT set, and the single popcount Jaccard
+  that every candidate generator (all-pairs, prefix join, MinHash
+  banding, the g32 band-index probe) is verified with.  Open universes
+  use the AllPairs-style prefix-filtered token join.  Pair consumers
+  call `_jaccard_pairs`; rep-space consumers (g26, g30) call
+  `_near_rep_pairs`, which on open vocabularies returns the lazy
+  token-join doc pairs and no group map.
 - Similarity: brute-force cosine is O(Q*N) with Q broadcast and norms
   precomputed per vector; the scale paths are hyperplane-LSH blocking
   (g03c) and IVF inverted lists (g03e).
@@ -30,6 +31,7 @@ from __future__ import annotations
 import math
 import os
 import warnings
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -367,7 +369,7 @@ def _bitmap_vocab(
     if approx_n > _BITMAP_MAX_VOCAB * 1.15:
         return None
     # The exact size rides the checkpoint job as an observed metric
-    # (round 17, the _g02_bitmask template): the separate
+    # (round 17, the _mask_groups template): the separate
     # vocab.count() this replaces was one extra job in EVERY
     # strategy-routed dedup invocation — g02/g02d/g02e/g12/g21/g26/
     # g30/g31/g32 all pass through here.  The metric sits above the
@@ -430,6 +432,26 @@ def _jaccard_pairs(
     return _g02_token_join(toks, threshold)
 
 
+def _near_rep_pairs(
+    toks: DataFrame, threshold: float, probe: DataFrame
+) -> tuple[DataFrame, DataFrame | None]:
+    """(qual, d2r) — qualifying (r1, r2) group pairs and the doc->rep
+    map, with the same strategy pick as ``_jaccard_pairs``, for
+    consumers that aggregate in rep space (g26's components,
+    ``incremental_dedup``'s near layer).  Small universes: the bitmask
+    core's pre-expansion output.  Open vocabularies: the token-join
+    doc pairs and ``d2r`` None (every doc is its own group), kept lazy
+    so a consumer's filters reach the token join (``incremental_dedup``)."""
+    hit = _bitmap_vocab(toks, probe=probe)
+    if hit is not None:
+        vocab, vocab_n = hit
+        return _g02_bitmask(toks, vocab_n, threshold, vocab=vocab, expand=False)
+    qual = _g02_token_join(toks, threshold).select(
+        F.col("d1").alias("r1"), F.col("d2").alias("r2")
+    )
+    return qual, None
+
+
 def _doc_bitmaps(
     toks: DataFrame, vocab_n: int, vocab: DataFrame | None = None
 ) -> tuple[DataFrame, list[str]]:
@@ -472,6 +494,98 @@ def _doc_bitmaps(
     return masks, [f"w{w}" for w in range(n_words)]
 
 
+class _MaskGroups(NamedTuple):
+    """Distinct-token-set groups of a bitmap-routed corpus — the rep
+    space every exact near-dup route verifies in (``_mask_groups``).
+
+    ``d2r``: (doc_id, w0..wk, rep), eagerly checkpointed; ``reps``: its
+    rep rows plus ``n`` (set size by popcount); ``jac``: the exact
+    popcount Jaccard between ``a_w*`` and ``b_w*`` mask columns."""
+
+    d2r: DataFrame
+    reps: DataFrame
+    wcols: list[str]
+    n_reps: int
+    jac: Column
+
+    def cols(self, side: str) -> list[Column]:
+        """The mask words renamed for one side ("a"/"b") of ``jac``."""
+        return [F.col(c).alias(f"{side}_{c}") for c in self.wcols]
+
+    def rm(self, side: str) -> DataFrame:
+        """(r1, a_w*) or (r2, b_w*): one rep side of the verify."""
+        key = "r1" if side == "a" else "r2"
+        return self.reps.select(F.col("rep").alias(key), *self.cols(side))
+
+
+def _mask_groups(
+    toks: DataFrame, vocab_n: int, vocab: DataFrame | None = None
+) -> _MaskGroups:
+    """Stage the doc->representative table once for every bitmap
+    route: each distinct mask is identified by the MIN doc_id of its
+    docs (an exact, collision-free 8-byte identity — no hash-as-
+    identity risk), and mask equality <=> token-set equality because
+    the vocab is complete on this branch.
+
+    The eager localCheckpoint replaces recomputations of the tokenize+
+    aggregate pipeline by its readers (rep derivation, verify sides,
+    both expansion sides): masks are 16+8*ceil(vocab/64) bytes per doc
+    vs ~KB of raw text.  n_reps rides the checkpoint job as an
+    observed metric (round 16, same mechanism as the components
+    convergence probe) instead of a separate reps.count() job, so
+    every size gate downstream reads the OBSERVED rep count, never a
+    caller-supplied one.  Empty corpus: sum over an empty frame
+    observes NULL -> 0."""
+    masks, wcols = _doc_bitmaps(toks, vocab_n, vocab=vocab)
+    obs_reps = Observation()
+    d2r = (
+        masks.withColumn(
+            "rep", F.min("doc_id").over(Window.partitionBy(*wcols))
+        )
+        .observe(
+            obs_reps,
+            F.sum(
+                (F.col("doc_id") == F.col("rep")).cast("long")
+            ).alias("n_reps"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    popcnt = sum((F.bit_count(F.col(c)) for c in wcols), F.lit(0))
+    reps = d2r.filter(F.col("doc_id") == F.col("rep")).withColumn("n", popcnt)
+    # Verify arithmetic: the OR-union form, deliberately (round 17
+    # negative result, recorded so round 18 does not re-try): both
+    # "one masked chain + two unary popcount chains" and "sizes as
+    # n1/n2 join columns" were built and measured at the 10x replica —
+    # the column form sends Catalyst constraint propagation into a
+    # driver heap OOM (with the sizes as aliased expressions AND as
+    # stored checkpoint columns), and the unary-chain form measured a
+    # wash-to-loss interleaved (74.9/77.5 s vs 63.7 s entry): the
+    # verify's cost is the 2x ~240 B broadcast-hashtable row fetch per
+    # collision, not the bit_count arithmetic, so shrinking the
+    # arithmetic moves nothing and the row cut (the size filter in
+    # _minhash_lsh_candidates) is the lever that pays.
+    shared = sum(
+        (F.bit_count(F.col(f"a_{c}").bitwiseAND(F.col(f"b_{c}"))) for c in wcols),
+        F.lit(0),
+    )
+    union = sum(
+        (F.bit_count(F.col(f"a_{c}").bitwiseOR(F.col(f"b_{c}"))) for c in wcols),
+        F.lit(0),
+    )
+    n_reps = int(obs_reps.get["n_reps"] or 0)
+    return _MaskGroups(d2r, reps, wcols, n_reps, shared * F.lit(1.0) / union)
+
+
+def _prefix_len(n: Column, threshold: float) -> Column:
+    """PPJoin prefix length ``n - ceil(t*n) + 1``: a J >= t pair must
+    collide on each side's first that-many tokens of a global order
+    (pigeonhole).  The 1e-9 guard keeps float ceil from rounding an
+    exact t*n UP (0.55*100 = 55.00000000000001 -> ceil 56 would
+    SHORTEN the prefix and silently drop pairs); threshold granularity
+    is >> 1e-9, and a too-LONG prefix is always sound."""
+    return n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)) + 1
+
+
 def _g02_bitmask(
     toks: DataFrame,
     vocab_n: int,
@@ -503,90 +617,24 @@ def _g02_bitmask(
     in that sub-corpus's distinct sets — a fixed property of the data,
     not a scaling term.
 
-    Exactness: each distinct mask is identified by the MIN doc_id of
-    its docs (an exact, collision-free 8-byte identity — no hash-as-
-    identity risk); representative token-id sets are re-derived from
-    the mask BITS per row (no corpus rescan, no vocab-wide join);
-    candidates are verified with the exact popcount Jaccard; same-mask
-    doc pairs are emitted with jaccard 1.0 (identical token sets).
-    Equivalence to the naive token join is pinned by
-    tests/test_strategies.py.
-
-    The doc->representative table is STAGED once (eager
-    localCheckpoint) before its three uses (representative derivation +
-    both expansion sides): masks are 16+8*ceil(vocab/64) bytes per doc
-    vs ~KB of raw text, so staging replaces three recomputations of the
-    tokenize+aggregate pipeline."""
-    masks, wcols = _doc_bitmaps(toks, vocab_n, vocab=vocab)
-    # n_reps rides the d2r checkpoint as an observed metric (round 16,
-    # same mechanism as the components convergence probe): the
-    # separate reps.count() job this replaces re-scanned the staged
-    # table once per invocation — a fixed extra job at bench scale, a
-    # full d2r pass at 100 TB.  Empty corpus: sum over an empty frame
-    # observes NULL -> 0, matching the old count.
-    obs_reps = Observation()
-    d2r = (
-        masks.withColumn(
-            "rep", F.min("doc_id").over(Window.partitionBy(*wcols))
-        )
-        .observe(
-            obs_reps,
-            F.sum(
-                (F.col("doc_id") == F.col("rep")).cast("long")
-            ).alias("n_reps"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    popcnt = sum((F.bit_count(F.col(c)) for c in wcols), F.lit(0))
-    reps = d2r.filter(F.col("doc_id") == F.col("rep")).withColumn("n", popcnt)
-
-    # Verify arithmetic: the OR-union form, deliberately (round 17
-    # negative result, recorded so round 18 does not re-try): both
-    # "one masked chain + two unary popcount chains" and "sizes as
-    # n1/n2 join columns" were built and measured at the 10x replica —
-    # the column form sends Catalyst constraint propagation into a
-    # driver heap OOM (with the sizes as aliased expressions AND as
-    # stored checkpoint columns), and the unary-chain form measured a
-    # wash-to-loss interleaved (74.9/77.5 s vs 63.7 s entry): the
-    # verify's cost is the 2x ~240 B broadcast-hashtable row fetch per
-    # collision, not the bit_count arithmetic, so shrinking the
-    # arithmetic moves nothing and the row cut (the size filter in
-    # _minhash_lsh_candidates) is the lever that pays.
-    shared = sum(
-        (
-            F.bit_count(F.col(f"a_{c}").bitwiseAND(F.col(f"b_{c}")))
-            for c in wcols
-        ),
-        F.lit(0),
-    )
-    union = sum(
-        (
-            F.bit_count(F.col(f"a_{c}").bitwiseOR(F.col(f"b_{c}")))
-            for c in wcols
-        ),
-        F.lit(0),
-    )
-    jac = shared * F.lit(1.0) / union
-    rm_a = reps.select(
-        F.col("rep").alias("r1"), *[F.col(c).alias(f"a_{c}") for c in wcols]
-    )
-    rm_b = reps.select(
-        F.col("rep").alias("r2"), *[F.col(c).alias(f"b_{c}") for c in wcols]
-    )
-
-    # One-scalar plan constant, observed during the checkpoint job
-    # (the same driver-side-constant precedent as the vocab/anchor/idf
-    # counts, minus the extra scan).
-    n_reps = int(obs_reps.get["n_reps"] or 0)
+    Exactness: distinct masks are grouped by ``_mask_groups`` (min-
+    doc_id reps, staged once); representative token-id sets are re-
+    derived from the mask BITS per row (no corpus rescan, no vocab-wide
+    join); candidates are verified with the exact popcount Jaccard;
+    same-mask doc pairs are emitted with jaccard 1.0 (identical token
+    sets).  Equivalence to the naive token join is pinned by
+    tests/test_strategies.py."""
+    g = _mask_groups(toks, vocab_n, vocab=vocab)
+    n_reps, wcols = g.n_reps, g.wcols
     if n_reps <= _ALLPAIRS_MAX_REPS:
         # Small distinct-set universe: brute all-pairs popcount verify
         # in one broadcast-NLJ codegen loop — no candidate machinery,
         # no shuffle; at most _ALLPAIRS_MAX_REPS^2/2 comparisons.
-        qual = rm_a.join(
-            F.broadcast(rm_b),
-            (F.col("r1") < F.col("r2")) & (jac >= threshold),
-        ).select("r1", "r2", duck_round(jac, 6).alias("jaccard"))
-        return _expand_mask_pairs(qual, d2r) if expand else (qual, d2r)
+        qual = g.rm("a").join(
+            F.broadcast(g.rm("b")),
+            (F.col("r1") < F.col("r2")) & (g.jac >= threshold),
+        ).select("r1", "r2", duck_round(g.jac, 6).alias("jaccard"))
+        return _expand_mask_pairs(qual, g.d2r) if expand else (qual, g.d2r)
     else:
         # Large universe: prefix-filtered candidates.  (rep, tok_id)
         # membership is enumerated from the mask bits — per-row
@@ -596,7 +644,7 @@ def _g02_bitmask(
             f"b -> (shiftright({c}, b) & 1) = 1), b -> b + {wi * 64})"
             for wi, c in enumerate(wcols)
         )
-        mem = reps.select(
+        mem = g.reps.select(
             "rep",
             "n",
             F.explode(F.expr(f"flatten(array({ids_exprs}))")).alias("tok_id"),
@@ -604,10 +652,7 @@ def _g02_bitmask(
 
         # Global token order: ascending document frequency over DISTINCT
         # sets, tok_id tiebreak (any total order is sound; rare-first
-        # minimizes collisions).  The 1e-9 guard keeps float ceil from
-        # rounding an exact t*n UP (0.8*5 = 4.0000000000000002 -> ceil 5
-        # would SHORTEN the prefix and silently drop pairs); threshold
-        # granularity is >> 1e-9, and a too-LONG prefix is always sound.
+        # minimizes collisions).
         df_ = mem.groupBy("tok_id").agg(F.count(F.lit(1)).alias("df"))
         ranked = mem.join(df_, "tok_id").withColumn(
             "rnk",
@@ -615,18 +660,13 @@ def _g02_bitmask(
                 Window.partitionBy("rep").orderBy("df", "tok_id")
             ),
         )
-        prefix_len = (
-            F.col("n")
-            - F.ceil(F.lit(threshold) * F.col("n") - F.lit(1e-9))
-            + 1
-        )
         # Staged once (reps x prefix_len rows — linear, tiny next to
         # the collision stream): read by the collision-budget probe
         # below and by BOTH join sides, instead of re-running the
         # membership window three times.
         obs_pref = Observation()
         pref = (
-            ranked.filter(F.col("rnk") <= prefix_len)
+            ranked.filter(F.col("rnk") <= _prefix_len(F.col("n"), threshold))
             .select("rep", "n", "rnk", "tok_id")
             .observe(obs_pref, F.count(F.lit(1)).alias("rows"))
             .localCheckpoint(eager=True)
@@ -674,17 +714,11 @@ def _g02_bitmask(
                     F.col("rep").alias("doc_id"),
                     F.col("tok_id").alias("tok"),
                 ),
-                distinct=False,  # popcount verify dedups after
-                # exact PPJoin length filter rides the signatures —
-                # size-incompatible collisions never reach the wide
-                # rm-mask verify (measured 1.47x row cut at 10x)
-                sizes=reps.select(F.col("rep").alias("doc_id"), "n"),
-                size_threshold=threshold,
-                n_docs=n_reps,
+                g,
+                threshold=threshold,
             ).select(F.col("d1").alias("r1"), F.col("d2").alias("r2"))
             return _finish_bitmask_verify(
-                cands, d2r, rm_a, rm_b, wcols, jac, threshold,
-                n_reps, toks.sparkSession, expand=expand,
+                cands, g, threshold, expand=expand,
                 rebalance=False,  # banding pre-spreads its probe side
             )
         # Collision-join strategy (round 16, measured on the 10x
@@ -733,7 +767,7 @@ def _g02_bitmask(
         # keeps the downstream rebalance instead.
         n_parts = _n_shuffle_parts(toks.sparkSession)
         if use_inline:
-            p1m = pref.join(reps.select("rep", *wcols), "rep")
+            p1m = pref.join(g.reps.select("rep", *wcols), "rep")
             # spread only the PROBE side; the build side is broadcast
             # whole, so an exchange in its lineage would be pure cost
             p1 = p1m.repartition(n_parts).select(
@@ -741,14 +775,14 @@ def _g02_bitmask(
                 F.col("n").alias("n1"),
                 F.col("rnk").alias("i1"),
                 "tok_id",
-                *[F.col(c).alias(f"a_{c}") for c in wcols],
+                *g.cols("a"),
             ).alias("p1")
             p2 = p1m.select(
                 F.col("rep").alias("r2"),
                 F.col("n").alias("n2"),
                 F.col("rnk").alias("i2"),
                 "tok_id",
-                *[F.col(c).alias(f"b_{c}") for c in wcols],
+                *g.cols("b"),
             ).alias("p2")
         else:
             p1_src = (
@@ -804,12 +838,12 @@ def _g02_bitmask(
                     (F.col("r1") < F.col("r2"))
                     & size_ok
                     & pos_ok
-                    & (jac >= threshold)
+                    & (g.jac >= threshold)
                 )
-                .select("r1", "r2", duck_round(jac, 6).alias("jaccard"))
+                .select("r1", "r2", duck_round(g.jac, 6).alias("jaccard"))
                 .distinct()
             )
-            return _expand_mask_pairs(qual, d2r) if expand else (qual, d2r)
+            return _expand_mask_pairs(qual, g.d2r) if expand else (qual, g.d2r)
         cands = (
             p1.join(
                 F.broadcast(p2) if plain_bytes <= gate else p2,
@@ -819,8 +853,7 @@ def _g02_bitmask(
             .select("r1", "r2")
         )
         return _finish_bitmask_verify(
-            cands, d2r, rm_a, rm_b, wcols, jac, threshold,
-            n_reps, toks.sparkSession, expand=expand,
+            cands, g, threshold, expand=expand,
             # a broadcast collision join keeps the stream's task
             # distribution balanced by probe rows, so skip the extra
             # exchange exactly like the banding route does; the SMJ
@@ -831,14 +864,8 @@ def _g02_bitmask(
 
 def _finish_bitmask_verify(
     cands: DataFrame,
-    d2r: DataFrame,
-    rm_a: DataFrame,
-    rm_b: DataFrame,
-    wcols: list[str],
-    jac: Column,
+    g: _MaskGroups,
     threshold: float,
-    n_reps: int,
-    spark: SparkSession,
     expand: bool = True,
     rebalance: bool = True,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
@@ -862,8 +889,8 @@ def _finish_bitmask_verify(
     # O(collisions) exchange here would be pure cost (``rebalance=
     # False``); the prefix-join route stays key-partitioned and keeps
     # the measured rebalance win.
-    if rebalance and len(wcols) >= 16:
-        cands = cands.repartition(_n_shuffle_parts(spark))
+    if rebalance and len(g.wcols) >= 16:
+        cands = cands.repartition(_n_shuffle_parts(cands.sparkSession))
     # The rep tables are n_reps x (16 + 8*words) bytes — tiny next
     # to the candidate stream, but right at Spark's 10 MB default
     # broadcast threshold at the 10x-study scale, where missing the
@@ -872,24 +899,26 @@ def _finish_bitmask_verify(
     # 20+ min as SMJ).  Hint the broadcast explicitly while the
     # table is provably small; past ~200 MB let AQE pick (a shuffle
     # join is then genuinely required).
-    rep_bytes = n_reps * (16 + 8 * len(wcols))
-    if rep_bytes <= 200 * 1024 * 1024:
+    rm_a, rm_b = g.rm("a"), g.rm("b")
+    if g.n_reps * (16 + 8 * len(g.wcols)) <= 200 * 1024 * 1024:
         rm_a, rm_b = F.broadcast(rm_a), F.broadcast(rm_b)
     qual = (
         cands.join(rm_a, "r1")
         .join(rm_b, "r2")
-        .filter(jac >= threshold)
-        .select("r1", "r2", duck_round(jac, 6).alias("jaccard"))
+        .filter(g.jac >= threshold)
+        .select("r1", "r2", duck_round(g.jac, 6).alias("jaccard"))
         .distinct()
     )
-    return _expand_mask_pairs(qual, d2r) if expand else (qual, d2r)
+    return _expand_mask_pairs(qual, g.d2r) if expand else (qual, g.d2r)
 
 
 def _expand_mask_pairs(qual: DataFrame, d2r: DataFrame) -> DataFrame:
     """Expand qualifying representative pairs to doc pairs; reps are
     distinct masks, so the two doc groups are disjoint and
     least/greatest yields d1 < d2 directly.  Docs sharing one mask
-    have IDENTICAL token sets: jaccard 1.0."""
+    have IDENTICAL token sets: jaccard 1.0.  ``d2r`` is always the
+    checkpointed ``_MaskGroups.d2r`` (every caller passes ``g.d2r``),
+    so its partition count below is checkpoint metadata, not a re-plan."""
     # Round 17 (guide §2, the r16 probe-side-spread discipline): d2r
     # rides an eager localCheckpoint whose layout froze whatever AQE
     # coalesced its build shuffle to — 1-2 partitions at bench scale
@@ -938,7 +967,7 @@ def _g02_token_join(toks: DataFrame, threshold: float = 0.8) -> DataFrame:
     """Exact set-similarity join with PREFIX FILTERING (the AllPairs/
     PPJoin principle): order tokens by ascending global frequency; a
     pair with Jaccard >= t MUST share a token within each side's first
-    ``n - ceil(t*n) + 1`` tokens of that order (pigeonhole). Candidate
+    ``_prefix_len`` tokens of that order (pigeonhole). Candidate
     pairs therefore come only from collisions on each doc's *rarest*
     ~⌈(1-t)n⌉ tokens — the dense head of the frequency
     distribution never joins. Candidates are then verified with the
@@ -964,8 +993,9 @@ def _g02_token_join(toks: DataFrame, threshold: float = 0.8) -> DataFrame:
         )
         .join(sizes, "doc_id")
     )
-    prefix_len = F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-    pref = ranked.filter(F.col("rnk") <= prefix_len).select("doc_id", "tok")
+    pref = ranked.filter(F.col("rnk") <= _prefix_len(F.col("n"), threshold)).select(
+        "doc_id", "tok"
+    )
     p1, p2 = pref.alias("p1"), pref.alias("p2")
     cands = (
         p1.join(
@@ -1084,26 +1114,26 @@ def _band_signatures(
 
 def _minhash_lsh_candidates(
     toks: DataFrame,
+    g: _MaskGroups | None = None,
+    *,
+    threshold: float,
     n_hashes: int = 16,
     bands: int = 4,
-    distinct: bool = True,
-    sizes: DataFrame | None = None,
-    size_threshold: float | None = None,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """MinHash banding candidate generation over any (doc_id, tok) set
     stream: docs sharing any band signature (``_band_signatures``)
     become a candidate (d1 < d2) pair via an equi-join on (band, sig).
-    Shuffle volume O(docs * bands).
+    Shuffle volume O(docs * bands).  ``threshold`` is the caller's
+    verify cut; it prunes here only with ``g`` (the length filter).
 
-    ``distinct=False`` skips the pre-verify pair dedup: a pair
-    colliding in k bands then flows through the caller's verify k<=
-    ``bands`` times instead of paying a candidate-stream-sized
-    shuffle.  ONLY sound for verifies that filter per row and dedup
-    AFTER (the popcount paths — ``_finish_bitmask_verify`` ends in
-    distinct); the token-join verify COUNTS rows per pair
+    With mask groups ``g`` the stream is in rep space (doc_id = rep)
+    and the pre-verify pair dedup is skipped: a pair colliding in k
+    bands then flows through the popcount verify k <= ``bands`` times
+    instead of paying a candidate-stream-sized shuffle.  Sound because
+    ``_finish_bitmask_verify`` filters per row and ends in distinct;
+    the token-join verify (``g`` None) COUNTS rows per pair
     (``_verify_pairs_token_join``), so duplicates would inflate its
-    shared-token count — it must keep ``distinct=True``.  Round 16:
+    shared-token count — it keeps the distinct.  Round 16:
     on the 10x gram corpus the banding route emitted 24.4M distinct
     candidates for 2,560 true pairs (a tiny Zipfian 3-gram universe
     gives unrelated docs J~0.3, and 4x4 banding passes ~3% of ALL
@@ -1122,8 +1152,8 @@ def _minhash_lsh_candidates(
     concentrating a b^2/2 block in one task."""
     sigs = _band_signatures(toks, n_hashes=n_hashes, bands=bands)
     # PPJoin LENGTH filter inside the collision join (round 17,
-    # VERDICT r16 #4): when the caller knows each doc's exact set size
-    # (the bitmap branches do — it's a popcount), J >= t forces
+    # VERDICT r16 #4): with mask groups each rep's exact set size is
+    # known (``reps.n``, a popcount), and J >= t forces
     # t*|B| <= |A| <= |B|/t, so size-incompatible collisions drop
     # BEFORE the downstream verify ever fetches their ~480 B of mask
     # words from the rm hashtables — which the 10x component profile
@@ -1133,8 +1163,8 @@ def _minhash_lsh_candidates(
     # evaluated at ~zero cost because n1/n2 ride the signature rows.
     # Exact (pigeonhole on sizes, same 1e-9 float-ceil guard class as
     # the prefix filter): no qualified pair can be dropped.
-    if sizes is not None and size_threshold is not None:
-        sigs = sigs.join(F.broadcast(sizes), "doc_id")
+    if g is not None:
+        sigs = sigs.join(F.broadcast(g.reps.select("doc_id", "n")), "doc_id")
     n_parts = _n_shuffle_parts(toks.sparkSession)
     # Keep the collision join a BHJ when the signature table is
     # provably small (round 17 regression fix): joining the sizes onto
@@ -1143,13 +1173,13 @@ def _minhash_lsh_candidates(
     # auto-broadcast used to pick BHJ for fell back to a sort-merge —
     # two new (band, sig) exchanges + sorts on the collision path at
     # bench scale (test_plans caught the 9 -> 11 exchange count).  The
-    # caller knows the exact signature row count (n_docs x bands — one
-    # observed scalar, no extra job); gate like g21's embedding
+    # exact signature row count is n_reps x bands (n_reps OBSERVED at
+    # the groups' checkpoint, no extra job); gate like g21's embedding
     # lookups: 32 MB of estimated raw bytes, leaving 2-4x headroom for
     # HashedRelation inflation.  Past the gate the estimate-driven SMJ
     # stands (100 TB posture unchanged).
     build = sigs
-    if n_docs is not None and n_docs * bands * 48 <= 32 * 1024 * 1024:
+    if g is not None and g.n_reps * bands * 48 <= 32 * 1024 * 1024:
         build = F.broadcast(build)
     a, b_ = sigs.repartition(n_parts).alias("a"), build.alias("b")
     cond = (
@@ -1157,17 +1187,17 @@ def _minhash_lsh_candidates(
         & (F.col("a.sig") == F.col("b.sig"))
         & (F.col("a.doc_id") < F.col("b.doc_id"))
     )
-    if sizes is not None and size_threshold is not None:
+    if g is not None:
         cond = cond & (
             F.least(F.col("a.n"), F.col("b.n"))
-            >= F.lit(size_threshold)
+            >= F.lit(threshold)
             * F.greatest(F.col("a.n"), F.col("b.n"))
             - F.lit(1e-9)
         )
     pairs = a.join(b_, cond).select(
         F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
     )
-    return pairs.distinct() if distinct else pairs
+    return pairs.distinct() if g is None else pairs
 
 
 def _minhash_lsh_neardup(toks: DataFrame, probe: DataFrame | None = None) -> DataFrame:
@@ -1195,30 +1225,10 @@ def _minhash_lsh_neardup(toks: DataFrame, probe: DataFrame | None = None) -> Dat
     hit = _bitmap_vocab(toks, probe=probe)
     if hit is None:
         return _verify_pairs_token_join(
-            _minhash_lsh_candidates(toks), toks, 0.8
+            _minhash_lsh_candidates(toks, threshold=0.8), toks, 0.8
         )
     vocab, vocab_n = hit
-    masks, wcols = _doc_bitmaps(toks, vocab_n, vocab=vocab)
-    # n_reps rides the d2r checkpoint as an observed metric (round 17,
-    # the _g02_bitmask template): the separate reps.count() this
-    # replaces was one extra job per invocation at bench scale and a
-    # full staged-table pass at 100 TB.  Empty corpus: sum over an
-    # empty frame observes NULL -> 0, matching the old count.
-    obs_reps = Observation()
-    d2r = (
-        masks.withColumn(
-            "rep", F.min("doc_id").over(Window.partitionBy(*wcols))
-        )
-        .observe(
-            obs_reps,
-            F.sum(
-                (F.col("doc_id") == F.col("rep")).cast("long")
-            ).alias("n_reps"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    reps = d2r.filter(F.col("doc_id") == F.col("rep"))
-    n_reps = int(obs_reps.get["n_reps"] or 0)
+    g = _mask_groups(toks, vocab_n, vocab=vocab)
     # Band the RAW tokens of the representatives only — same hash
     # stream as doc-space banding, so candidate groups are identical.
     # The rep-id semi-join side is broadcast only under the same ~200
@@ -1226,46 +1236,14 @@ def _minhash_lsh_neardup(toks: DataFrame, probe: DataFrame | None = None) -> Dat
     # (ADVICE r15): on a mostly-unique corpus n_reps ~= n_docs, and an
     # unconditional broadcast would ship a corpus-sized id list to
     # every executor.  Past the gate, let AQE pick the join.
-    rep_ids = reps.select("doc_id")
-    if n_reps * 24 <= 200 * 1024 * 1024:
+    rep_ids = g.reps.select("doc_id")
+    if g.n_reps * 24 <= 200 * 1024 * 1024:
         rep_ids = F.broadcast(rep_ids)
     rep_toks = toks.join(rep_ids, "doc_id", "left_semi")
-    popcnt = sum((F.bit_count(F.col(c)) for c in wcols), F.lit(0))
-    cands = _minhash_lsh_candidates(
-        rep_toks,
-        distinct=False,
-        # exact PPJoin length filter (see _minhash_lsh_candidates):
-        # sizes are one popcount per REP row, computed in the tiny
-        # broadcast build side
-        sizes=reps.select("doc_id", popcnt.alias("n")),
-        size_threshold=0.8,
-        n_docs=n_reps,
-    ).select(F.col("d1").alias("r1"), F.col("d2").alias("r2"))
-    rm_a = reps.select(
-        F.col("rep").alias("r1"), *[F.col(c).alias(f"a_{c}") for c in wcols]
+    cands = _minhash_lsh_candidates(rep_toks, g, threshold=0.8).select(
+        F.col("d1").alias("r1"), F.col("d2").alias("r2")
     )
-    rm_b = reps.select(
-        F.col("rep").alias("r2"), *[F.col(c).alias(f"b_{c}") for c in wcols]
-    )
-    shared = sum(
-        (
-            F.bit_count(F.col(f"a_{c}").bitwiseAND(F.col(f"b_{c}")))
-            for c in wcols
-        ),
-        F.lit(0),
-    )
-    union = sum(
-        (
-            F.bit_count(F.col(f"a_{c}").bitwiseOR(F.col(f"b_{c}")))
-            for c in wcols
-        ),
-        F.lit(0),
-    )
-    jac = shared * F.lit(1.0) / union
-    return _finish_bitmask_verify(
-        cands, d2r, rm_a, rm_b, wcols, jac, 0.8, n_reps,
-        toks.sparkSession, rebalance=False,
-    )
+    return _finish_bitmask_verify(cands, g, 0.8, rebalance=False)
 
 
 @query("g02e_dedup_lsh_shingle", oracle=None)  # approximate — rows-only tier
@@ -3104,17 +3082,15 @@ def g26_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora collapse: the label iterations shuffle group-level edges,
     never the m^2 same-set blobs (BASELINE.md r15)."""
     d = load(spark, sf_dir, "documents")
-    toks = _tokens(d)
-    hit = _bitmap_vocab(toks, probe=_tokens_raw(d))
-    if hit is not None:
-        vocab, vocab_n = hit
-        qual, d2r = _g02_bitmask(toks, vocab_n, 0.8, vocab=vocab, expand=False)
-        rep_labels = _min_label_components(
-            qual.select(F.col("r1").alias("d1"), F.col("r2").alias("d2"))
-        )
+    qual, d2r = _near_rep_pairs(_tokens(d), 0.8, _tokens_raw(d))
+    labels = _min_label_components(
+        qual.select(F.col("r1").alias("d1"), F.col("r2").alias("d2"))
+    )
+    if d2r is not None:
+        # lift the group labels to the docs of each group
         grp = d2r.groupBy("rep").agg(F.count(F.lit(1)).alias("gsize"))
         part = (
-            grp.join(rep_labels, grp["rep"] == rep_labels["node"], "left")
+            grp.join(labels, grp["rep"] == labels["node"], "left")
             .select(
                 "rep",
                 F.coalesce("label", F.col("rep")).alias("comp"),
@@ -3126,9 +3102,6 @@ def g26_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels = d2r.join(part.select("rep", "comp"), "rep").select(
             F.col("doc_id").alias("node"), F.col("comp").alias("label")
         )
-    else:
-        pairs = _g02_token_join(toks, 0.8).select("d1", "d2")
-        labels = _min_label_components(pairs)
     return labels.select(
         F.col("node").alias("doc_id"),
         F.col("label").alias("cluster_id"),
@@ -3416,7 +3389,7 @@ def g28_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # everything — they can never be semantic duplicates; exclude them
     # up front (round-9 adversarial audit; same rule as g03e).
     # Materialized ONCE with the vector count riding the checkpoint
-    # job as an observed metric (round 17, the _g02_bitmask template):
+    # job as an observed metric (round 17, the _mask_groups template):
     # the working set feeds the k sizing, the seed TakeOrdered, the
     # assignment, and the singleton anti-join — un-truncated, each
     # re-ran the scan + normalize, and the k sizing was its own
@@ -3624,19 +3597,19 @@ def incremental_dedup(
     is one row per batch doc: (doc_id, verdict exact|near|unique,
     match_id = MIN matching corpus doc or NULL). Exact layer =
     normalized-text digest equi-join; near layer = exact token-Jaccard
-    >= threshold over the union.  On the bitmap branch (round 15) the
-    near layer aggregates in REP SPACE: the qualifying distinct-mask
-    group pairs come straight from the bitmask core (expand=False) and
-    each batch doc takes the min corpus member over its qualifying
-    partner groups — the doc-pair expansion the old path min-reduced
-    away never materializes.  The open-vocabulary fallback keeps the
-    pair flow, restricted to new x corpus pairs by a BROADCAST
-    membership flag on the batch ids (batch-sized, tiny — never a
-    corpus-sized build side). Verdict precedence exact > near >
-    unique. Only new x corpus edges count: duplicates WITHIN the batch
-    are intentionally not flagged here (that's g01/g02's whole-corpus
-    job); the completeness property pinning this equals full-corpus
-    dedup restricted to B x C pairs is tests/test_properties.py."""
+    >= threshold over the union, from ``_near_rep_pairs``.  On the
+    bitmap route the near layer aggregates in REP SPACE (round 15):
+    each batch doc takes the min corpus member over its distinct-mask
+    group's qualifying partner groups — the doc-pair expansion never
+    materializes.  The open-vocabulary route keeps the pair flow,
+    restricted to new x corpus pairs.  Batch membership is a BROADCAST
+    side on the batch ids (batch-sized, tiny — never a corpus-sized
+    build side).
+    Verdict precedence exact > near > unique.  Only new x corpus edges
+    count: duplicates WITHIN the batch are intentionally not flagged
+    here (that's g01/g02's whole-corpus job); the completeness
+    property pinning this equals full-corpus dedup restricted to B x C
+    pairs is tests/test_properties.py."""
     digest = lambda c: F.md5(F.lower(F.trim(c)))  # noqa: E731
     ex = (
         newdocs.select("doc_id", digest(F.col("text")).alias("dg"))
@@ -3653,28 +3626,38 @@ def incremental_dedup(
         corpus.select("doc_id", "text")
     )
     toks = _tokens(alldocs)
-    new_ids = newdocs.select("doc_id")
-    hit = _bitmap_vocab(toks, probe=_tokens_raw(alldocs))
-    if hit is not None:
+    qual, d2r = _near_rep_pairs(toks, threshold, _tokens_raw(alldocs))
+    ids = newdocs.select("doc_id")
+    edges = qual.select(
+        F.col("r1").alias("rf"), F.col("r2").alias("rt")
+    ).unionByName(qual.select(F.col("r2").alias("rf"), F.col("r1").alias("rt")))
+    if d2r is None:
+        # Open vocabulary: doc pairs, so the answer is the min corpus
+        # partner over the pairs leaving a batch doc.  Kept flat on
+        # the lazy token join: the broadcast batch filter then reaches
+        # both of its prefix sides by constraint inference (g30 with
+        # the route forced, sf0.1, 4 cores: 24 s; the rep-space code
+        # over an identity map, 152 s).
+        new_as = lambda c: F.broadcast(ids.withColumnRenamed("doc_id", c))  # noqa: E731
+        near = (
+            edges.join(new_as("rf"), "rf", "left_semi")
+            .join(new_as("rt"), "rt", "left_anti")
+            .groupBy(F.col("rf").alias("doc_id"))
+            .agg(F.min("rt").alias("near_m"))
+        )
+    else:
         # Rep-space near layer (round 15): the pair list the old path
         # expanded existed only to be min-reduced — a 2k-doc template
         # cluster emitted 2M same-mask pairs for one answer.  Take the
-        # QUALIFYING rep pairs straight from the bitmask core
-        # (expand=False) and aggregate the per-batch-doc MIN matching
-        # corpus id at group level: batch doc -> its group -> every
-        # qualifying partner group (both directions, plus the group
-        # itself — same token set is Jaccard 1, exactly the
+        # QUALIFYING group pairs and aggregate the per-batch-doc MIN
+        # matching corpus id at group level: batch doc -> its group ->
+        # every qualifying partner group (both directions, plus the
+        # group itself — same token set is Jaccard 1, exactly the
         # unconditional same-mask emission of _expand_mask_pairs) ->
         # min corpus member.  Same verdicts, same match_ids, no
         # output-squared intermediate.
-        vocab, vocab_n = hit
-        qual, d2r = _g02_bitmask(
-            toks, vocab_n, threshold, vocab=vocab, expand=False
-        )
         members = d2r.join(
-            F.broadcast(new_ids.withColumn("is_new", F.lit(True))),
-            "doc_id",
-            "left",
+            F.broadcast(ids.withColumn("is_new", F.lit(True))), "doc_id", "left"
         )
         cmin = (
             members.filter(F.col("is_new").isNull())
@@ -3684,57 +3667,13 @@ def incremental_dedup(
         batch_side = members.filter(F.col("is_new").isNotNull()).select(
             "doc_id", F.col("rep").alias("rf")
         )
-        partners = (
-            qual.select(F.col("r1").alias("rf"), F.col("r2").alias("rt"))
-            .unionByName(
-                qual.select(F.col("r2").alias("rf"), F.col("r1").alias("rt"))
-            )
-            .unionByName(
-                d2r.select(F.col("rep").alias("rf"))
-                .distinct()
-                .withColumn("rt", F.col("rf"))
-            )
-        )
+        grp = d2r.select(F.col("rep").alias("rf")).distinct()
+        partners = edges.unionByName(grp.withColumn("rt", F.col("rf")))
         near = (
             batch_side.join(partners, "rf")
             .join(cmin, F.col("rt") == cmin["rep"])
             .groupBy("doc_id")
             .agg(F.min("cmin").alias("near_m"))
-        )
-    else:
-        # Open-vocabulary fallback: the token-join path has no mask
-        # groups to aggregate on — keep the pair-expansion flow.
-        jp = _g02_token_join(toks, threshold).select("d1", "d2")
-        f1 = F.broadcast(
-            new_ids.select(F.col("doc_id").alias("d1")).withColumn(
-                "n1", F.lit(True)
-            )
-        )
-        f2 = F.broadcast(
-            new_ids.select(F.col("doc_id").alias("d2")).withColumn(
-                "n2", F.lit(True)
-            )
-        )
-        jpf = (
-            jp.join(f1, "d1", "left")
-            .join(f2, "d2", "left")
-            .select(
-                "d1",
-                "d2",
-                F.coalesce("n1", F.lit(False)).alias("n1"),
-                F.coalesce("n2", F.lit(False)).alias("n2"),
-            )
-        )
-        near = (
-            jpf.filter(F.col("n1") & ~F.col("n2"))
-            .select(F.col("d1").alias("doc_id"), F.col("d2").alias("cd"))
-            .unionByName(
-                jpf.filter(F.col("n2") & ~F.col("n1")).select(
-                    F.col("d2").alias("doc_id"), F.col("d1").alias("cd")
-                )
-            )
-            .groupBy("doc_id")
-            .agg(F.min("cd").alias("near_m"))
         )
     return (
         newdocs.select("doc_id")
@@ -3968,10 +3907,8 @@ def _probe_rep_space(
     probe_sigs: DataFrame,
     index: DataFrame,
     cand_ids: DataFrame,
-    toks: DataFrame,
-    vocab_n: int,
+    g: _MaskGroups,
     threshold: float,
-    vocab: DataFrame | None = None,
 ) -> DataFrame:
     """Rep-space band probe (round 15): per-batch-doc (d1, near_m =
     MIN matching corpus id) computed WITHOUT ever materializing
@@ -4001,10 +3938,6 @@ def _probe_rep_space(
     explicitly — the checkpointed inputs carry no stats for the
     optimizer to find that itself (AQE would recover it at runtime;
     the hint makes the 100 TB plan shape static)."""
-    masks, wcols = _doc_bitmaps(toks, vocab_n, vocab=vocab)
-    d2r = masks.withColumn(
-        "rep", F.min("doc_id").over(Window.partitionBy(*wcols))
-    ).localCheckpoint(eager=True)
     # Corpus candidates per distinct-mask group; the MIN member is
     # both the match_id answer and the signature carrier.  (The rep
     # itself may be a BATCH doc — same mask, same sigs, but absent
@@ -4018,7 +3951,7 @@ def _probe_rep_space(
     # critical path, while the duplicate lineage runs are tiny
     # broadcast builds AQE executes off it.  Leave grp lazy.
     grp = (
-        d2r.join(F.broadcast(cand_ids), "doc_id", "left_semi")
+        g.d2r.join(F.broadcast(cand_ids), "doc_id", "left_semi")
         .groupBy("rep")
         .agg(F.min("doc_id").alias("min_d2"))
     )
@@ -4035,34 +3968,12 @@ def _probe_rep_space(
     # m1 reads the CHECKPOINTED frame (round 17) — the raw masks
     # lineage it read before re-ran the tokenize+aggregate pipeline
     # for the verify side.
-    m1 = d2r.select(
-        F.col("doc_id").alias("d1"),
-        *[F.col(c).alias(f"a_{c}") for c in wcols],
-    )
-    rmask = d2r.filter(F.col("doc_id") == F.col("rep")).select(
-        F.col("rep").alias("r2"),
-        *[F.col(c).alias(f"b_{c}") for c in wcols],
-    )
-    shared = sum(
-        (
-            F.bit_count(F.col(f"a_{c}").bitwiseAND(F.col(f"b_{c}")))
-            for c in wcols
-        ),
-        F.lit(0),
-    )
-    union = sum(
-        (
-            F.bit_count(F.col(f"a_{c}").bitwiseOR(F.col(f"b_{c}")))
-            for c in wcols
-        ),
-        F.lit(0),
-    )
-    jac = shared * F.lit(1.0) / union
+    m1 = g.d2r.select(F.col("doc_id").alias("d1"), *g.cols("a"))
     qual = (
         F.broadcast(rep_cands)
         .join(m1, "d1")
-        .join(F.broadcast(rmask), "r2")
-        .filter(jac >= threshold)
+        .join(F.broadcast(g.rm("b")), "r2")
+        .filter(g.jac >= threshold)
         .select("d1", "r2")
     )
     return (
@@ -4187,8 +4098,8 @@ def incremental_band_probe(
         # min-aggregated straight to the per-batch-doc answer — no
         # doc-pair frame anywhere.
         near = _probe_rep_space(
-            probe_sigs, index, cand_ids, toks, vocab_n, threshold,
-            vocab=vocab,
+            probe_sigs, index, cand_ids,
+            _mask_groups(toks, vocab_n, vocab=vocab), threshold,
         )
     else:
         # Open-vocabulary fallback: token-join verify needs real doc

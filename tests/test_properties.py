@@ -93,10 +93,15 @@ def test_jaccard_symmetry_and_bounds(tokens):
     ),
     st.sampled_from([0.5, 0.7, 0.8, 0.9]),
 )
+# 0.55 * 100 == 55.00000000000001: without the 1e-9 guard the 100-token
+# side's prefix is one token short and this J = 0.55 pair is missed
+@example([frozenset(range(100)), frozenset(range(55))], 0.55)
 def test_prefix_filter_lemma(sets, t):
-    """The AllPairs prefix-filtering principle behind _g02_token_join:
-    with tokens in a global total order, any pair with Jaccard >= t
-    shares a token within each side's first n - ceil(t*n) + 1 tokens.
+    """The AllPairs prefix-filtering principle behind _g02_token_join
+    and the bitmap prefix branch: with tokens in a global total order,
+    any pair with Jaccard >= t shares a token within each side's first
+    n - ceil(t*n - 1e-9) + 1 tokens (``llmops._prefix_len``; the guard
+    stops a float overshoot of an exact t*n from rounding UP).
     A counterexample here would mean the Spark candidate join can MISS
     qualifying pairs (a correctness bug, not a perf bug)."""
     import math as m
@@ -110,7 +115,7 @@ def test_prefix_filter_lemma(sets, t):
 
     def prefix(s):
         n = len(s)
-        p = n - m.ceil(t * n) + 1
+        p = n - m.ceil(t * n - 1e-9) + 1
         return set(sorted(s, key=lambda x: order[x])[:p])
 
     for i in range(len(sets)):

@@ -170,6 +170,50 @@ def test_open_vocab_verify_token_join(spark):
     assert got == {(0, 9999, round(39 / 41, 6))}
 
 
+def test_token_join_prefix_survives_float_overshoot(spark):
+    """0.55 * 100 evaluates to 55.00000000000001, so an unguarded
+    ``n - ceil(t*n) + 1`` prefix is one token short for the 100-token
+    doc: its prefix holds only the 45 tokens the other doc lacks, the
+    pigeonhole guarantee breaks and the J = 0.55 pair is never a
+    candidate.  The guarded prefix length keeps it."""
+    rows = [
+        (0, " ".join(f"t{j}" for j in range(100))),
+        (1, " ".join(f"t{j}" for j in range(55))),
+    ]
+    toks = _tokens(spark.createDataFrame(rows, "doc_id long, text string"))
+    got = [tuple(r) for r in _g02_token_join(toks, 0.55).collect()]
+    assert got == [(0, 1, 0.55)]
+
+
+@pytest.mark.parametrize(
+    "name", ["g26_dedup_clusters", "g30_dedup_incremental"]
+)
+def test_open_vocab_branch_matches_bitmap_branch(
+    spark, sf_dir, monkeypatch, name
+):
+    """g26 and g30 on the open-vocabulary route (forced by a zero
+    bitmap cutoff, so candidates come from the token join) must emit
+    exactly the rows of the default bitmap route."""
+    import data_lake_staging_engine_spark.operators.llmops as llmops
+
+    fn = getattr(llmops, name)
+    base = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+    calls = []
+    token_join = llmops._g02_token_join
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return token_join(*a, **kw)
+
+    monkeypatch.setattr(llmops, "_BITMAP_MAX_VOCAB", 0)
+    monkeypatch.setattr(llmops, "_g02_token_join", spy)
+    forced = sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+    monkeypatch.undo()
+    assert calls, "the token-join route was not taken"
+    assert len(base) > 0
+    assert forced == base
+
+
 def test_lsh_outputs_subset_of_exact(spark, sf_dir):
     """MinHash-LSH near-dup (g02b token, g02e shingle) verifies
     candidates with EXACT Jaccard, so precision is 1 by construction:
