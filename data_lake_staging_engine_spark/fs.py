@@ -1,6 +1,7 @@
 """Filesystem abstraction for the maintenance ops (VERDICT r12 #9).
 
-``compact_staged`` and ``VersionedTable`` need a handful of metadata
+``compact_staged`` (commit-marker listing, leaf sweep) and
+``VersionedTable`` (manifest flip, vacuum) need a handful of metadata
 primitives (list, rename, recursive delete, small-file read/write)
 that the DataFrame API does not expose.  Until round 13 they were
 local-POSIX only and REFUSED URI paths; this module lifts that through

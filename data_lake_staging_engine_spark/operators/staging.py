@@ -1103,19 +1103,20 @@ def a30_landing_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def a31_versioned_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The rename-free object-store compaction loop end-to-end
-    (VERDICT r13 #6, pipeline.compact_staged(versioned=True)):
+    """The staged table's compaction loop end-to-end
+    (pipeline.compact_staged):
 
     drain part of the landing -> fold the committed leaves into a
     VersionedTable snapshot (write v1, flip manifest, DELETE covered
-    leaves — no data rename anywhere, the protocol s3a needs) -> a
-    LATE file lands and drains on top of the snapshot -> the staged
-    read resolves snapshot UNION fresh live leaves through the
+    leaves — no directory rename, so object stores pay no copy)
+    -> a LATE file lands and drains on top of the snapshot -> the
+    staged read resolves snapshot UNION fresh live leaves through the
     manifest.  The oracle is the full events identity, so the
     hash-match proves no row is lost or doubled across the
     compact-then-append boundary — the exact invariant the
     crash-window tests (tests/test_versioned_compaction.py) pin under
-    kills.  a10/a13 stay the rename-mode twins."""
+    kills.  a13 is the same pipeline without compaction; a10 is the
+    plain repartition rewrite of a static table."""
     from data_lake_staging_engine_spark.pipeline import StagingPipeline
     from data_lake_staging_engine_spark.streaming.runner import landing_copy
 
@@ -1143,7 +1144,7 @@ def a31_versioned_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         reader_options={"maxFilesPerTrigger": 1},
     )
     pipe.run_available_now(timeout_s=120)
-    pipe.compact_staged(versioned=True)
+    pipe.compact_staged()
     for name in late:
         shutil.copyfile(
             os.path.join(src, name), os.path.join(landing, name)

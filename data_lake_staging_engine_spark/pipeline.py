@@ -24,8 +24,8 @@ from __future__ import annotations
 
 import json
 import os
-import warnings
 from collections.abc import Callable
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -108,7 +108,7 @@ class StagingPipeline:
         # Maintenance-op filesystem backends (round 13, VERDICT r12
         # #9): bare paths -> POSIX primitives (unchanged behavior);
         # URI paths (hdfs://, s3a://, file://) -> the Hadoop
-        # FileSystem gateway, so compact/restore/commit-listing run
+        # FileSystem gateway, so compact/commit-listing run
         # where the data actually lives.  Resolved LAZILY: only the
         # maintenance ops need them, and an eager FileSystem.get would
         # make pipeline CONSTRUCTION fail on schemes whose connector
@@ -272,42 +272,28 @@ class StagingPipeline:
             if persisted is not None:
                 persisted.unpersist()
 
-    def _restore_precompact(self) -> None:
-        """Heal the compact_staged crash window (kill between its two
-        renames leaves the WHOLE table under <staged>.precompact and no
-        staged_dir) before anything can recreate staged_dir: called at
-        every pipeline entry that reads or writes the staged table, so
-        a restarted ingest cannot silently start a fresh truncated
-        table while the real one sits in the sibling dir.
+    def _refuse_legacy_swap_leftover(self) -> None:
+        """Refuse to read or write the staged table while a crash
+        leftover of the old rename-swap compaction sits next to it.
 
-        A ``.precompact`` ALONGSIDE a live staged_dir is the post-swap
-        crash shape (staged already holds the compacted table) — it is
-        discarded HERE, at every entry point, not just at the next
-        ``compact_staged`` (ADVICE r11): left around, a later operator
-        deleting staged_dir to restart ingest from scratch would have
-        this restore resurrect the obsolete pre-compaction snapshot as
-        the live table.
-
-        Runs on every backend (round 13): bare paths through POSIX,
-        URI dirs through the Hadoop FileSystem gateway.
+        Older releases compacted by renaming staged_dir aside and a
+        rewritten copy in; a kill between the two renames parked the
+        table (or, after the swap, an obsolete copy of it) in a sibling
+        dir.  Which one it is only an operator can tell, so it is never
+        healed here: the error names the dir and the manual fix.
         """
-        fs = self._staged_fs
         old = self.staged_dir + ".precompact"
-        if not fs.isdir(old):
-            return
-        if fs.isdir(self.staged_dir):
-            warnings.warn(
-                f"discarding stale {old!r} left by a post-swap "
-                "compaction crash (staged_dir already holds the "
-                "compacted table)",
-                stacklevel=2,
+        if self._staged_fs.isdir(old):
+            raise RuntimeError(
+                f"{old!r} is a crash leftover of the rename-swap "
+                "compaction older releases ran.  If "
+                f"{self.staged_dir!r} is missing, rename {old!r} back to "
+                "it; if both exist, staged_dir already holds the "
+                f"compacted table, so delete {old!r}.  Then rerun."
             )
-            fs.rmtree(old)
-        else:
-            fs.rename(old, self.staged_dir)
 
     def _writer(self):
-        self._restore_precompact()
+        self._refuse_legacy_swap_leftover()
         return (
             self._reader()
             .writeStream.foreachBatch(self._stage_batch)
@@ -351,7 +337,7 @@ class StagingPipeline:
         self.catalog.sync_table(staged, self.table, list(self.partition_cols))
         return self.catalog.read_table(self.spark, self.table)
 
-    # -- versioned staged layout (round 14, VERDICT r13 #6) ---------------
+    # -- compacted layout: manifest snapshot + live leaves ----------------
     @property
     def _versions_root(self) -> str:
         return self.staged_dir + ".versions"
@@ -367,55 +353,65 @@ class StagingPipeline:
         return VersionedTable(self._versions_root, self.spark)
 
     def _staged_view(self) -> DataFrame:
-        """The staged table as readers must see it.
+        """The staged table as readers must see it — the one read path.
 
-        Plain layout (default): the staged_dir leaves, healed of any
-        compact crash window first.  Versioned layout (after a
-        ``compact_staged(versioned=True)``): the latest manifest
-        snapshot UNION the live leaves with ``_ingest_batch`` above
-        the snapshot's ``compacted_through`` — so folded leaves whose
-        delete has not happened yet (crash between flip and sweep) are
-        excluded by predicate, never double-counted."""
-        self._restore_precompact()
+        The latest compacted snapshot (if a manifest exists) UNION the
+        live staged_dir leaves (if staged_dir exists).  Under a
+        snapshot only live leaves with ``_ingest_batch`` above its
+        ``compacted_through`` count, so folded leaves whose delete has
+        not happened yet (crash between flip and sweep) are excluded by
+        a partition filter, never double-counted.  Neither (nothing
+        drained or compacted yet): an empty frame of the staged
+        schema."""
+        self._refuse_legacy_swap_leftover()
         schema = self.staged_schema()
-        if not self._versions_manifest_exists():
-            return self.spark.read.schema(schema).parquet(self.staged_dir)
-        entry = self._versioned_table().entry()
-        snap = self.spark.read.schema(schema).parquet(entry["path"])
-        if not self._staged_fs.exists(self.staged_dir):
-            return snap
-        live = self.spark.read.schema(schema).parquet(self.staged_dir)
-        return snap.unionByName(
-            live.filter(
-                F.col("_ingest_batch") > int(entry.get("compacted_through", -1))
-            )
-        )
+        read = self.spark.read.schema(schema).parquet
+        frames: list[DataFrame] = []
+        through = None
+        if self._versions_manifest_exists():
+            entry = self._versioned_table().entry()
+            frames.append(read(entry["path"]))
+            through = int(entry.get("compacted_through", -1))
+        if self._staged_fs.isdir(self.staged_dir):
+            live = read(self.staged_dir)
+            if through is not None:
+                live = live.filter(F.col("_ingest_batch") > through)
+            frames.append(live)
+        if not frames:
+            return self.spark.createDataFrame([], schema)
+        return reduce(DataFrame.unionByName, frames)
 
     def _sweep_folded_leaves(self, committed: int) -> None:
-        """Delete live ``_ingest_batch=<id>`` leaves the snapshot now
-        covers: id in [0, committed] plus the ``-1`` compaction-epoch
-        leaves an earlier RENAME-MODE compaction left behind (ADVICE
-        r14: the versioned fold includes them in the snapshot, and the
-        view excludes them forever after by the ``> compacted_through``
-        predicate, so not deleting them was permanent dead storage).
-        Pure deletes — no renames, so object stores pay one DELETE per
-        leaf, never a copy.  Runs AFTER the manifest flip: a crash
-        mid-sweep leaves stale dirs the view already excludes by
-        predicate; the next compaction re-sweeps them."""
+        """Delete the live leaves the snapshot now covers —
+        ``_ingest_batch=<id>`` dirs with id in [0, committed], plus the
+        ``-1`` epoch leaves older releases' rename-swap compaction left
+        in place — and every partition dir those deletes leave empty,
+        so later syncs do not list dead dirs.  Pure deletes — no
+        renames, so object stores pay one DELETE per dir, never a copy.
+        Runs AFTER the manifest flip: a crash mid-sweep leaves stale
+        dirs the view already excludes by predicate; the next
+        compaction re-sweeps them."""
         fs = self._staged_fs
 
-        def sweep(d: str) -> None:
+        def sweep(d: str) -> bool:
+            """Sweep the partition tree under ``d``; True if it is left
+            empty."""
+            kept = 0
             for name in fs.listdir(d):
                 path = os.path.join(d, name)
                 if name.startswith("_ingest_batch="):
                     try:
-                        bid = int(name.split("=", 1)[1])
+                        covered = -1 <= int(name.split("=", 1)[1]) <= committed
                     except ValueError:
-                        continue
-                    if bid == -1 or 0 <= bid <= committed:
+                        covered = False
+                    if covered:
                         fs.rmtree(path)
-                elif fs.isdir(path):
-                    sweep(path)
+                        continue
+                elif "=" in name and fs.isdir(path) and sweep(path):
+                    fs.rmtree(path)
+                    continue
+                kept += 1
+            return kept == 0
 
         if fs.isdir(self.staged_dir):
             sweep(self.staged_dir)
@@ -462,9 +458,7 @@ class StagingPipeline:
                     continue  # .crc / temp files
         return max(ids)
 
-    def compact_staged(
-        self, versioned: bool = False, keep_versions: int | None = None
-    ) -> DataFrame:
+    def compact_staged(self, keep_versions: int = 1) -> DataFrame:
         """Fold the per-(date, micro-batch) leaves the exactly-once
         staged write accumulates into one leaf per date partition —
         the a10-style companion that keeps the idempotent layout's
@@ -477,118 +471,56 @@ class StagingPipeline:
         commit did not (kill in that window) will REPLAY on restart,
         and its replay's dynamic overwrite can only replace its own
         positive id — folding it into the epoch first would duplicate
-        every one of its rows.  Uncommitted leaves pass through the
-        rewrite unchanged under their original ids (round-11 review
-        finding).
+        every one of its rows.  Uncommitted leaves stay live under
+        their original ids (round-11 review finding).
 
-        The rewrite goes to a sibling directory and is swapped in by
-        rename, so a reader never sees a half-compacted table; the
-        pipeline must be STOPPED (between drains) — an active ingest
-        stream on this checkpoint is REFUSED (ADVICE r11: a micro-batch
-        written between compact's read and the rename swap would be
-        silently discarded by the swap, and the rename would pull
-        staged_dir out from under the in-flight writer).  That refusal
-        is SAME-SESSION scope only (ADVICE r12): it scans
+        Order of operations IS the crash contract (Structured
+        Streaming's commit-log discipline, applied to the table):
+        1. write the folded view (previous snapshot plus the committed
+           live leaves) to a fresh ``<staged>.versions/v<N>-<token>``;
+        2. flip the VersionedTable manifest over it, recording
+           ``compacted_through`` (publish does 1+2);
+        3. delete the folded live leaves and the partition dirs they
+           leave empty (view-invisible by then);
+        4. vacuum down to the newest ``keep_versions`` snapshots — the
+           default keeps one compacted copy on disk; keep more while
+           readers may still scan a superseded one.
+        A kill before the flip leaves an orphan version dir and the old
+        manifest intact; a kill after it leaves stale leaves that
+        ``_staged_view`` excludes by the ``compacted_through``
+        predicate — no reader ever sees a half state or double rows.
+        No directory is renamed, so object stores (s3a://) pay no
+        whole-table copy: bare paths use POSIX primitives, URI paths
+        run the listing, flip and sweep through the Hadoop FileSystem
+        gateway.
+
+        The pipeline must be STOPPED (between drains): an active
+        ingest stream on this checkpoint is REFUSED (ADVICE r11), since
+        the sweep's empty-dir removal could delete a partition dir the
+        in-flight micro-batch is writing into.  That refusal is
+        SAME-SESSION scope only (ADVICE r12): it scans
         ``spark.streams.active``, so an ingest stream draining this
         checkpoint from another SparkSession or process is invisible to
         it — cross-process safety relies on the orchestrator's
         one-writer rule (DEPLOYMENT.md), same as every file-based
-        maintenance op here.  A kill
-        between the two renames parks the table at
-        ``<staged>.precompact``; every pipeline entry point
-        (``_writer``/``sync``/here) restores it before anything can
-        recreate a fresh truncated staged_dir.  A ``.precompact``
-        leftover ALONGSIDE staged_dir is the post-swap crash shape
-        (staged already holds the compacted table) and is discarded at
-        every entry point.
-
-        Storage backends (round 13, VERDICT r12 #9): bare paths use
-        the POSIX primitives (unchanged behavior); URI paths (hdfs://,
-        s3a://, file://) run through the Hadoop FileSystem gateway —
-        the commit-marker listing and the dir-swap renames use the
-        scheme's own FileSystem.  The swap's crash discipline holds
-        wherever rename-to-fresh-destination is atomic (HDFS, local);
-        on S3A rename is copy+delete — correct but slower and with a
-        wider crash window.  ``versioned=True`` (round 14, VERDICT r13
-        #6) is the mode built for those stores: the folded snapshot is
-        WRITTEN to a fresh ``<staged>.versions/v<N>`` dir and the
-        VersionedTable manifest is FLIPPED over it — no data rename
-        anywhere; live leaves the snapshot covers are then deleted
-        (pure deletes).  Crash discipline: a kill before the flip
-        leaves an orphan version dir and the old manifest intact (the
-        next publish overwrites the orphan); a kill after the flip but
-        before the sweep leaves stale leaves that ``_staged_view``
-        already excludes by the ``compacted_through`` predicate — no
-        window in which a reader sees a half state or double rows.
-        Version dirs accumulate per compaction; pass ``keep_versions``
-        to vacuum down to the newest N (same retention contract as
-        VersionedTable.vacuum).  The two layouts must not mix: once a
-        manifest exists, rename-mode compaction is refused.
+        maintenance op here.
         """
         active = self._active_query_on_checkpoint()
         if active is not None:
             raise RuntimeError(
                 f"refusing to compact {self.staged_dir!r} while the "
                 f"ingest stream on checkpoint {self.checkpoint_dir!r} "
-                f"is ACTIVE (query id {active.id}): a micro-batch "
-                "landing between the compaction read and the rename "
-                "swap would be silently lost.  Stop the stream first."
+                f"is ACTIVE (query id {active.id}): the leaf sweep could "
+                "delete a partition dir the in-flight micro-batch is "
+                "writing into.  Stop the stream first."
             )
-        self._restore_precompact()
-        if versioned:
-            return self._compact_versioned(keep_versions)
-        if self._versions_manifest_exists():
-            raise RuntimeError(
-                f"{self.staged_dir!r} is manifest-versioned (a "
-                "compact_staged(versioned=True) ran here): rename-mode "
-                "compaction would fold only the live leaves and "
-                "double-count the snapshot.  Keep using versioned=True."
-            )
-        staged = self.spark.read.schema(self.staged_schema()).parquet(
-            self.staged_dir
-        )
+        # committed >= -1, so the filter keeps the epoch rows too
         committed = self._last_committed_batch()
-        foldable = (F.col("_ingest_batch") == -1) | (
-            F.col("_ingest_batch") <= committed
+        folded = (
+            self._staged_view()
+            .filter(F.col("_ingest_batch") <= committed)
+            .withColumn("_ingest_batch", F.lit(-1).cast("long"))
         )
-        rewritten = staged.withColumn(
-            "_ingest_batch",
-            F.when(foldable, F.lit(-1).cast("long")).otherwise(
-                F.col("_ingest_batch")
-            ),
-        )
-        fs = self._staged_fs
-        tmp = self.staged_dir + ".compacting"
-        old = self.staged_dir + ".precompact"
-        fs.rmtree(tmp)
-        (
-            rewritten.repartition(*self.partition_cols)
-            .write.mode("overwrite")
-            .partitionBy(*self.partition_cols, "_ingest_batch")
-            .parquet(tmp)
-        )
-        fs.rmtree(old)
-        fs.rename(self.staged_dir, old)
-        fs.rename(tmp, self.staged_dir)
-        fs.rmtree(old)
-        return self.sync()
-
-    def _compact_versioned(self, keep_versions: int | None) -> DataFrame:
-        """The rename-free compaction path (see compact_staged).
-
-        Order of operations IS the crash contract:
-        1. write the folded snapshot to a fresh version dir;
-        2. flip the manifest (publish does 1+2 with its own
-           orphan-on-crash discipline);
-        3. delete the folded live leaves (view-invisible by then);
-        4. optional vacuum of superseded versions.
-        """
-        committed = self._last_committed_batch()
-        view = self._staged_view()
-        folded = view.filter(
-            (F.col("_ingest_batch") == -1)
-            | (F.col("_ingest_batch") <= committed)
-        ).withColumn("_ingest_batch", F.lit(-1).cast("long"))
         vt = self._versioned_table()
         vt.publish(
             folded.repartition(*self.partition_cols),
@@ -596,8 +528,7 @@ class StagingPipeline:
             extra={"compacted_through": committed},
         )
         self._sweep_folded_leaves(committed)
-        if keep_versions is not None:
-            vt.vacuum(keep_versions)
+        vt.vacuum(keep_versions)
         return self.sync()
 
 

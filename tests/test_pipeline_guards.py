@@ -1,21 +1,18 @@
 """Round-12 pipeline misuse guards (ADVICE r11).
 
-compact_staged and its crash recovery are LOCAL-filesystem maintenance
-helpers around local-POSIX rename/listdir; the round-11 advisory found
-three ways to misuse them silently (URI paths no-op-folding, compacting
-under an active ingest stream, a stale ``.precompact`` resurrecting an
-obsolete table after a deliberate reset) plus two contract-surface
-silent no-ops (a domain bound without its column list; the round-11
-reject-sink layout break going unnoticed on an old-layout directory).
-Every one of those must now fail LOUDLY — these tests pin each refusal
-and the matching happy path.
+The round-11 advisory found ways to misuse the staging pipeline
+silently: compacting under an active ingest stream, a domain bound
+without its column list, and the round-11 reject-sink layout break
+going unnoticed on an old-layout directory.  Every one of those must
+fail LOUDLY — these tests pin each refusal and the matching happy
+path, plus the staged-table read on a pipeline that has staged nothing
+yet and the refusal to run over a crash leftover of the rename-swap
+compaction older releases ran.
 """
 
 import os
 import shutil
-import tempfile
 import time
-import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -41,74 +38,53 @@ def _events_pipe(spark, sf_dir, tmp, **kw):
     return pipe, landing, schema
 
 
-def test_compact_runs_on_uri_paths(spark, sf_dir, tmp_path):
-    """Round 13 (VERDICT r12 #9): compact_staged used to REFUSE URI
-    staged/checkpoint dirs; the maintenance ops now run through the
-    Hadoop FileSystem gateway.  file:// exercises the exact HadoopFS
-    code path hdfs:///s3a:// take on a cluster (same FileSystem API,
-    the scheme's own implementation underneath): ingest drains to a
-    file:// staged dir with a file:// checkpoint, compaction folds the
-    committed leaves under the -1 epoch, rows preserved exactly."""
-    landing, schema = landing_copy(spark, sf_dir, "events", n_files=3)
+def test_nothing_staged_yet_reads_empty(spark, sf_dir, tmp_path):
+    """Before the first drain there is neither a staged dir nor a
+    snapshot: sync and compact_staged see an empty table of the staged
+    schema (they used to fail with PATH_NOT_FOUND), and a later drain
+    lands on top of the empty snapshot."""
+    src, schema = landing_copy(spark, sf_dir, "events", n_files=1)
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
     pipe = StagingPipeline(
         spark,
         landing_dir=landing,
-        staged_dir=f"file://{tmp_path}/staged",
-        checkpoint_dir=f"file://{tmp_path}/ckpt",
-        table="t_uri_compact",
+        staged_dir=str(tmp_path / "staged"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        table="t_nothing_staged",
         schema=schema,
-        reader_options={"maxFilesPerTrigger": 1},
     )
-    before = pipe.run_available_now(timeout_s=180)
-    n_before = before.count()
-    assert n_before > 0
+    assert pipe.sync().count() == 0
     compacted = pipe.compact_staged()
-    assert compacted.count() == n_before
-    epochs = {
-        r["_ingest_batch"]
-        for r in spark.read.schema(pipe.staged_schema())
-        .parquet(pipe.staged_dir)
-        .select("_ingest_batch")
-        .distinct()
-        .collect()
-    }
-    assert epochs == {-1}
-    # the recovery hook walks the same gateway without tripping
-    pipe._restore_precompact()
+    assert compacted.count() == 0
+    assert set(compacted.columns) == set(pipe.staged_schema().fieldNames())
+
+    for name in [n for n in os.listdir(src) if n.endswith(".parquet")]:
+        shutil.copyfile(os.path.join(src, name), os.path.join(landing, name))
+    n = spark.read.schema(schema).parquet(src).count()
+    assert pipe.run_available_now(timeout_s=180).count() == n
 
 
-def test_restore_precompact_heals_uri_staged(spark, sf_dir, tmp_path):
-    """The crash window (kill between compact's two renames: table
-    parked at <staged>.precompact, no staged dir) heals through the
-    Hadoop gateway exactly as it does locally."""
-    import os
-
-    landing, schema = landing_copy(spark, sf_dir, "events", n_files=1)
-    pipe = StagingPipeline(
-        spark,
-        landing_dir=landing,
-        staged_dir=f"file://{tmp_path}/staged2",
-        checkpoint_dir=f"file://{tmp_path}/ckpt2",
-        table="t_uri_heal",
-        schema=schema,
-    )
-    n = pipe.run_available_now(timeout_s=180).count()
-    # simulate the mid-swap kill on the underlying local dirs
-    os.rename(f"{tmp_path}/staged2", f"{tmp_path}/staged2.precompact")
-    pipe._restore_precompact()
-    assert (
-        spark.read.schema(pipe.staged_schema())
-        .parquet(pipe.staged_dir)
-        .count()
-        == n
-    )
+def test_legacy_precompact_leftover_is_refused_not_healed(spark, sf_dir, tmp_path):
+    """A table parked beside staged_dir by a crashed rename-swap
+    compaction (older releases) stops every pipeline entry with an
+    error naming the dir; nothing moves or deletes it."""
+    pipe, landing, schema = _events_pipe(spark, sf_dir, str(tmp_path))
+    parked = pipe.staged_dir + ".precompact"
+    os.makedirs(os.path.join(parked, "year=2024"))
+    for entry in (pipe.sync, pipe.compact_staged, pipe.run_available_now):
+        with pytest.raises(RuntimeError, match=r"staged\.precompact"):
+            entry()
+    assert os.path.isdir(os.path.join(parked, "year=2024"))
+    assert not os.path.exists(pipe.staged_dir)
 
 
 def test_compact_refuses_active_ingest_stream(spark, sf_dir, tmp_path):
-    """Compacting while the ingest stream drains this checkpoint would
-    silently discard any micro-batch landing between the compaction
-    read and the rename swap; the pipeline now matches the checkpoint
-    metadata query id against spark.streams.active and refuses."""
+    """Compacting while the ingest stream drains this checkpoint could
+    delete a partition dir the in-flight micro-batch is writing into
+    (the sweep removes the dirs it empties); the pipeline matches the
+    checkpoint metadata query id against spark.streams.active and
+    refuses."""
     pipe, landing, schema = _events_pipe(
         spark, sf_dir, str(tmp_path), reader_options={"maxFilesPerTrigger": 1}
     )
@@ -129,41 +105,10 @@ def test_compact_refuses_active_ingest_stream(spark, sf_dir, tmp_path):
     compacted = pipe.compact_staged()
     epochs = [
         r["_ingest_batch"]
-        for r in spark.read.schema(pipe.staged_schema())
-        .parquet(pipe.staged_dir)
-        .select("_ingest_batch")
-        .distinct()
-        .collect()
+        for r in pipe._staged_view().select("_ingest_batch").distinct().collect()
     ]
     assert -1 in epochs
     assert compacted.count() > 0
-
-
-def test_stale_precompact_alongside_staged_is_discarded(spark, sf_dir, tmp_path):
-    """Post-swap crash leftover: a .precompact ALONGSIDE a live staged
-    dir is discarded (with a warning) at the next entry point, so a
-    later deliberate table reset cannot resurrect the obsolete
-    snapshot as the live table."""
-    pipe, landing, schema = _events_pipe(spark, sf_dir, str(tmp_path))
-    pipe.run_available_now(timeout_s=180)
-    live_rows = spark.read.schema(pipe.staged_schema()).parquet(pipe.staged_dir).count()
-    assert live_rows > 0
-
-    # Fabricate the post-swap crash shape: an OBSOLETE copy parked at
-    # .precompact while staged_dir holds the real table.
-    stale = pipe.staged_dir + ".precompact"
-    shutil.copytree(pipe.staged_dir, stale)
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        pipe.sync()
-    assert not os.path.exists(stale), "stale .precompact not discarded"
-    assert any("post-swap" in str(w.message) for w in caught)
-
-    # The resurrection scenario from the advisory: delete staged_dir to
-    # reset the table — nothing must bring the old snapshot back.
-    shutil.rmtree(pipe.staged_dir)
-    pipe._restore_precompact()
-    assert not os.path.exists(pipe.staged_dir)
 
 
 def test_bound_without_columns_raises(spark):

@@ -440,7 +440,7 @@ def test_compaction_folds_batch_leaves_and_ingest_resumes(spark, sf_dir):
         reader_options={"maxFilesPerTrigger": 1},
     )
     pipe.run_available_now(timeout_s=180)
-    before = spark.read.schema(pipe.staged_schema()).parquet(staged)
+    before = pipe._staged_view()
     n_before = before.count()
     ids_before = set(
         r._ingest_batch
@@ -454,13 +454,20 @@ def test_compaction_folds_batch_leaves_and_ingest_resumes(spark, sf_dir):
         r._ingest_batch
         for r in compacted.select("_ingest_batch").distinct().collect()
     ) == {-1}
-    # really fewer leaves on disk
-    leaves = [
-        root
-        for root, dirs, fs in os.walk(staged)
-        if "_ingest_batch=" in root and any(f.endswith(".parquet") for f in fs)
-    ]
-    assert all(root.endswith("_ingest_batch=-1") for root in leaves)
+    # really fewer leaves on disk: the snapshot holds only epoch
+    # leaves, and the folded live leaves are gone
+    def leaves(root_dir):
+        return [
+            root
+            for root, dirs, fs in os.walk(root_dir)
+            if "_ingest_batch=" in root
+            and any(f.endswith(".parquet") for f in fs)
+        ]
+
+    snapshot = leaves(pipe._versions_root)
+    assert snapshot
+    assert all(root.endswith("_ingest_batch=-1") for root in snapshot)
+    assert leaves(staged) == []
 
     # incremental ingest resumes against the compacted table
     shutil.copy(os.path.join(src, files[3]), os.path.join(landing, files[3]))
@@ -499,7 +506,7 @@ def test_compaction_excludes_uncommitted_batches(spark, sf_dir):
         reader_options={"maxFilesPerTrigger": 1},
     )
     pipe.run_available_now(timeout_s=180)
-    n_total = spark.read.schema(pipe.staged_schema()).parquet(staged).count()
+    n_total = pipe._staged_view().count()
 
     # the kill window: batch 2's staged write survives, its commit is gone
     os.remove(os.path.join(ckpt, "commits", "2"))
@@ -515,22 +522,18 @@ def test_compaction_excludes_uncommitted_batches(spark, sf_dir):
     # guarantees that) replaces its own leaves, duplicating nothing
     raw_cols = [f.name for f in schema.fields]
     replay = (
-        spark.read.schema(pipe.staged_schema())
-        .parquet(staged)
+        pipe._staged_view()
         .filter(F.col("_ingest_batch") == 2)
         .select(*raw_cols)
     )
     pipe._stage_batch(replay, 2)
-    after = spark.read.schema(pipe.staged_schema()).parquet(staged)
+    after = pipe._staged_view()
     assert after.count() == n_total
 
 
-def test_compaction_is_idempotent_and_crash_recoverable(spark, sf_dir):
+def test_compaction_is_idempotent(spark, sf_dir):
     """compact_staged twice yields the same table (the epoch folds onto
-    itself), and a kill between its two renames — staged gone,
-    .precompact holding the data — is restored by the next call."""
-    import shutil
-
+    itself)."""
     from data_lake_staging_engine_spark.pipeline import StagingPipeline
 
     landing, schema = landing_copy(spark, sf_dir, "events", n_files=2)
@@ -553,14 +556,6 @@ def test_compaction_is_idempotent_and_crash_recoverable(spark, sf_dir):
         r._ingest_batch
         for r in twice.select("_ingest_batch").distinct().collect()
     ) == {-1}
-
-    # Simulate the crash window: staged renamed away, swap-in never
-    # happened. The next compact_staged restores and completes.
-    os.rename(staged, staged + ".precompact")
-    assert not os.path.isdir(staged)
-    recovered = pipe.compact_staged()
-    assert recovered.count() == n
-    shutil.rmtree(staged + ".precompact", ignore_errors=True)
 
 
 _KILL_DRIVER = r"""

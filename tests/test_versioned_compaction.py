@@ -1,12 +1,10 @@
-"""compact_staged(versioned=True) — the rename-free compaction for
-object stores (VERDICT r13 #6).
+"""compact_staged — the staged table's one compaction protocol.
 
-The rename-swap compaction is correct where rename is atomic (HDFS,
-local) but on s3a:// rename is copy+delete — slow and with a wide
-crash window.  The versioned mode writes the folded snapshot to a
-fresh ``<staged>.versions/v<N>`` dir, flips the VersionedTable
-manifest over it, then DELETES the covered live leaves: no data
-rename anywhere.  Pinned here:
+The folded snapshot is written to a fresh ``<staged>.versions/v<N>``
+dir, the VersionedTable manifest is flipped over it, then the covered
+live leaves are DELETED: no directory rename anywhere, so object
+stores (s3a://, where rename is copy+delete) pay no whole-table copy
+and no wide crash window.  Pinned here:
 
 - rows preserved across compact → new batches → compact again (the
   manifest snapshot unions with live leaves above compacted_through);
@@ -14,8 +12,10 @@ rename anywhere.  Pinned here:
   only), retry succeeds;
 - kill AFTER the flip, before the leaf sweep: readers never double-
   count (stale leaves are excluded by predicate), next compact heals;
-- layout mixing is refused (rename-mode compact on a versioned table);
-- keep_versions vacuums superseded snapshots;
+- the sweep leaves no empty partition dir behind;
+- keep_versions vacuums superseded snapshots (default: one copy);
+- epoch leaves an older rename-swap compaction left live are folded
+  and reclaimed;
 - the whole protocol runs through the Hadoop FS gateway (file://).
 """
 
@@ -63,6 +63,16 @@ def _live_batch_dirs(staged_dir):
     return sorted(found)
 
 
+def _empty_dirs(staged_dir):
+    """Dirs under the live staged tree (not the root) that hold
+    nothing — what a sweep that deletes only leaves would leave."""
+    return [
+        root
+        for root, dirs, files in os.walk(staged_dir)
+        if root != staged_dir and not dirs and not files
+    ]
+
+
 def test_versioned_compact_rows_and_incremental(spark, sf_dir, tmp_path):
     landing, schema = _private_landing(spark, sf_dir, str(tmp_path))
     pipe = _pipe(spark, landing, schema, str(tmp_path))
@@ -70,13 +80,15 @@ def test_versioned_compact_rows_and_incremental(spark, sf_dir, tmp_path):
     assert n > 0
     parts = sorted(os.listdir(landing))
 
-    compacted = pipe.compact_staged(versioned=True)
+    compacted = pipe.compact_staged()
     assert compacted.count() == n
     vt = VersionedTable(pipe._versions_root, spark)
     assert vt.latest() == 1
     assert vt.entry()["compacted_through"] >= 0
-    # covered live leaves are GONE (pure deletes, no renames)
+    # covered live leaves are GONE (pure deletes, no renames), and so
+    # are the date partition dirs they emptied
     assert _live_batch_dirs(pipe.staged_dir) == []
+    assert _empty_dirs(pipe.staged_dir) == []
     # view reads the snapshot: one epoch, all rows
     view = pipe._staged_view()
     assert view.count() == n
@@ -90,16 +102,22 @@ def test_versioned_compact_rows_and_incremental(spark, sf_dir, tmp_path):
     assert pipe.run_available_now(timeout_s=180).count() == n + n_extra
     assert _live_batch_dirs(pipe.staged_dir) != []
 
-    # second compact folds the union into v2 and vacuums v1
-    compacted2 = pipe.compact_staged(versioned=True, keep_versions=1)
+    # second compact folds the union into v2 and, by default, vacuums
+    # v1: one compacted copy on disk
+    compacted2 = pipe.compact_staged()
     assert compacted2.count() == n + n_extra
     assert vt.latest() == 2
     assert vt.versions() == [2]
     assert _live_batch_dirs(pipe.staged_dir) == []
+    assert _empty_dirs(pipe.staged_dir) == []
     vdirs = sorted(
         d for d in os.listdir(pipe._versions_root) if d.startswith("v")
     )
     assert len(vdirs) == 1 and vdirs[0].startswith("v2")
+
+    # keep_versions retains superseded snapshots for slow readers
+    assert pipe.compact_staged(keep_versions=2).count() == n + n_extra
+    assert vt.versions() == [2, 3]
 
 
 def test_kill_before_flip_leaves_old_state_intact(spark, sf_dir, tmp_path, monkeypatch):
@@ -114,7 +132,7 @@ def test_kill_before_flip_leaves_old_state_intact(spark, sf_dir, tmp_path, monke
 
     monkeypatch.setattr(VersionedTable, "_flip", boom)
     with pytest.raises(RuntimeError, match="simulated kill"):
-        pipe.compact_staged(versioned=True)
+        pipe.compact_staged()
     monkeypatch.undo()
 
     # old version (= no version at all) intact: no manifest, live
@@ -122,10 +140,13 @@ def test_kill_before_flip_leaves_old_state_intact(spark, sf_dir, tmp_path, monke
     assert not os.path.exists(os.path.join(pipe._versions_root, "manifest.json"))
     assert _live_batch_dirs(pipe.staged_dir) == live_before
     assert pipe._staged_view().count() == n
-    # the orphan v1 data dir is harmless: retry publishes v1 again
-    # (mode=overwrite) and completes the protocol
-    assert pipe.compact_staged(versioned=True).count() == n
+    # the orphan v1 data dir is harmless: retry publishes v1 to a
+    # fresh dir, completes the protocol, and its vacuum sweeps the
+    # orphan
+    assert pipe.compact_staged().count() == n
     assert VersionedTable(pipe._versions_root, spark).latest() == 1
+    vdirs = [d for d in os.listdir(pipe._versions_root) if d.startswith("v")]
+    assert len(vdirs) == 1
 
 
 def test_kill_after_flip_never_double_counts(spark, sf_dir, tmp_path, monkeypatch):
@@ -138,7 +159,7 @@ def test_kill_after_flip_never_double_counts(spark, sf_dir, tmp_path, monkeypatc
 
     monkeypatch.setattr(StagingPipeline, "_sweep_folded_leaves", boom)
     with pytest.raises(RuntimeError, match="simulated kill"):
-        pipe.compact_staged(versioned=True)
+        pipe.compact_staged()
     monkeypatch.undo()
 
     # manifest flipped, stale covered leaves still on disk — the view
@@ -147,19 +168,9 @@ def test_kill_after_flip_never_double_counts(spark, sf_dir, tmp_path, monkeypatc
     assert _live_batch_dirs(pipe.staged_dir) != []
     assert pipe._staged_view().count() == n
     # next compact re-sweeps and stays at exactly the same rows
-    assert pipe.compact_staged(versioned=True).count() == n
+    assert pipe.compact_staged().count() == n
     assert _live_batch_dirs(pipe.staged_dir) == []
-
-
-def test_rename_mode_refused_on_versioned_table(spark, sf_dir, tmp_path):
-    landing, schema = _private_landing(spark, sf_dir, str(tmp_path))
-    pipe = _pipe(spark, landing, schema, str(tmp_path))
-    n = pipe.run_available_now(timeout_s=180).count()
-    pipe.compact_staged(versioned=True)
-    with pytest.raises(RuntimeError, match="manifest-versioned"):
-        pipe.compact_staged()
-    # and the refusal changed nothing
-    assert pipe._staged_view().count() == n
+    assert _empty_dirs(pipe.staged_dir) == []
 
 
 def test_versioned_compact_on_uri_paths(spark, sf_dir, tmp_path):
@@ -169,9 +180,10 @@ def test_versioned_compact_on_uri_paths(spark, sf_dir, tmp_path):
     landing, schema = _private_landing(spark, sf_dir, str(tmp_path))
     pipe = _pipe(spark, landing, schema, str(tmp_path), staged_prefix="file://")
     n = pipe.run_available_now(timeout_s=180).count()
-    assert pipe.compact_staged(versioned=True).count() == n
+    assert pipe.compact_staged().count() == n
     # local view of the URI tree: leaves swept, snapshot present
     assert _live_batch_dirs(f"{tmp_path}/staged") == []
+    assert _empty_dirs(f"{tmp_path}/staged") == []
     assert any(
         d.startswith("v1")
         for d in os.listdir(f"{tmp_path}/staged.versions")
@@ -189,7 +201,7 @@ def test_versioned_view_prunes_live_leaves_by_partition(spark, sf_dir, tmp_path)
     landing, schema = _private_landing(spark, sf_dir, str(tmp_path))
     pipe = _pipe(spark, landing, schema, str(tmp_path))
     pipe.run_available_now(timeout_s=180)
-    pipe.compact_staged(versioned=True)
+    pipe.compact_staged()
     # a late batch puts live leaves next to the snapshot
     parts = [p for p in sorted(os.listdir(landing)) if p.endswith(".parquet")]
     shutil.copyfile(
@@ -210,22 +222,39 @@ def test_versioned_view_prunes_live_leaves_by_partition(spark, sf_dir, tmp_path)
     ), part_filters
 
 
+def _fold_live_leaves_into_epoch(staged_dir):
+    """Rewrite a drained staged tree into the layout an older
+    release's rename-swap compaction left: every committed row under a
+    live ``_ingest_batch=-1`` leaf per date, and no manifest."""
+    for root, dirs, _files in list(os.walk(staged_dir)):
+        leaves = [d for d in dirs if d.startswith("_ingest_batch=")]
+        if not leaves:
+            continue
+        epoch = os.path.join(root, "_ingest_batch=-1")
+        os.makedirs(epoch)
+        for leaf in leaves:
+            src = os.path.join(root, leaf)
+            for name in os.listdir(src):
+                os.rename(os.path.join(src, name), os.path.join(epoch, name))
+            os.rmdir(src)
+
+
 def test_versioned_compact_sweeps_rename_mode_epoch_leaves(spark, sf_dir, tmp_path):
-    """ADVICE r14: a rename-mode compaction leaves its folded rows
-    under live ``_ingest_batch=-1`` leaves; a LATER versioned
-    compaction folds those rows into the snapshot but used to sweep
-    only ids in [0, committed] — the -1 leaves became permanent dead
-    storage (view-invisible via the > compacted_through predicate,
-    but never reclaimed).  The sweep now also deletes the epoch
-    leaves once the manifest flip covers them."""
+    """ADVICE r14: older releases' rename-swap compaction left its
+    folded rows under live ``_ingest_batch=-1`` leaves.  Compacting
+    such a table folds those rows into the snapshot, and the sweep
+    must reclaim the epoch leaves too — left alone they would be
+    permanent dead storage (view-invisible via the > compacted_through
+    predicate, but never deleted)."""
     landing, schema = _private_landing(spark, sf_dir, str(tmp_path))
     pipe = _pipe(spark, landing, schema, str(tmp_path))
     n = pipe.run_available_now(timeout_s=180).count()
     assert n > 0
 
-    # rename-mode compaction first: everything folds under the epoch
-    assert pipe.compact_staged().count() == n
+    # the legacy layout: everything folded under the live epoch
+    _fold_live_leaves_into_epoch(pipe.staged_dir)
     assert set(_live_batch_dirs(pipe.staged_dir)) == {-1}
+    assert pipe._staged_view().count() == n
 
     # a fresh micro-batch lands on top of the epoch leaves
     parts = sorted(p for p in os.listdir(landing) if p.endswith(".parquet"))
@@ -234,9 +263,10 @@ def test_versioned_compact_sweeps_rename_mode_epoch_leaves(spark, sf_dir, tmp_pa
     shutil.copyfile(extra_src, os.path.join(landing, "late-extra.parquet"))
     assert pipe.run_available_now(timeout_s=180).count() == n + n_extra
 
-    # versioned compaction folds epoch + committed leaves into v1 and
-    # now reclaims BOTH: no live leaf of any id survives
-    compacted = pipe.compact_staged(versioned=True)
+    # compaction folds epoch + committed leaves into v1 and reclaims
+    # BOTH: no live leaf of any id survives
+    compacted = pipe.compact_staged()
     assert compacted.count() == n + n_extra
     assert _live_batch_dirs(pipe.staged_dir) == []
+    assert _empty_dirs(pipe.staged_dir) == []
     assert pipe._staged_view().count() == n + n_extra
