@@ -19,6 +19,10 @@ Scale design notes:
   call `_jaccard_pairs`; rep-space consumers (g26, g30) call
   `_near_rep_pairs`, which on open vocabularies returns the lazy
   token-join doc pairs and no group map.
+- Broadcast vs shuffle: every size-gated join of the dedup family asks
+  `_fits_broadcast` (observed rows x `row_bytes` of the broadcast side
+  against one `_BROADCAST_BYTES`); sides bounded by construction (the
+  all-pairs reps, batch-sized sides) are broadcast unconditionally.
 - Similarity: brute-force cosine is O(Q*N) with Q broadcast and norms
   precomputed per vector; the scale paths are hyperplane-LSH blocking
   (g03c) and IVF inverted lists (g03e).
@@ -35,10 +39,11 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 from data_lake_staging_engine_spark.functions.determinism import as_long, dec_sum, duck_round
 from data_lake_staging_engine_spark.registry import query
-from data_lake_staging_engine_spark.session import release_local_checkpoint
+from data_lake_staging_engine_spark.session import _n_shuffle_parts, release_local_checkpoint
 from data_lake_staging_engine_spark.sources import load
 
 
@@ -313,6 +318,43 @@ _ALLPAIRS_MAX_REPS = 8192
 _DEGENERATE_ABS_COLLISIONS = 64_000_000
 _DEGENERATE_COLLISIONS_PER_REP = 16_384
 
+# The one broadcast budget of the dedup family, in UnsafeRow bytes of
+# the shipped side (``_fits_broadcast``).  100 MB is the bound the
+# most-measured of the per-site gates it replaces was tuned at (the
+# prefix collision join, round 16, 10x replica); the largest side any
+# site ships at that replica is 14.8 MB, so no decision at sf0.01,
+# sf0.1 or 10x depends on the exact value.  The hash relation built
+# from a side measured 1.6-6x its estimate there (page rounding; 6x
+# for the two-column (band, sig) key), so a side at the budget holds
+# up to ~600 MB of heap.
+_BROADCAST_BYTES = 100 * 1024 * 1024
+
+
+def row_bytes(schema: StructType, array_len: int = 0) -> int:
+    """Bytes of one ``schema`` row in Spark's UnsafeRow layout, the form
+    a broadcast hash relation stores: the null-bitset words and 8 B per
+    field, plus per array column its length word, its element
+    null-bitset words and 8 B per element at ``array_len`` elements.
+    The broadcast sides here hold only numbers and g21's one
+    ``array<double>``, so no other variable-width type is modelled."""
+
+    def words(n: int) -> int:
+        return 8 * ((n + 63) // 64)
+
+    width = words(len(schema)) + 8 * len(schema)
+    for field in schema:
+        if isinstance(field.dataType, ArrayType):
+            width += 8 + words(array_len) + 8 * array_len
+    return width
+
+
+def _fits_broadcast(df: DataFrame, n_rows: int, array_len: int = 0) -> bool:
+    """The broadcast-vs-shuffle rule of every size-gated join here:
+    ``n_rows`` (a count the caller already observed, so no job runs)
+    times ``row_bytes`` of the frame actually broadcast must fit
+    ``_BROADCAST_BYTES``."""
+    return n_rows * row_bytes(df.schema, array_len) <= _BROADCAST_BYTES
+
 
 # fraction of documents fed to the strategy-probe sketch: keep docs
 # whose doc_id digest starts below this hex char (1/16). Digest
@@ -388,22 +430,10 @@ def _bitmap_vocab(
     return vocab, vocab_n
 
 
-def _n_shuffle_parts(spark: SparkSession) -> int:
-    """Scale-adaptive partition count for explicit re-spreads: the
-    session's shuffle-partition conf, falling back to the cluster's
-    default parallelism on platforms whose AQE auto-optimized shuffle
-    reports the conf as the non-numeric string 'auto' (ADVICE r12)."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
-
-
 def _jaccard_pairs(
     toks: DataFrame,
     threshold: float,
     probe: DataFrame | None = None,
-    collision_budget: int | float | None = None,
 ) -> DataFrame:
     """Jaccard>=t pairs with a runtime strategy pick (sketch probe
     + at most one small exact count): small universes go through the
@@ -411,24 +441,15 @@ def _jaccard_pairs(
     token join.
 
     Exact except on DEGENERATE dense universes: when the bitmap path's
-    plan-time collision prediction exceeds ``collision_budget``
-    (default ``max(_DEGENERATE_ABS_COLLISIONS,
-    _DEGENERATE_COLLISIONS_PER_REP * n_reps)``), candidate generation
+    plan-time collision prediction exceeds ``max(_DEGENERATE_ABS_COLLISIONS,
+    _DEGENERATE_COLLISIONS_PER_REP * n_reps)``, candidate generation
     auto-routes to MinHash banding with the same exact verify —
     precision 1, recall the banding curve — and a RuntimeWarning
-    documents the switch (VERDICT r12 #6).  Pass
-    ``collision_budget=math.inf`` to force the exact path regardless
-    of cost."""
+    documents the switch (VERDICT r12 #6)."""
     hit = _bitmap_vocab(toks, probe=probe)
     if hit is not None:
         vocab, vocab_n = hit
-        return _g02_bitmask(
-            toks,
-            vocab_n,
-            threshold,
-            vocab=vocab,
-            collision_budget=collision_budget,
-        )
+        return _g02_bitmask(toks, vocab_n, threshold, vocab=vocab)
     return _g02_token_join(toks, threshold)
 
 
@@ -591,7 +612,6 @@ def _g02_bitmask(
     vocab_n: int,
     threshold: float,
     vocab: DataFrame | None = None,
-    collision_budget: int | float | None = None,
     expand: bool = True,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Small-universe bitmap strategy, generalized to multi-word masks.
@@ -689,13 +709,8 @@ def _g02_bitmask(
             .first()[0]
             or 0
         )
-        budget = (
-            collision_budget
-            if collision_budget is not None
-            else max(
-                _DEGENERATE_ABS_COLLISIONS,
-                _DEGENERATE_COLLISIONS_PER_REP * n_reps,
-            )
+        budget = max(
+            _DEGENERATE_ABS_COLLISIONS, _DEGENERATE_COLLISIONS_PER_REP * n_reps
         )
         if predicted > budget:
             warnings.warn(
@@ -704,8 +719,8 @@ def _g02_bitmask(
                 f"{n_reps:,} distinct token sets (budget {budget:,.0f}); "
                 "routing candidate generation to MinHash banding — "
                 "precision stays exact (popcount verify), recall is the "
-                "banding curve. Pass collision_budget=math.inf for the "
-                "exact path regardless of cost.",
+                "banding curve. Set llmops._DEGENERATE_ABS_COLLISIONS to "
+                "math.inf for the exact path regardless of cost.",
                 RuntimeWarning,
                 stacklevel=2,
             )
@@ -726,7 +741,7 @@ def _g02_bitmask(
         # OUTPUT (195k rows fanning out to 239M collisions there), so
         # a sort-merge join pays sort+group-buffer cost per collision
         # row — broadcasting one side made the identical count 10.4 s
-        # -> 2.2 s.  Two tiers, both gated on the broadcast estimate:
+        # -> 2.2 s.  Two tiers, both decided by ``_fits_broadcast``:
         #   1. masks INLINE: ship the build side WITH its mask words,
         #      so the popcount verify fuses into the collision join —
         #      no rm_a/rm_b probes per collision at all (each probe is
@@ -736,12 +751,9 @@ def _g02_bitmask(
         #      gram corpora: ~30 words x ~30 prefix tokens/rep) —
         #      broadcast the bare prefix side and keep the shared
         #      rm-join verify tail.
-        # Past both gates (100 TB posture: prefix frame scales with
-        # the corpus), the SMJ shape below stands unchanged.
-        pref_rows = int(obs_pref.get["rows"])  # observed at checkpoint
-        inline_bytes = pref_rows * (32 + 8 * len(wcols))
-        plain_bytes = pref_rows * 32
-        gate = 100 * 1024 * 1024
+        # Past both (100 TB posture: prefix frame scales with the
+        # corpus), the SMJ shape below stands unchanged.
+        #
         # The inline tier pays its mask-widened collision stream back
         # only when the QUALIFIED pair frame is the terminus
         # (expand=False consumers: g26's rep graph, g30's near layer
@@ -750,7 +762,24 @@ def _g02_bitmask(
         # rm-probe verify is cheaper than widening 60M+ collision
         # rows — interleaved 10x A/B read a wash-to-slight-loss for
         # inline there, so expanded outputs take the plain-BHJ tier.
-        use_inline = inline_bytes <= gate and not expand
+        pref_rows = int(obs_pref.get["rows"])  # observed at checkpoint
+
+        def side(src: DataFrame, i: str, masks: list[Column]) -> DataFrame:
+            return src.select(
+                F.col("rep").alias(f"r{i}"),
+                F.col("n").alias(f"n{i}"),
+                F.col("rnk").alias(f"i{i}"),
+                "tok_id",
+                *masks,
+            ).alias(f"p{i}")
+
+        p1m = pref.join(g.reps.select("rep", *wcols), "rep")
+        inline = not expand and _fits_broadcast(
+            side(p1m, "2", g.cols("b")), pref_rows
+        )
+        src, m1, m2 = (p1m, g.cols("a"), g.cols("b")) if inline else (pref, [], [])
+        p2 = side(src, "2", m2)
+        bc = _fits_broadcast(p2, pref_rows)
         # Probe-side spread (round 16, second finding): pref is a
         # checkpointed AGGREGATE output small enough for AQE to have
         # coalesced to ONE partition — but the collision join's OUTPUT
@@ -762,44 +791,16 @@ def _g02_bitmask(
         # shuffle-partition count.  Same class and same cure as the
         # banding route's signature spread (_minhash_lsh_candidates);
         # the exchange itself is O(pref) — linear and tiny (195k rows
-        # there) next to the collision stream it parallelizes.  The
-        # SMJ fallback reshuffles both sides by key anyway, so it
-        # keeps the downstream rebalance instead.
-        n_parts = _n_shuffle_parts(toks.sparkSession)
-        if use_inline:
-            p1m = pref.join(g.reps.select("rep", *wcols), "rep")
-            # spread only the PROBE side; the build side is broadcast
-            # whole, so an exchange in its lineage would be pure cost
-            p1 = p1m.repartition(n_parts).select(
-                F.col("rep").alias("r1"),
-                F.col("n").alias("n1"),
-                F.col("rnk").alias("i1"),
-                "tok_id",
-                *g.cols("a"),
-            ).alias("p1")
-            p2 = p1m.select(
-                F.col("rep").alias("r2"),
-                F.col("n").alias("n2"),
-                F.col("rnk").alias("i2"),
-                "tok_id",
-                *g.cols("b"),
-            ).alias("p2")
-        else:
-            p1_src = (
-                pref.repartition(n_parts) if plain_bytes <= gate else pref
-            )
-            p1 = p1_src.select(
-                F.col("rep").alias("r1"),
-                F.col("n").alias("n1"),
-                F.col("rnk").alias("i1"),
-                "tok_id",
-            ).alias("p1")
-            p2 = pref.select(
-                F.col("rep").alias("r2"),
-                F.col("n").alias("n2"),
-                F.col("rnk").alias("i2"),
-                "tok_id",
-            ).alias("p2")
+        # there) next to the collision stream it parallelizes.  Only
+        # the PROBE side is spread: the build side is broadcast whole,
+        # so an exchange in its lineage would be pure cost.  The SMJ
+        # fallback reshuffles both sides by key anyway, so it keeps
+        # the downstream rebalance instead.
+        p1 = side(
+            src.repartition(_n_shuffle_parts(toks.sparkSession)) if bc else src,
+            "1",
+            m1,
+        )
         # PPJoin length filter: J >= t forces t*|B| <= |A| <= |B|/t, so
         # size-incompatible collisions are dropped inside the join
         # (same 1e-9 float-ceil guard as the prefix length).
@@ -822,43 +823,31 @@ def _g02_bitmask(
             + 1
         ) >= alpha
         # NO pre-verify distinct: surviving collisions flow through the
-        # (map-side, see the broadcast note below) popcount verify once
-        # per survivor instead of paying a candidate-stream-sized
-        # shuffle — the dedup happens on the far smaller QUALIFIED
-        # output.  Measured at sf0.1: candidate distinct 14.2 s ->
-        # verify-then-distinct 6.6 s.
-        if use_inline:
-            # Fused collision join + popcount verify: one BHJ, the
-            # masks ride the rows, qualified pairs dedup after.
+        # (map-side) popcount verify once per survivor instead of
+        # paying a candidate-stream-sized shuffle — the dedup happens
+        # on the far smaller QUALIFIED output.  Measured at sf0.1:
+        # candidate distinct 14.2 s -> verify-then-distinct 6.6 s.
+        hits = p1.join(
+            F.broadcast(p2) if bc else p2,
+            F.col("p1.tok_id") == F.col("p2.tok_id"),
+        )
+        keep = (F.col("r1") < F.col("r2")) & size_ok & pos_ok
+        if inline:
+            # Fused collision join + popcount verify: the masks ride
+            # the rows, qualified pairs dedup after.
             qual = (
-                p1.join(
-                    F.broadcast(p2), F.col("p1.tok_id") == F.col("p2.tok_id")
-                )
-                .filter(
-                    (F.col("r1") < F.col("r2"))
-                    & size_ok
-                    & pos_ok
-                    & (g.jac >= threshold)
-                )
+                hits.filter(keep & (g.jac >= threshold))
                 .select("r1", "r2", duck_round(g.jac, 6).alias("jaccard"))
                 .distinct()
             )
             return _expand_mask_pairs(qual, g.d2r) if expand else (qual, g.d2r)
-        cands = (
-            p1.join(
-                F.broadcast(p2) if plain_bytes <= gate else p2,
-                F.col("p1.tok_id") == F.col("p2.tok_id"),
-            )
-            .filter((F.col("r1") < F.col("r2")) & size_ok & pos_ok)
-            .select("r1", "r2")
-        )
         return _finish_bitmask_verify(
-            cands, g, threshold, expand=expand,
+            hits.filter(keep).select("r1", "r2"), g, threshold, expand=expand,
             # a broadcast collision join keeps the stream's task
             # distribution balanced by probe rows, so skip the extra
             # exchange exactly like the banding route does; the SMJ
             # fallback keeps the measured wide-mask rebalance.
-            rebalance=plain_bytes > gate,
+            rebalance=not bc,
         )
 
 
@@ -891,16 +880,15 @@ def _finish_bitmask_verify(
     # the measured rebalance win.
     if rebalance and len(g.wcols) >= 16:
         cands = cands.repartition(_n_shuffle_parts(cands.sparkSession))
-    # The rep tables are n_reps x (16 + 8*words) bytes — tiny next
-    # to the candidate stream, but right at Spark's 10 MB default
-    # broadcast threshold at the 10x-study scale, where missing the
-    # broadcast turns the verify into a sort-merge join that SORTS
-    # the full candidate stream (measured: g02d's sf1 verify ran
-    # 20+ min as SMJ).  Hint the broadcast explicitly while the
-    # table is provably small; past ~200 MB let AQE pick (a shuffle
-    # join is then genuinely required).
+    # The rep tables are tiny next to the candidate stream, but right
+    # at Spark's 10 MB default broadcast threshold at the 10x-study
+    # scale, where missing the broadcast turns the verify into a
+    # sort-merge join that SORTS the full candidate stream (measured:
+    # g02d's sf1 verify ran 20+ min as SMJ).  Hint the broadcast
+    # explicitly while the table fits; past it let AQE pick (a
+    # shuffle join is then genuinely required).
     rm_a, rm_b = g.rm("a"), g.rm("b")
-    if g.n_reps * (16 + 8 * len(g.wcols)) <= 200 * 1024 * 1024:
+    if _fits_broadcast(rm_a, g.n_reps):
         rm_a, rm_b = F.broadcast(rm_a), F.broadcast(rm_b)
     qual = (
         cands.join(rm_a, "r1")
@@ -1164,22 +1152,25 @@ def _minhash_lsh_candidates(
     # Exact (pigeonhole on sizes, same 1e-9 float-ceil guard class as
     # the prefix filter): no qualified pair can be dropped.
     if g is not None:
-        sigs = sigs.join(F.broadcast(g.reps.select("doc_id", "n")), "doc_id")
+        # one size row per rep: on a mostly-unique corpus n_reps ~=
+        # n_docs, so this side is broadcast only while it fits
+        sizes = g.reps.select("doc_id", "n")
+        if _fits_broadcast(sizes, g.n_reps):
+            sizes = F.broadcast(sizes)
+        sigs = sigs.join(sizes, "doc_id")
     n_parts = _n_shuffle_parts(toks.sparkSession)
-    # Keep the collision join a BHJ when the signature table is
-    # provably small (round 17 regression fix): joining the sizes onto
-    # the signature stream above inflates Catalyst's size ESTIMATE
-    # (join output = left x right heuristic), so the self-join that
-    # auto-broadcast used to pick BHJ for fell back to a sort-merge —
-    # two new (band, sig) exchanges + sorts on the collision path at
-    # bench scale (test_plans caught the 9 -> 11 exchange count).  The
-    # exact signature row count is n_reps x bands (n_reps OBSERVED at
-    # the groups' checkpoint, no extra job); gate like g21's embedding
-    # lookups: 32 MB of estimated raw bytes, leaving 2-4x headroom for
-    # HashedRelation inflation.  Past the gate the estimate-driven SMJ
-    # stands (100 TB posture unchanged).
+    # Keep the collision join a BHJ when the signature table fits
+    # (round 17 regression fix): joining the sizes onto the signature
+    # stream above inflates Catalyst's size ESTIMATE (join output =
+    # left x right heuristic), so the self-join that auto-broadcast
+    # used to pick BHJ for fell back to a sort-merge — two new (band,
+    # sig) exchanges + sorts on the collision path at bench scale
+    # (test_plans caught the 9 -> 11 exchange count).  The exact
+    # signature row count is n_reps x bands (n_reps OBSERVED at the
+    # groups' checkpoint, no extra job).  Past the budget the
+    # estimate-driven SMJ stands (100 TB posture unchanged).
     build = sigs
-    if g is not None and g.n_reps * bands * 48 <= 32 * 1024 * 1024:
+    if g is not None and _fits_broadcast(sigs, g.n_reps * bands):
         build = F.broadcast(build)
     a, b_ = sigs.repartition(n_parts).alias("a"), build.alias("b")
     cond = (
@@ -1231,13 +1222,12 @@ def _minhash_lsh_neardup(toks: DataFrame, probe: DataFrame | None = None) -> Dat
     g = _mask_groups(toks, vocab_n, vocab=vocab)
     # Band the RAW tokens of the representatives only — same hash
     # stream as doc-space banding, so candidate groups are identical.
-    # The rep-id semi-join side is broadcast only under the same ~200
-    # MB estimate _finish_bitmask_verify applies to its rep tables
-    # (ADVICE r15): on a mostly-unique corpus n_reps ~= n_docs, and an
+    # The rep-id semi-join side is broadcast only while it fits (ADVICE
+    # r15): on a mostly-unique corpus n_reps ~= n_docs, and an
     # unconditional broadcast would ship a corpus-sized id list to
-    # every executor.  Past the gate, let AQE pick the join.
+    # every executor.  Past the budget, let AQE pick the join.
     rep_ids = g.reps.select("doc_id")
-    if g.n_reps * 24 <= 200 * 1024 * 1024:
+    if _fits_broadcast(rep_ids, g.n_reps):
         rep_ids = F.broadcast(rep_ids)
     rep_toks = toks.join(rep_ids, "doc_id", "left_semi")
     cands = _minhash_lsh_candidates(rep_toks, g, threshold=0.8).select(
@@ -2759,34 +2749,27 @@ def g21_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = e.withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
     # Join-strategy pick for the two embedding lookups (round 16,
     # measured at the 10x replica): the text-pair stream is tens of
-    # millions of rows while the embedding table is n_vecs x ~(24 +
-    # 8*dim) bytes — there the table read 10.7 MB, just past Spark's
-    # 10 MB auto-broadcast threshold, so AQE fell back to a sort-merge
-    # join that SORTED the 29.7M-pair stream twice (34-57 s).  Hint
-    # the broadcast while the table provably fits (tail: 3-5 s); past
-    # the gate prefer shuffled-hash over sort-merge — an equi-LOOKUP
-    # of an unsorted pair stream never profits from sorting it, and
-    # the per-partition build side stays bounded under scale-adaptive
-    # partition counts (guide: pick the join deliberately).  Size
-    # estimate from parquet-metadata count + one-row dim probe — the
-    # probe filters out NULL vectors (a NULL first row would poison
-    # the arithmetic, ADVICE r16) and is LIMIT-1 cheap.
-    # Round 17: both lookups join the SAME projection — reuse-eligible
-    # for ReuseExchange, though the executed plan was CHECKED and the
-    # planner still builds two broadcast relations here (exprId-fresh
-    # aliases defeat the canonical match), so the operative defense
-    # against doubled executor-held broadcast state (ADVICE r16) is
-    # the tighter gate: the HashedRelation for an array column
-    # inflates over raw bytes (object headers, ~2-4x), so the gate is
-    # 32 MB of ESTIMATED bytes, not 100 — worst case ~2 x 4 x 32 MB
-    # in flight.
+    # millions of rows while the embedding table read 10.7 MB there,
+    # just past Spark's 10 MB auto-broadcast threshold, so AQE fell
+    # back to a sort-merge join that SORTED the 29.7M-pair stream
+    # twice (34-57 s).  Hint the broadcast while the table fits (tail:
+    # 3-5 s); past the budget prefer shuffled-hash over sort-merge —
+    # an equi-LOOKUP of an unsorted pair stream never profits from
+    # sorting it, and the per-partition build side stays bounded under
+    # scale-adaptive partition counts (guide: pick the join
+    # deliberately).  Rows from the parquet-metadata count, array
+    # length from a one-row probe that filters out NULL vectors (a
+    # NULL first row would poison the arithmetic, ADVICE r16) and is
+    # LIMIT-1 cheap.  Round 17: both lookups join the SAME projection,
+    # but the executed plan was CHECKED and the planner still builds
+    # two broadcast relations here (exprId-fresh aliases defeat the
+    # ReuseExchange canonical match).
     n_vecs = e.count()
     dim_row = (
         e.filter(F.col("v").isNotNull()).select(F.size("v").alias("k")).first()
     )
-    est_bytes = n_vecs * (24 + 8 * ((dim_row["k"] if dim_row else 0) or 0))
     eb = e.select("vec_id", "v", "norm")
-    if est_bytes <= 32 * 1024 * 1024:
+    if _fits_broadcast(eb, n_vecs, (dim_row["k"] if dim_row else 0) or 0):
         eb = F.broadcast(eb)
     else:
         eb = eb.hint("shuffle_hash")
@@ -3119,13 +3102,6 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
     return labels
 
 
-# Broadcast the delta-iteration frontier when it has at most this many
-# entries (16 B/entry => ~16 MB at the cap, well under the executor
-# budget); above it, fall back to the shuffle join.  Module-level so
-# tests can pin both sides of the switch.
-_FRONTIER_BROADCAST_CAP = 1_000_000
-
-
 def _local_ckpt_rdd_id(df: DataFrame) -> int | None:
     """RDD id behind a localCheckpoint-ed frame (None when the frame is
     not a checkpoint) — observation seam for the posture tests."""
@@ -3198,15 +3174,13 @@ def _min_label_components_rounds(
         # Delta-iteration frontier. Round 1's frontier is the WHOLE
         # label table (every label just initialized = changed), which is
         # itself usually tiny next to the edge list — one (node, label)
-        # row per node vs one row per pair. Broadcast the frontier when
-        # it's small enough that shipping it to every task beats
-        # shuffling the edge list (16 B/entry => ~16 MB at the 1M cap,
-        # well under the driver/executor budget); above the cap, fall
-        # back to the shuffle join.
+        # row per node vs one row per pair. Broadcast the frontier while
+        # it fits, since shipping it to every task beats shuffling the
+        # edge list; past the budget, fall back to the shuffle join.
         frontier = labels
         frontier_size = int(obs0.get["n"])
         for rounds in range(1, max_rounds + 1):
-            will_broadcast = frontier_size <= _FRONTIER_BROADCAST_CAP
+            will_broadcast = _fits_broadcast(frontier, frontier_size)
             src = F.broadcast(frontier) if will_broadcast else frontier
             neigh = (
                 edges.join(src, edges["d2"] == src["node"])

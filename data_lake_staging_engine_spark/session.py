@@ -140,6 +140,17 @@ def tune_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _n_shuffle_parts(spark: SparkSession) -> int:
+    """The session's shuffle-partition conf, falling back to the
+    cluster's default parallelism on platforms whose AQE auto-optimized
+    shuffle reports the conf as the non-numeric string 'auto' (ADVICE
+    r12)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def release_local_checkpoint(df) -> None:
     """Free the block-manager storage behind a ``localCheckpoint``-ed
     DataFrame once nothing will read it again.

@@ -22,6 +22,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_lake_staging_engine_spark.session import _n_shuffle_parts
+
 
 def _tmpdir(tag: str) -> str:
     return tempfile.mkdtemp(prefix=f"dlse_stream_{tag}_")
@@ -73,12 +75,7 @@ def scaled_state_partitions(spark: SparkSession, landing: str) -> int:
     for root, _dirs, files in os.walk(landing):
         for f in files:
             total += os.path.getsize(os.path.join(root, f))
-    try:
-        session_cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        # AQE auto-optimized shuffle platforms report 'auto' (ADVICE
-        # r12) — fall back to the cluster's default parallelism.
-        session_cap = spark.sparkContext.defaultParallelism
+    session_cap = _n_shuffle_parts(spark)
     return max(min(8, session_cap), min(session_cap, total // (32 << 20) + 1))
 
 

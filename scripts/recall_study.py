@@ -9,8 +9,8 @@ measures, at each SF dir of a ladder:
 
 - g02b_dedup_lsh   recall vs exact g02_dedup_near   (token Jaccard>=0.8)
 - g02e_dedup_lsh_shingle recall vs exact g02d (3-gram Jaccard>=0.8,
-  forced exact via collision_budget=inf — the auto-route must not
-  hand the study an approximate ground truth)
+  forced exact by raising _DEGENERATE_ABS_COLLISIONS to inf — the
+  auto-route must not hand the study an approximate ground truth)
 - g02c_dedup_simhash CANDIDATE recall vs the same g02d anchor (simhash
   emits unverified candidate pairs; recall counts anchor pairs present)
 - g03c_simsearch_lsh recall vs the exact cos>=0.4 pair anchor
@@ -99,14 +99,14 @@ def measure(spark, reg, sf_dir: str) -> dict[str, float]:
     )
 
     # shingle near-dup: force the exact anchor past the auto-route
-    exact_sh = _pairs(
-        L._jaccard_pairs(
-            L._shingles(d),
-            0.8,
-            probe=L._shingles_raw(d),
-            collision_budget=math.inf,
+    abs_collisions = L._DEGENERATE_ABS_COLLISIONS
+    L._DEGENERATE_ABS_COLLISIONS = math.inf
+    try:
+        exact_sh = _pairs(
+            L._jaccard_pairs(L._shingles(d), 0.8, probe=L._shingles_raw(d))
         )
-    )
+    finally:
+        L._DEGENERATE_ABS_COLLISIONS = abs_collisions
     band_sh = _pairs(reg["g02e_dedup_lsh_shingle"].fn(spark, sf_dir))
     out["g02e_vs_g02d"], out["n_pairs_shingle"] = _recall_pairs(
         band_sh, exact_sh

@@ -101,17 +101,19 @@ def test_degenerate_universe_routes_to_banding(spark, sf_dir, monkeypatch):
     vocab_n = toks.select("tok").distinct().count()
     exact = {tuple(r) for r in _g02_bitmask(toks, vocab_n, 0.8).collect()}
     monkeypatch.setattr(llmops, "_ALLPAIRS_MAX_REPS", 0)
+    monkeypatch.setattr(llmops, "_DEGENERATE_ABS_COLLISIONS", 0)
+    monkeypatch.setattr(llmops, "_DEGENERATE_COLLISIONS_PER_REP", 0)
     with _w.catch_warnings(record=True) as caught:
         _w.simplefilter("always")
         routed = {
             tuple(r)
-            for r in llmops._g02_bitmask(
-                toks, vocab_n, 0.8, collision_budget=0
-            ).collect()
+            for r in llmops._g02_bitmask(toks, vocab_n, 0.8).collect()
         }
     assert any("MinHash banding" in str(w.message) for w in caught)
     assert routed <= exact  # precision 1
     assert len(routed) >= 0.5 * len(exact)  # banding recall, dup-heavy
+    monkeypatch.undo()  # default budget, prefix branch still forced
+    monkeypatch.setattr(llmops, "_ALLPAIRS_MAX_REPS", 0)
     with _w.catch_warnings(record=True) as caught2:
         _w.simplefilter("always")
         dflt = {
@@ -382,12 +384,12 @@ def test_min_label_components_releases_checkpoints(spark):
 def test_min_label_delta_iteration_posture(spark, monkeypatch):
     """VERDICT r08 #2: pin g26's delta-iteration EXECUTION posture, not
     just its fixpoint — (a) every round whose entering frontier fits
-    the cap joins a broadcast frontier and the physical plan really
-    contains a BroadcastHashJoin; (b) each round releases exactly the
-    previous round's superseded checkpoint; (c) the frontier is a
-    derived filter, never re-checkpointed.  Then flip the cap to 0 and
-    pin the shuffle fallback wiring (same fixpoint, broadcast hint
-    off)."""
+    the broadcast budget joins a broadcast frontier and the physical
+    plan really contains a BroadcastHashJoin; (b) each round releases
+    exactly the previous round's superseded checkpoint; (c) the
+    frontier is a derived filter, never re-checkpointed.  Then zero the
+    budget and pin the shuffle fallback wiring (same fixpoint,
+    broadcast hint off)."""
     import data_lake_staging_engine_spark.operators.llmops as llmops
 
     pairs = spark.createDataFrame(
@@ -397,7 +399,7 @@ def test_min_label_delta_iteration_posture(spark, monkeypatch):
     labels, rounds = llmops._min_label_components_rounds(pairs, round_log=log)
     assert rounds >= 3 and len(log) == rounds
     for entry in log:
-        # (a) 256 nodes is far under the 1M cap in every round
+        # (a) 256 nodes is far under the broadcast budget in every round
         assert entry["broadcast"] is True, entry
         assert entry["plan_broadcast"] is True, entry
         # (c) the frontier must stay a derivation of the round's
@@ -414,8 +416,8 @@ def test_min_label_delta_iteration_posture(spark, monkeypatch):
     superseded = {e["ckpt_rdd_id"] for e in log[:-1]}
     assert not (live & superseded), (live, superseded)
 
-    # fallback wiring: cap 0 => no broadcast hint, identical fixpoint
-    monkeypatch.setattr(llmops, "_FRONTIER_BROADCAST_CAP", 0)
+    # fallback wiring: budget 0 => no broadcast hint, identical fixpoint
+    monkeypatch.setattr(llmops, "_BROADCAST_BYTES", 0)
     log2: list = []
     labels2, rounds2 = llmops._min_label_components_rounds(pairs, round_log=log2)
     assert all(e["broadcast"] is False for e in log2)
