@@ -23,9 +23,17 @@ Scale design notes:
   `_fits_broadcast` (observed rows x `row_bytes` of the broadcast side
   against one `_BROADCAST_BYTES`); sides bounded by construction (the
   all-pairs reps, batch-sized sides) are broadcast unconditionally.
-- Similarity: brute-force cosine is O(Q*N) with Q broadcast and norms
-  precomputed per vector; the scale paths are hyperplane-LSH blocking
-  (g03c) and IVF inverted lists (g03e).
+- Similarity: one vector core.  `_norm` and `_with_cos` (one dot per
+  pair over norms precomputed per vector, zero norm => NULL cosine)
+  score every cosine query; `_unit_vectors` (drop zero-norm/NULL,
+  normalize, count, checkpoint), `_digest_seeds` (the k md5-first
+  vectors) and `_mean_vectors` (per-key mean vector) build the
+  codebooks; `_ivf_codebook` + `_ivf_top_lists` are the one
+  nearest-centroid assignment (one broadcast codebook row, top lists
+  by a caller-given score: cosine for g03e/g28, `_l2_score` for
+  g13).  Brute force (g03/g03b/g03d) is O(Q*N) with Q broadcast;
+  the scale paths are hyperplane-LSH blocking (g03c) and IVF inverted
+  lists (g03e, g28).
 - All cosine math uses zip_with + a sequential left-fold (aggregate) so
   per-pair results are bit-deterministic across engines and runs.
 """
@@ -1411,23 +1419,123 @@ def _dot(a, b):
     )
 
 
-def _with_cosine(q: DataFrame, c: DataFrame) -> DataFrame:
-    """Cross-score query x candidate with deterministic cosine.
+def _l2_score(a, b):
+    """g13's assignment score: the squared L2 distance d2 on a
+    sequential left fold, as a struct that ranks larger-is-nearer
+    exactly as d2 sorts ascending in SQL — a NULL d2 first, then -d2,
+    a NaN d2 last.  A bare -d2 would rank NaN first under the top-list
+    comparator's NaN-greatest rule and pull every vector into a
+    NaN-poisoned cluster (tests/test_contracts.py pins g13 on such a
+    corpus)."""
+    d2 = F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, d: acc + d,
+    )
+    rank = F.when(d2.isNull(), 2).when(F.isnan(d2), 0).otherwise(1)
+    return F.struct(rank.alias("rank"), (-d2).alias("neg_d2"))
 
-    Norms are computed ONCE per vector before the cross join (N + Q
-    dots), not per pair (3*Q*N dots) — at 100 TB the candidate norm is a
-    map-side projection fused into the scan, and only the pairwise dot
-    remains in the O(Q*N) stage."""
-    qn = q.withColumn("qn", F.sqrt(_dot(F.col("qe"), F.col("qe"))))
-    cn = c.withColumn("cn", F.sqrt(_dot(F.col("ce"), F.col("ce"))))
+
+def _norm(col: Column) -> Column:
+    """L2 norm on the same sequential fold as `_dot`."""
+    return F.sqrt(_dot(col, col))
+
+
+def _with_cos(df: DataFrame, a: str, a_norm: str, b: str, b_norm: str) -> DataFrame:
+    """Add the deterministic cosine of vector columns `a` and `b` as
+    `cos`, from norms precomputed once per vector (N + Q dots, not
+    3*Q*N) and one `dot` per pair.
+
+    try_divide: a zero-norm vector (failed encoder batch — routine in a
+    100 TB corpus; round-9 adversarial audit) has UNDEFINED cosine =>
+    NULL, matching the DuckDB oracle's x/0 => NULL, instead of the ANSI
+    DIVIDE_BY_ZERO throw."""
+    return df.withColumn("dot", _dot(F.col(a), F.col(b))).withColumn(
+        "cos", F.try_divide(F.col("dot"), F.col(a_norm) * F.col(b_norm))
+    )
+
+
+def _unit_vectors(e: DataFrame) -> tuple[DataFrame, int]:
+    """The embedding table as unit vectors `(vec_id, u)`, materialized
+    once, and its row count.
+
+    Zero-norm and NULL vectors are unindexable (undefined direction —
+    no unit normalization exists) and have undefined cosine to
+    everything: they are dropped up front instead of throwing
+    DIVIDE_BY_ZERO mid-normalize (round-9 adversarial audit).  The norm
+    is computed once per vector, not per element.  The working set
+    feeds the seed TakeOrdered, every Lloyd iteration and the
+    assignment; un-truncated, each of those re-ran the scan + normalize
+    (round 17: ~1.2 s per pass at sf0.1).  The count rides the
+    checkpoint job as an observed metric, so it costs no job of its
+    own."""
+    obs_n = Observation()
+    vn = (
+        e.select("vec_id", F.col("embedding").cast("array<double>").alias("ve"))
+        .withColumn("nrm", _norm(F.col("ve")))
+        .filter(F.col("nrm") > 0.0)
+        .select(
+            "vec_id",
+            F.transform(F.col("ve"), lambda x: x / F.col("nrm")).alias("u"),
+        )
+        .observe(obs_n, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    return vn, int(obs_n.get["n"] or 0)
+
+
+def _digest_seeds(vn: DataFrame, k: int) -> DataFrame:
+    """Deterministic codebook seeds `(list_id, c)`: the k unit vectors
+    whose md5(vec_id) digests sort first (the repo's deterministic-
+    sample rule, no RNG), numbered 0..k-1 in digest order.  A
+    TakeOrdered — no global sort is materialized."""
+    seeds = (
+        vn.select(F.md5(F.col("vec_id").cast("string")).alias("dg"), "vec_id", "u")
+        .orderBy("dg", "vec_id")
+        .limit(k)
+    )
+    w_seed = Window.orderBy("dg", "vec_id")  # k rows — single partition fine
+    return seeds.select(
+        (F.row_number().over(w_seed) - 1).cast("long").alias("list_id"),
+        F.col("u").alias("c"),
+    )
+
+
+def _mean_vectors(df: DataFrame, key: str, vec: str) -> DataFrame:
+    """Per-`key` mean of the array column `vec` as `(key, c)`: one
+    posexplode, one avg per (key, pos) that partial-aggregates map-side
+    to <= keys x dim rows per task, and the means re-assembled in
+    position order.  NULL vectors explode to nothing, so they drop out
+    of their key's mean."""
     return (
-        qn.crossJoin(cn)
-        .withColumn("dot", _dot(F.col("qe"), F.col("ce")))
-        # try_divide: a zero-norm vector (failed encoder batch — routine
-        # in a 100 TB corpus; round-9 adversarial audit) has UNDEFINED
-        # cosine => NULL, matching the DuckDB oracle's x/0 => NULL,
-        # instead of the ANSI DIVIDE_BY_ZERO throw.
-        .withColumn("cos", F.try_divide(F.col("dot"), F.col("qn") * F.col("cn")))
+        df.select(key, F.posexplode(vec).alias("pos", "x"))
+        .groupBy(key, "pos")
+        .agg(F.avg(F.col("x").cast("double")).alias("m"))
+        .groupBy(key)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                lambda s: s["m"],
+            ).alias("c")
+        )
+    )
+
+
+def _query_scores(e: DataFrame) -> DataFrame:
+    """g03/g03b's exact scoring: the 10 query vectors (vec_id < 10,
+    broadcast — at 100 TB a map-only scan of the candidate table)
+    against every other vector, as (qid, qe, qn, cid, ce, cn, dot, cos)."""
+    q = F.broadcast(
+        e.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
+        )
+    )
+    c = e.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
+    pairs = q.withColumn("qn", _norm(F.col("qe"))).crossJoin(
+        c.withColumn("cn", _norm(F.col("ce")))
+    )
+    return _with_cos(pairs, "qe", "qn", "ce", "cn").filter(
+        F.col("qid") != F.col("cid")
     )
 
 
@@ -1454,14 +1562,7 @@ def g03_simsearch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine scoring, threshold form (deterministic across
     engines — no top-k tie instability). Query side is broadcast: at
     100 TB this is a map-only scan of the candidate table."""
-    e = load(spark, sf_dir, "embeddings")
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-        )
-    )
-    c = e.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    scored = _with_cosine(q, c).filter(F.col("qid") != F.col("cid"))
+    scored = _query_scores(load(spark, sf_dir, "embeddings"))
     return scored.filter(F.col("cos") >= 0.2).select(
         "qid", "cid", duck_round("cos", 4).alias("cos_sim")
     )
@@ -1485,17 +1586,8 @@ def g03b_simsearch_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbors: both sides exclude NULL-cos pairs before ranking, so a
     zero-norm query returns no rows rather than a tie-broken list of
     meaningless matches (round-9 adversarial audit)."""
-    e = load(spark, sf_dir, "embeddings")
-    q = F.broadcast(
-        e.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
-        )
-    )
-    c = e.select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-    scored = (
-        _with_cosine(q, c)
-        .filter(F.col("qid") != F.col("cid"))
-        .filter(F.col("cos").isNotNull())
+    scored = _query_scores(load(spark, sf_dir, "embeddings")).filter(
+        F.col("cos").isNotNull()
     )
     w = Window.partitionBy("qid").orderBy(F.desc(duck_round("cos", 6)), F.asc("cid"))
     return (
@@ -1568,7 +1660,7 @@ def g03c_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = e.select(
         "vec_id",
         "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
+        _norm(F.col("embedding")).alias("norm"),
         lsh_buckets("embedding").alias("buckets"),
     )
     # Materialize the signature table ONCE (eager localCheckpoint — the
@@ -1628,13 +1720,8 @@ def g03c_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("ce"),
         F.col("norm").alias("cn"),
     )
-    scored = (
-        cands.join(q, "qid")
-        .join(c, "cid")
-        .withColumn("dot", _dot(F.col("qe"), F.col("ce")))
-        # zero-norm => NULL cosine (dropped by the threshold filter)
-        .withColumn("cos", F.try_divide(F.col("dot"), F.col("qn") * F.col("cn")))
-    )
+    # zero-norm => NULL cosine (dropped by the threshold filter)
+    scored = _with_cos(cands.join(q, "qid").join(c, "cid"), "qe", "qn", "ce", "cn")
     return scored.filter(F.col("cos") >= 0.2).select(
         "qid", "cid", duck_round("cos", 4).alias("cos_sim")
     )
@@ -1711,29 +1798,24 @@ def g03d_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pointer to g03c/g03e/g28 instead of melting the cluster on an
     O(N^2/10) pair scan."""
     e = load(spark, sf_dir, "embeddings")
-    v = e.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("norm"),
-    )
+    v = e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("norm"))
     in_anchor = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 2) < "1a"
     a, b = v.filter(in_anchor).alias("a"), v.alias("b")
     _g03d_guard_anchor_count(a)
-    # try_divide: zero-norm vectors have NULL cosine — dropped by the
-    # threshold filter on both engines (DuckDB x/0 is NULL).
-    cos = F.try_divide(F.col("dot"), F.col("a.norm") * F.col("b.norm"))
     # Broadcast the anchor side. NOTE: the anchor is ~10% of ALL
     # vectors — an O(N) broadcast scoring O(N^2/10) pairs — so this is
     # only valid at anchor/fixture scale, where it exists to measure
     # recall; the unbounded-scale paths are g03c/g03e (ADVICE r02).
+    # Zero-norm vectors have NULL cosine — dropped by the threshold
+    # filter on both engines (DuckDB x/0 is NULL).
+    pairs = b.join(F.broadcast(a), F.col("a.vec_id") < F.col("b.vec_id"))
     return (
-        b.join(F.broadcast(a), F.col("a.vec_id") < F.col("b.vec_id"))
-        .withColumn("dot", _dot(F.col("a.embedding"), F.col("b.embedding")))
-        .filter(cos >= 0.4)
+        _with_cos(pairs, "a.embedding", "a.norm", "b.embedding", "b.norm")
+        .filter(F.col("cos") >= 0.4)
         .select(
             F.col("a.vec_id").alias("d1"),
             F.col("b.vec_id").alias("d2"),
-            duck_round(cos, 4).alias("cos_sim"),
+            duck_round("cos", 4).alias("cos_sim"),
         )
     )
 
@@ -1745,12 +1827,16 @@ _IVF_NPROBE = 8
 
 
 def _ivf_codebook(cent: DataFrame):
-    """The codebook as ONE collected-struct row (k x 64 doubles),
+    """The `(list_id, c)` codebook as ONE collected-struct row,
     broadcast — the nested-loop join against it is a map-side widen,
     so centroid assignment never expands the vector table k-fold
-    across an exchange (round 17, guide §2.3/§2.4).  Same broadcast
-    bytes as the k-row form it replaces; assumes the codebook fits a
-    broadcast, which the k-row cross join assumed identically."""
+    across an exchange (round 17, guide §2.3/§2.4).
+
+    Bound: the row holds k x dim x 8 B.  At dim 64 it reaches the
+    100 MB `_BROADCAST_BYTES` budget near k ~ 2e5 centroids; g28 sizes
+    k ~ sqrt(N), so that is a ~4e10-vector corpus, and g03e/g13 use
+    fixed k = 32/10.  No reachable input needs a gate or a chunked
+    codebook, so there is none."""
     return F.broadcast(
         cent.groupBy().agg(
             F.collect_list(F.struct("list_id", "c")).alias("cents")
@@ -1758,17 +1844,18 @@ def _ivf_codebook(cent: DataFrame):
     )
 
 
-def _ivf_top_lists(k: int):
-    """Per-row nearest-k (sim, list_id) lists against the `cents`
-    codebook column, ordered (sim DESC, list_id ASC) — the exact
-    ordering of the row_number window this replaces.  The comparator
-    mirrors SQL double comparison semantics (NaN greatest, -0.0 ==
-    0.0); sims can never be -0.0 because the dot fold starts at +0.0
-    and IEEE addition of such operands never yields -0.0."""
+def _ivf_top_lists(k: int, score) -> Column:
+    """The one nearest-centroid assignment: per row, the top-k
+    (sim, list_id) entries against the `cents` codebook column, where
+    `sim = score(c)` for each centroid vector `c` and larger is
+    nearer.  Ordered (sim DESC, list_id ASC) — the exact ordering of a
+    row_number window, so equal scores go to the lowest list_id.  The
+    comparator mirrors SQL comparison semantics (NaN greatest, -0.0 ==
+    0.0); a score may be any orderable type (g13's is a struct)."""
     sims = F.transform(
         F.col("cents"),
         lambda s: F.struct(
-            _dot(F.col("u"), s["c"]).alias("sim"),
+            score(s["c"]).alias("sim"),
             s["list_id"].alias("list_id"),
         ),
     )
@@ -1792,12 +1879,11 @@ def g03e_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Build: codebook seeds are the 32 vectors whose md5(vec_id) digests
     sort first (the repo's deterministic-sample rule), refined by 2
-    Lloyd iterations on the unit sphere (assign by cosine via broadcast
-    join, recompute means via posexplode + groupBy, renormalize — the
-    g13 pattern). Each vector is indexed under its 2 nearest lists
-    (replication is the standard IVF recall lever when clusters
-    overlap, at the cost of a 2x index); each query probes its 8
-    nearest lists.
+    Lloyd iterations on the unit sphere (assign by cosine, recompute
+    means with `_mean_vectors`, renormalize). Each vector is indexed
+    under its 2 nearest lists (replication is the standard IVF recall
+    lever when clusters overlap, at the cost of a 2x index); each query
+    probes its 8 nearest lists.
 
     Measured recall@5 vs exact g03b at sf0.01: 0.86+ (floor 0.80 in
     tests/test_ann_recall.py). The synthetic embeddings have weak
@@ -1813,81 +1899,31 @@ def g03e_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint here truncates the Lloyd lineage so the search
     plan is scan + broadcast joins).
 
-    Round 17 (guide §2.3/§2.4 — aggregate before you shuffle; remove
-    shuffles outright): centroid assignment is MAP-ONLY.  The old form
-    cross-joined each vector against the k centroid ROWS (k x N
-    intermediate rows, each carrying the 64-double vector AND the
-    64-double centroid) and ranked them with a row_number window —
-    a full k x N x ~1 KB exchange + sort per Lloyd iteration and a
-    third for the search-side assignment.  Now the whole codebook
-    rides ONE collected-struct row (a 1-row broadcast nested-loop
-    join, k x 64 doubles ~ 16 KB), each vector computes its k sims
-    in-row with `transform` and takes its top lists with a comparator
-    `array_sort` over k elements — identical (sim DESC, list_id ASC)
-    order, zero exchange.  The only remaining build shuffle is the
-    per-(list, pos) mean recompute, which partial-aggregates map-side
-    to <= k x 64 rows per task.  Plan: 3 window exchanges + sorts
-    removed (plans/r17/g03e_simsearch_ivf_{before,after}.txt)."""
-    e = load(spark, sf_dir, "embeddings")
-    # Zero-norm vectors are unindexable (undefined direction — no unit
-    # normalization exists): exclude them up front instead of throwing
-    # DIVIDE_BY_ZERO mid-normalize (round-9 adversarial audit). The
-    # norm is computed once, not per element.
-    vn = (
-        e.select("vec_id", F.col("embedding").cast("array<double>").alias("ve"))
-        .withColumn("nrm", F.sqrt(_dot(F.col("ve"), F.col("ve"))))
-        .filter(F.col("nrm") > 0.0)
-        .select(
-            "vec_id",
-            F.transform(F.col("ve"), lambda x: x / F.col("nrm")).alias("u"),
-        )
-        # Materialized ONCE (round 17, guide §1/§5): the normalized
-        # working set feeds the seed TakeOrdered, every Lloyd
-        # iteration, and the search-side assignment — un-truncated,
-        # each of those re-ran the scan + normalize (measured ~1.2 s
-        # per pass of a 6-8 s query at sf0.1, paid 4x).  Persisting
-        # the working set across Lloyd rounds is the canonical
-        # k-means shape; at scale this is one corpus-sized local
-        # materialization versus iters+2 corpus re-scans.
-        .localCheckpoint(eager=True)
-    )
+    Round 17 (guide §2.3/§2.4): centroid assignment is MAP-ONLY —
+    the one-row codebook broadcast and an in-row top-list sort
+    (`_ivf_top_lists`) replaced a k x N cross join ranked by a
+    row_number window (3 window exchanges + sorts removed,
+    plans/r17/g03e_simsearch_ivf_{before,after}.txt).  The only
+    remaining build shuffle is the per-(list, pos) mean recompute,
+    which partial-aggregates map-side to <= k x 64 rows per task."""
+    # The unit-vector working set is materialized once (round 17,
+    # guide §1/§5): persisting it across Lloyd rounds is the canonical
+    # k-means shape; at scale this is one corpus-sized local
+    # materialization versus iters+2 corpus re-scans.
+    vn, _ = _unit_vectors(load(spark, sf_dir, "embeddings"))
+    cos_to = lambda c: _dot(F.col("u"), c)  # noqa: E731 — unit vectors
 
-    # --- build: digest-seeded codebook + Lloyd iterations ------------
-    seeds = (
-        vn.select(F.md5(F.col("vec_id").cast("string")).alias("dg"), "vec_id", "u")
-        .orderBy("dg", "vec_id")
-        .limit(_IVF_K)  # TakeOrdered — no global sort materialized
-    )
-    w_seed = Window.orderBy("dg", "vec_id")  # k rows — single partition fine
-    cent = seeds.select(
-        (F.row_number().over(w_seed) - 1).cast("long").alias("list_id"),
-        F.col("u").alias("c"),
-    )
-
+    # --- build: digest-seeded codebook + spherical Lloyd iterations ---
+    cent = _digest_seeds(vn, _IVF_K)
     for _ in range(_IVF_ITERS):
         assigned = vn.join(_ivf_codebook(cent)).select(
             "vec_id",
-            F.get(_ivf_top_lists(1), 0)["list_id"].alias("list_id"),
+            F.get(_ivf_top_lists(1, cos_to), 0)["list_id"].alias("list_id"),
             "u",
         )
-        cent = (
-            assigned.select("list_id", F.posexplode("u").alias("pos", "x"))
-            .groupBy("list_id", "pos")
-            .agg(F.avg("x").alias("m"))
-            .groupBy("list_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("raw")
-            )
-            .select(
-                "list_id",
-                F.transform(
-                    F.col("raw"),
-                    lambda x: x / F.sqrt(_dot(F.col("raw"), F.col("raw"))),
-                ).alias("c"),
-            )
+        cent = _mean_vectors(assigned, "list_id", "u").select(
+            "list_id",
+            F.transform(F.col("c"), lambda x: x / _norm(F.col("c"))).alias("c"),
         )
     # k x 64 artifact — JVM-side, no driver collect
     cent = cent.localCheckpoint(eager=True)
@@ -1897,7 +1933,7 @@ def g03e_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the index keeps the top nassign (a prefix of the same ordered
     # array), so no second assignment pass and no window exchange.
     ranked = vn.join(_ivf_codebook(cent)).withColumn(
-        "top", _ivf_top_lists(_IVF_NPROBE)
+        "top", _ivf_top_lists(_IVF_NPROBE, cos_to)
     )
     index = ranked.select(
         F.col("vec_id").alias("cid"),
@@ -2293,8 +2329,8 @@ def g12_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = src.select(F.col("doc_id").alias("d1"), F.col("source").alias("src1"))
     s2 = src.select(F.col("doc_id").alias("d2"), F.col("source").alias("src2"))
     return (
-        pairs.join(F.broadcast(s1), "d1")
-        .join(F.broadcast(s2), "d2")
+        pairs.join(s1, "d1")
+        .join(s2, "d2")
         .groupBy(
             F.least("src1", "src2").alias("source_a"),
             F.greatest("src1", "src2").alias("source_b"),
@@ -2308,11 +2344,14 @@ def g13_kmeans_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative algorithm representative: 2 Lloyd iterations of
     k-means over the embedding table (k = 10, deterministic init from
     the per-label means — no RNG). Each iteration: broadcast the
-    centroids, assign every vector to its nearest centroid by squared
-    L2 (sequential fold => deterministic), recompute means via
-    posexplode + groupBy. The input is persisted once and re-scanned
+    codebook as one row, assign every vector to its nearest centroid
+    by squared L2 (sequential fold => deterministic; the shared
+    top-list helper ranks by `_l2_score`, so ties go to the lowest
+    cluster id with no k x N window exchange), recompute means
+    with `_mean_vectors`. The input is persisted once and re-scanned
     from memory each iteration — the cache-for-iteration pattern every
-    iterative Spark algorithm needs (plan test pins InMemoryRelation).
+    iterative Spark algorithm needs (tests/test_plans.py pins the
+    InMemoryRelation and the absence of a Window).
 
     Rows-only tier: assignment boundaries sit on float comparisons, so
     cross-engine hashing is out by design (SURVEY §5.4 item 6); the
@@ -2325,52 +2364,22 @@ def g13_kmeans_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = e.persist()
     try:
         # deterministic init: per-label mean vectors (the g04 centroids)
-        init = (
-            load(spark, sf_dir, "embeddings")
-            .select("label", F.posexplode("embedding").alias("pos", "x"))
-            .groupBy("label", "pos")
-            .agg(F.avg(F.col("x").cast("double")).alias("m"))
-            .groupBy("label")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s["m"],
-                ).alias("c")
-            )
-            .select(F.col("label").cast("long").alias("cluster"), "c")
-        )
-        centroids = init
+        centroids = _mean_vectors(
+            load(spark, sf_dir, "embeddings"), "label", "embedding"
+        ).select(F.col("label").cast("long").alias("list_id"), "c")
+        l2_score = lambda c: _l2_score(F.col("v"), c)  # noqa: E731
         for _ in range(2):
-            dist = F.aggregate(
-                F.zip_with(F.col("v"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
+            assigned = e.join(_ivf_codebook(centroids)).select(
+                "vec_id",
+                F.get(_ivf_top_lists(1, l2_score), 0)["list_id"].alias("list_id"),
+                "v",
             )
-            w = Window.partitionBy("vec_id").orderBy("d2", "cluster")
-            assigned = (
-                e.join(F.broadcast(centroids))
-                .withColumn("d2", dist)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("vec_id", "cluster", "v")
-            )
-            centroids = (
-                assigned.select("cluster", F.posexplode("v").alias("pos", "x"))
-                .groupBy("cluster", "pos")
-                .agg(F.avg("x").alias("m"))
-                .groupBy("cluster")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                        lambda s: s["m"],
-                    ).alias("c")
-                )
-            )
-        counts = assigned.groupBy("cluster").agg(F.count(F.lit(1)).alias("n_members"))
+            centroids = _mean_vectors(assigned, "list_id", "v")
+        counts = assigned.groupBy("list_id").agg(F.count(F.lit(1)).alias("n_members"))
         out = (
-            centroids.join(counts, "cluster")
+            centroids.join(counts, "list_id")
             .select(
-                "cluster",
+                F.col("list_id").alias("cluster"),
                 "n_members",
                 F.posexplode(
                     F.transform(F.col("c"), lambda x: duck_round(x, 4))
@@ -2746,7 +2755,7 @@ def g21_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("embedding").cast("array<double>").alias("v"),
     )
-    e = e.withColumn("norm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    e = e.withColumn("norm", _norm(F.col("v")))
     # Join-strategy pick for the two embedding lookups (round 16,
     # measured at the 10x replica): the text-pair stream is tens of
     # millions of rows while the embedding table read 10.7 MB there,
@@ -2786,17 +2795,15 @@ def g21_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # core's concern (r16/r17 probe-side spreads), not a per-caller
     # repartition.
     ea, eb2 = eb.alias("ea"), eb.alias("eb2")
-    # try_divide: a zero-norm embedding aligned to a text-flagged pair
-    # must yield NULL cosine (agreement impossible), not an ANSI throw.
-    cos = F.try_divide(
-        F.col("dot"), F.col("ea.norm") * F.col("eb2.norm")
+    # A zero-norm embedding aligned to a text-flagged pair yields NULL
+    # cosine (agreement impossible), not an ANSI throw.
+    pairs = text_pairs.join(ea, F.col("d1") == F.col("ea.vec_id")).join(
+        eb2, F.col("d2") == F.col("eb2.vec_id")
     )
     return (
-        text_pairs.join(ea, F.col("d1") == F.col("ea.vec_id"))
-        .join(eb2, F.col("d2") == F.col("eb2.vec_id"))
-        .withColumn("dot", _dot(F.col("ea.v"), F.col("eb2.v")))
-        .filter(cos >= 0.4)
-        .select("d1", "d2", "jaccard", duck_round(cos, 4).alias("cos_sim"))
+        _with_cos(pairs, "ea.v", "ea.norm", "eb2.v", "eb2.norm")
+        .filter(F.col("cos") >= 0.4)
+        .select("d1", "d2", "jaccard", duck_round("cos", 4).alias("cos_sim"))
     )
 
 
@@ -3340,12 +3347,12 @@ def g28_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation -> in-bucket exact cosine edges (>= 0.4, the
     corpus's g03d near-dup threshold) -> connected components ->
     keep-min representative per cluster. This composes the engine's two
-    scale primitives — g03e's coarse quantizer (digest-seeded k=16
-    codebook, nassign=2 multi-assignment so boundary-straddling pairs
-    share a bucket) and g26's pointer-doubling min-label components —
-    into the operator a training pipeline actually runs: "drop
-    embedding-level duplicates, keep one representative per semantic
-    cluster".
+    scale primitives — g03e's coarse quantizer (digest-seeded codebook
+    of k = max(16, floor(sqrt(n))) lists, nassign=2 multi-assignment so
+    boundary-straddling pairs share a bucket) and g26's pointer-doubling
+    min-label components — into the operator a training pipeline
+    actually runs: "drop embedding-level duplicates, keep one
+    representative per semantic cluster".
 
     Approximate by construction (a cross-bucket pair under nassign=2
     can be missed) => rows-only tier; the exact twin g03d + g26 carry
@@ -3358,28 +3365,11 @@ def g28_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     N^2 — with k ~ sqrt(N) lists this is the standard IVF dedup
     posture; components run on the edge set only (pairs, not corpus),
     and the codebook is a broadcast k x 64 artifact."""
-    e = load(spark, sf_dir, "embeddings")
-    # Zero-norm vectors are unindexable and have undefined cosine to
-    # everything — they can never be semantic duplicates; exclude them
-    # up front (round-9 adversarial audit; same rule as g03e).
-    # Materialized ONCE with the vector count riding the checkpoint
-    # job as an observed metric (round 17, the _mask_groups template):
-    # the working set feeds the k sizing, the seed TakeOrdered, the
-    # assignment, and the singleton anti-join — un-truncated, each
-    # re-ran the scan + normalize, and the k sizing was its own
-    # count() job besides.
-    obs_n = Observation()
-    vn = (
-        e.select("vec_id", F.col("embedding").cast("array<double>").alias("ve"))
-        .withColumn("nrm", F.sqrt(_dot(F.col("ve"), F.col("ve"))))
-        .filter(F.col("nrm") > 0.0)
-        .select(
-            "vec_id",
-            F.transform(F.col("ve"), lambda x: x / F.col("nrm")).alias("u"),
-        )
-        .observe(obs_n, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
+    # Zero-norm vectors can never be semantic duplicates (same rule as
+    # g03e).  The working set feeds the k sizing, the seeds, the
+    # assignment and the singleton anti-join; the count that sizes k
+    # rides its checkpoint job (round 17, the _mask_groups template).
+    vn, n = _unit_vectors(load(spark, sf_dir, "embeddings"))
     # nlist ~ sqrt(N) (floor 16): the standard IVF sizing — with a
     # FIXED codebook, bucket occupancy grows linearly with the corpus
     # and the in-bucket exact-cosine stage goes quadratic (the round-12
@@ -3387,17 +3377,9 @@ def g28_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sqrt(N) keeps sum(|bucket|^2) ~ N^1.5 / ... ~ linear-ish in N).
     # One observed scalar — the same plan-constant precedent as the
     # vocab/anchor/idf counts.
-    k = max(16, math.isqrt(max(int(obs_n.get["n"] or 0), 1)))
-    seeds = (
-        vn.select(F.md5(F.col("vec_id").cast("string")).alias("dg"), "vec_id", "u")
-        .orderBy("dg", "vec_id")
-        .limit(k)
-    )
-    w_seed = Window.orderBy("dg", "vec_id")  # k rows — single partition fine
-    cent = seeds.select(
-        (F.row_number().over(w_seed) - 1).cast("long").alias("list_id"),
-        F.col("u").alias("c"),
-    ).localCheckpoint(eager=True)
+    k = max(16, math.isqrt(max(n, 1)))
+    # The seeds are not checkpointed: their only consumer is the
+    # assignment below, which is.
 
     # Staged once (eager localCheckpoint): the assignment subplan feeds
     # BOTH sides of the in-bucket self-join and the components helper's
@@ -3409,16 +3391,16 @@ def g28_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sqrt(N) codebook rides one collected-struct broadcast row and
     # each vector takes its top-2 lists with an in-row comparator sort
     # (_ivf_top_lists), replacing the k x N row_number window whose
-    # exchange carried the 64-double vector k-fold (at sf0.1: k=179,
-    # a ~5.7M-row x ~0.5 KB sort+shuffle; identical (sim DESC, list_id
-    # ASC) order by construction).
+    # exchange carried the 64-double vector k-fold (at sf0.1: n=2,000,
+    # k=44, an ~88k-row x ~0.5 KB sort+shuffle; identical (sim DESC,
+    # list_id ASC) order by construction).
     assigned = (
-        vn.join(_ivf_codebook(cent))
+        vn.join(_ivf_codebook(_digest_seeds(vn, k)))
         .select(
             "vec_id",
             "u",
             # nassign=2: boundary pairs share a bucket
-            F.explode(_ivf_top_lists(2)).alias("t"),
+            F.explode(_ivf_top_lists(2, lambda c: _dot(F.col("u"), c))).alias("t"),
         )
         .select(F.col("t.list_id").alias("list_id"), "vec_id", "u")
         .localCheckpoint(eager=True)

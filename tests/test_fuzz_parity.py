@@ -1934,6 +1934,7 @@ def test_fuzz_vector_math(spark, fuzz_duck, rows):
     g03c g03d g03e g21 g28) is built on, on hostile vectors: zero-norm,
     NULL, sign-flipped cancellation-heavy, 1e-100..1e100 magnitudes.
 
+    Drives the vector core the queries run (`_norm`, `_with_cos`).
     Compared EXACTLY (raw doubles, no rounding): the engine's `_dot`
     is a sequential left-fold precisely so its IEEE op order equals
     DuckDB's list_inner_product — this property is the randomized
@@ -1942,7 +1943,7 @@ def test_fuzz_vector_math(spark, fuzz_duck, rows):
     x/0 => NULL, the zero-norm contract of the round-9 adversarial
     audit; the domain is bounded at 1e100 so no intermediate reaches
     inf on either engine."""
-    from data_lake_staging_engine_spark.operators.llmops import _dot
+    from data_lake_staging_engine_spark.operators.llmops import _norm, _with_cos
 
     ids = list(range(len(rows)))
     df = _both_tables(
@@ -1964,13 +1965,11 @@ def test_fuzz_vector_math(spark, fuzz_duck, rows):
             ),
         ],
     )
-    na = F.sqrt(_dot(F.col("a"), F.col("a")))
-    nb = F.sqrt(_dot(F.col("b"), F.col("b")))
-    out = df.select(
-        "id",
-        _dot(F.col("a"), F.col("b")).alias("dot"),
-        na.alias("norm_a"),
-        F.try_divide(_dot(F.col("a"), F.col("b")), na * nb).alias("cos"),
+    normed = df.withColumn("norm_a", _norm(F.col("a"))).withColumn(
+        "norm_b", _norm(F.col("b"))
+    )
+    out = _with_cos(normed, "a", "norm_a", "b", "norm_b").select(
+        "id", "dot", "norm_a", "cos"
     )
     _check(
         "vector_math",

@@ -538,3 +538,23 @@ def test_simsearch_lsh_signatures_materialized_once(spark, sf_dir):
     plan = physical_plan(_REG["g03c_simsearch_lsh"].fn(spark, sf_dir))
     assert plan.count("embeddings.parquet") <= 2, plan.count("embeddings.parquet")
     assert plan.count("hashpartitioning(") <= 2, plan.count("hashpartitioning(")
+
+
+def test_kmeans_iterates_over_cache_without_window(spark, sf_dir, monkeypatch):
+    """g13: the Lloyd iterations read the persisted embedding table
+    (InMemoryRelation), and assignment is the one-row codebook top-list
+    — no k x N row_number Window.  g13 returns a local checkpoint, so
+    the plan is taken from the frame it checkpoints."""
+    cls = type(spark.range(1))
+    seen = []
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        seen.append(physical_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    _REG["g13_kmeans_iterations"].fn(spark, sf_dir)
+    assert len(seen) == 1, len(seen)
+    assert "InMemoryRelation" in seen[0], seen[0]
+    assert "Window" not in seen[0], seen[0]
