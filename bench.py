@@ -10,6 +10,10 @@ Prints exactly ONE JSON line:
 ``value`` is the full current headline (22 queries); ``original17_total``
 is the round-1-comparable subset's subtotal, so the 35.3 s baseline gate
 reads off one number with no per-query subtraction (VERDICT r06 #3).
+Additions-only context keys ride alongside: the host load and CPU
+steal, per-query GC time, and ``spark.master`` / ``defaultParallelism``
+(the cores the run actually had, so runs on different hosts are not
+compared blind).
 
 Materialization uses the noop sink (full execution, no write cost, no
 driver collect bottleneck). A warm-up query runs first so JVM/codegen
@@ -256,6 +260,8 @@ def main() -> None:
                 "load_1m_end": round(os.getloadavg()[0], 2),
                 "cpu_steal_pct": steal_pct,
                 "queries_gc_ms": gc_ms,
+                "spark.master": spark.sparkContext.master,
+                "defaultParallelism": spark.sparkContext.defaultParallelism,
             }
         )
     )

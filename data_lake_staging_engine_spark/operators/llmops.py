@@ -14,11 +14,13 @@ Scale design notes:
   `_mask_groups`: multi-word token bitmaps, one checkpointed min-doc_id
   representative per DISTINCT set, and the single popcount Jaccard
   that every candidate generator (all-pairs, prefix join, MinHash
-  banding, the g32 band-index probe) is verified with.  Open universes
-  use the AllPairs-style prefix-filtered token join.  Pair consumers
-  call `_jaccard_pairs`; rep-space consumers (g26, g30) call
-  `_near_rep_pairs`, which on open vocabularies returns the lazy
-  token-join doc pairs and no group map.
+  banding, the g32 band-index probe) is verified with.  The band-index
+  probe verifies inside its (band, sig) join, against one carrier per
+  candidate mask group, so its candidates never form a frame of their
+  own.  Open universes use the AllPairs-style prefix-filtered token
+  join.  Pair consumers call `_jaccard_pairs`; rep-space consumers
+  (g26, g30) call `_near_rep_pairs`, which on open vocabularies
+  returns the lazy token-join doc pairs and no group map.
 - Broadcast vs shuffle: every size-gated join of the dedup family asks
   `_fits_broadcast` (observed rows x `row_bytes` of the broadcast side
   against one `_BROADCAST_BYTES`); sides bounded by construction (the
@@ -1462,7 +1464,13 @@ def _unit_vectors(e: DataFrame) -> tuple[DataFrame, int]:
     Zero-norm and NULL vectors are unindexable (undefined direction —
     no unit normalization exists) and have undefined cosine to
     everything: they are dropped up front instead of throwing
-    DIVIDE_BY_ZERO mid-normalize (round-9 adversarial audit).  The norm
+    DIVIDE_BY_ZERO mid-normalize (round-9 adversarial audit).  So are
+    vectors with a NaN or infinite norm (a non-finite component, or an
+    overflowing sum of squares): normalized, they turn into NaN
+    components, whose NaN cosine ranks first under the top lists'
+    NaN-greatest order and captures every vector.  Only a finite,
+    positive norm passes (NaN sorts above +inf in Spark, so the upper
+    bound drops it too).  The norm
     is computed once per vector, not per element.  The working set
     feeds the seed TakeOrdered, every Lloyd iteration and the
     assignment; un-truncated, each of those re-ran the scan + normalize
@@ -1473,7 +1481,7 @@ def _unit_vectors(e: DataFrame) -> tuple[DataFrame, int]:
     vn = (
         e.select("vec_id", F.col("embedding").cast("array<double>").alias("ve"))
         .withColumn("nrm", _norm(F.col("ve")))
-        .filter(F.col("nrm") > 0.0)
+        .filter((F.col("nrm") > 0.0) & (F.col("nrm") < float("inf")))
         .select(
             "vec_id",
             F.transform(F.col("ve"), lambda x: x / F.col("nrm")).alias("u"),
@@ -3774,10 +3782,13 @@ class BandSignatureIndex:
 
     At 100 TB the index is ~bands rows of 24 bytes per document —
     three orders of magnitude smaller than the text it summarizes
-    (measured ratio in BASELINE.md r14) — and the probe join
-    broadcasts the batch's signatures over the index scan, so probe
-    cost is one index scan + a candidate-bounded verify, never a
-    corpus re-scan."""
+    (measured ratio in BASELINE.md r14).  The batch is never checked
+    against the corpus TEXT at large: its signatures are broadcast into
+    a semi-join over the index to find the candidate corpus docs, only
+    those docs' text is tokenized, and the exact verify runs inside a
+    second index scan's (band, sig) join.  The candidate docs are not
+    batch-bounded, though: a batch of common bucket keys collides with
+    most of the corpus, and the probe then tokenizes most of it."""
 
     def __init__(self, root: str, spark: SparkSession | None = None) -> None:
         from data_lake_staging_engine_spark.versioning import VersionedTable
@@ -3866,15 +3877,9 @@ def _probe_rep_space(
     g: _MaskGroups,
     threshold: float,
 ) -> DataFrame:
-    """Rep-space band probe (round 15): per-batch-doc (d1, near_m =
-    MIN matching corpus id) computed WITHOUT ever materializing
-    candidate doc pairs.
-
-    Why: banding buckets template corpora hard — the 10x replica puts
-    93% of its 15.6M candidate-pair mass in ~60 buckets of ~2k docs
-    with IDENTICAL token sets, so the doc-pair candidate frame this
-    replaces cost more to shuffle/checkpoint than the rest of the
-    probe combined (~25 s of a 36 s probe).
+    """Rep-space band probe: per-batch-doc (d1, near_m = MIN matching
+    corpus id), with the exact popcount verify inside the (band, sig)
+    join, so no candidate pair is ever materialized.
 
     The closure property that makes this exact: on this branch the
     vocab from ``_bitmap_vocab`` is the COMPLETE distinct token set,
@@ -3882,63 +3887,54 @@ def _probe_rep_space(
     are a pure function of the token set — every doc in a distinct-
     mask group carries identical (band, sig) rows, so the group is
     candidate-to-a-batch-doc as a UNIT, its Jaccard against any mask
-    is one popcount, and the min corpus member answers match_id.
-    Candidate generation therefore joins the batch's signatures
-    against ONE carrier per group (its min corpus member, whose index
-    rows stand for all), collapsing the mega-bucket pair explosion to
-    O(batch x distinct masks per bucket).  Exactly the
-    ``_g02_bitmask`` representative discipline, applied to the
-    probe's asymmetric batch-vs-corpus shape.
+    is one popcount, and the min corpus member answers match_id.  So
+    the index side of the join is ONE carrier per candidate group: its
+    min corpus member (the key into the index, and the answer) with
+    the group's mask words.  The batch side is the batch's signatures
+    with their own mask words (batch x bands rows).  Each collision is
+    verified in the join condition and the min aggregate reads the
+    survivors directly: a pair that collides in k bands is verified k
+    times and the min absorbs the repeats (the same argument
+    ``_minhash_lsh_candidates`` rests on).
 
-    Every join side here is O(batch + candidate docs) and broadcast
-    explicitly — the checkpointed inputs carry no stats for the
-    optimizer to find that itself (AQE would recover it at runtime;
-    the hint makes the 100 TB plan shape static)."""
-    # Corpus candidates per distinct-mask group; the MIN member is
-    # both the match_id answer and the signature carrier.  (The rep
-    # itself may be a BATCH doc — same mask, same sigs, but absent
-    # from the index — hence the explicit corpus-side carrier.)
-    # Round 17 negative result (measured, reverted — VERDICT r16 #3
-    # job audit): grp feeds TWO broadcast builds (carrier signatures
-    # and the final min_d2 answer join), so an eager localCheckpoint
-    # looked like a free dedup of its semi-join + aggregate lineage.
-    # Measured at sf0.1: jobs 34 -> 35 and warm probe 4.2-5.2 s ->
-    # 5.3-7.1 s — the checkpoint is a synchronous barrier on the
-    # critical path, while the duplicate lineage runs are tiny
-    # broadcast builds AQE executes off it.  Leave grp lazy.
-    grp = (
-        g.d2r.join(F.broadcast(cand_ids), "doc_id", "left_semi")
-        .groupBy("rep")
-        .agg(F.min("doc_id").alias("min_d2"))
+    Why carriers: banding buckets template corpora hard — the 10x
+    replica puts 93% of its 15.6M candidate-pair mass in ~60 buckets
+    of ~2k docs with IDENTICAL token sets, which one carrier per group
+    collapses.  Why verify in the join: even in rep space the band
+    join's output is almost all misses — on perfbench ``analytics``'
+    first batch (seed 1: 750 batch docs, 9,698 carriers) it emits
+    1,988,574 rows, 1,169,487 distinct (d1, group) pairs, for 576
+    near batch docs — so no exchange or broadcast may sit between the
+    join and the verify.  The carriers are broadcast while they fit
+    (``_fits_broadcast`` on the observed rep count, an upper bound of
+    the groups); the batch-sized sides are broadcast unconditionally,
+    because the checkpointed inputs carry no stats for the optimizer
+    to size them itself."""
+    # Leave the carriers lazy: an eager localCheckpoint of this
+    # semi-join + aggregate (measured in round 17 at sf0.1 when it fed
+    # two broadcast builds: jobs 34 -> 35, warm probe 4.2-5.2 s ->
+    # 5.3-7.1 s) is a synchronous barrier on the critical path.
+    carriers = (
+        g.d2r.join(cand_ids, "doc_id", "left_semi")
+        .groupBy(*g.cols("b"))
+        .agg(F.min("doc_id").alias("doc_id"))
     )
-    carrier_sigs = index.join(
-        F.broadcast(grp.select(F.col("min_d2").alias("doc_id"), "rep")),
-        "doc_id",
-    ).select("rep", "band", "sig")
-    rep_cands = (
-        probe_sigs.alias("p")
-        .join(carrier_sigs.alias("cs"), ["band", "sig"])
-        .select(F.col("p.doc_id").alias("d1"), F.col("cs.rep").alias("r2"))
-        .distinct()
+    if _fits_broadcast(carriers, g.n_reps):
+        carriers = F.broadcast(carriers)
+    carrier_sigs = index.join(carriers, "doc_id").alias("c")
+    batch = (
+        F.broadcast(probe_sigs)
+        .join(g.d2r.select("doc_id", *g.cols("a")), "doc_id")
+        .withColumnRenamed("doc_id", "d1")
+        .alias("p")
     )
-    # m1 reads the CHECKPOINTED frame (round 17) — the raw masks
-    # lineage it read before re-ran the tokenize+aggregate pipeline
-    # for the verify side.
-    m1 = g.d2r.select(F.col("doc_id").alias("d1"), *g.cols("a"))
-    qual = (
-        F.broadcast(rep_cands)
-        .join(m1, "d1")
-        .join(F.broadcast(g.rm("b")), "r2")
-        .filter(g.jac >= threshold)
-        .select("d1", "r2")
+    verified = carrier_sigs.join(
+        F.broadcast(batch),
+        (F.col("p.band") == F.col("c.band"))
+        & (F.col("p.sig") == F.col("c.sig"))
+        & (g.jac >= threshold),
     )
-    return (
-        qual.join(
-            F.broadcast(grp.withColumnRenamed("rep", "r2")), "r2"
-        )
-        .groupBy("d1")
-        .agg(F.min("min_d2").alias("near_m"))
-    )
+    return verified.groupBy("d1").agg(F.min("c.doc_id").alias("near_m"))
 
 
 def incremental_band_probe(
@@ -3957,12 +3953,13 @@ def incremental_band_probe(
     computes only its OWN signatures and probes the index by (band,
     sig), and the surviving candidates get the exact Jaccard verify —
     with the corpus side RESTRICTED by a semi-join to candidate-
-    matched docs, so per-batch cost is O(batch + candidates), never a
-    corpus re-scan.  On the bitmap branch the whole pipeline runs in
-    REP SPACE (``_probe_rep_space``): candidate discovery, verify, and
-    the min-match aggregate all operate on distinct-token-set
-    representatives, never materializing candidate doc pairs — at the
-    10x replica this took the stored-index probe from 36 s to ~4-8 s
+    matched docs, so the text work is O(batch + candidate docs); the
+    candidate docs can be most of the corpus when the batch's bucket
+    keys are common.  On the bitmap branch the verify runs in REP
+    SPACE (``_probe_rep_space``): one carrier per distinct token set,
+    verified inside the (band, sig) join and min-aggregated straight
+    to the answer, never materializing candidate pairs — at the 10x
+    replica rep space took the stored-index probe from 36 s to ~4-8 s
     by collapsing the 15.6M-pair mega-bucket explosion (BASELINE.md
     r15).
 
@@ -4014,7 +4011,7 @@ def incremental_band_probe(
             _tokens(corpus), n_hashes=n_hashes, bands=bands
         ).localCheckpoint(eager=True)
     # Batch signatures, banded ONCE (eager: they feed candidate-id
-    # discovery and the rep-space candidate join).
+    # discovery and the rep-space verify join).
     probe_sigs = _band_signatures(
         new_toks, n_hashes=n_hashes, bands=bands
     ).localCheckpoint(eager=True)
@@ -4022,7 +4019,9 @@ def incremental_band_probe(
     # a semi-join of the index against the batch's distinct bucket
     # keys emits each candidate corpus row at most once — the doc-pair
     # join this replaces exploded mega-buckets into 15.6M pairs at the
-    # 10x replica before ever producing the same id set.
+    # 10x replica before ever producing the same id set.  The id count
+    # rides the checkpoint job as an observed metric.
+    obs_cands = Observation()
     cand_ids = (
         index.join(
             F.broadcast(probe_sigs.select("band", "sig").distinct()),
@@ -4031,28 +4030,33 @@ def incremental_band_probe(
         )
         .select("doc_id")
         .distinct()
+        .observe(obs_cands, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
+    # The ids feed two semi-joins (the corpus slice below and the
+    # rep-space carriers).  They are NOT batch-bounded: a batch whose
+    # bucket keys are common collides with most of the corpus (12,344
+    # of 12,750 corpus docs on perfbench ``analytics``' first batch),
+    # so the hint is decided by the observed count like every other
+    # gated side.
+    if _fits_broadcast(cand_ids, int(obs_cands.get["n"] or 0)):
+        cand_ids = F.broadcast(cand_ids)
     # Exact verify over the union of the batch and the CANDIDATE-
     # MATCHED corpus slice (both sides' token sets are needed, but
     # only for docs the probe bucketed with the batch) — the semi-join
-    # is what keeps post-index work off the full corpus.  The id list
-    # is explicitly broadcast: it is O(batch)-bounded by the probe
-    # contract, and the checkpointed frame carries no stats for the
-    # optimizer to discover that itself (AQE would recover it at
-    # runtime; the hint makes the 100 TB plan shape static).
+    # is what keeps post-index work off the corpus's non-candidates.
     corpus_hit = corpus.select("doc_id", "text").join(
-        F.broadcast(cand_ids), "doc_id", "left_semi"
+        cand_ids, "doc_id", "left_semi"
     )
     alldocs = newdocs.select("doc_id", "text").unionByName(corpus_hit)
     toks = _tokens(alldocs)
     hit = _bitmap_vocab(toks, probe=_tokens_raw(alldocs))
     if hit is not None:
         vocab, vocab_n = hit
-        # Rep-space probe (round 15): candidates against one carrier
-        # per distinct mask, one popcount per (batch doc, mask) pair,
-        # min-aggregated straight to the per-batch-doc answer — no
-        # doc-pair frame anywhere.
+        # Rep-space probe: the popcount verify runs inside the (band,
+        # sig) join against one carrier per distinct mask, and the
+        # survivors are min-aggregated straight to the per-batch-doc
+        # answer — no candidate-pair frame anywhere.
         near = _probe_rep_space(
             probe_sigs, index, cand_ids,
             _mask_groups(toks, vocab_n, vocab=vocab), threshold,

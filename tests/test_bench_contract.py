@@ -43,3 +43,6 @@ def test_bench_prints_one_json_line():
     # The round-1-comparable subtotal must be present and consistent
     # with (i.e. bounded by) the full headline total.
     assert 0 < payload["original17_total"] <= payload["value"]
+    # the core count the run actually had, as SPARK_GRAFT_CPUS asked
+    assert payload["spark.master"] == "local[8]"
+    assert payload["defaultParallelism"] == 8

@@ -97,8 +97,10 @@ def test_fits_broadcast_is_inclusive_at_the_budget(monkeypatch):
 
 
 # Hinted broadcasts the rule does not decide, so they stay in the final
-# plan at a zero budget: g30's two batch-id frames.  g12's label sides
-# carry no hint (one row per document), so Spark's estimate decides.
+# plan at a zero budget: g30's two batch-id frames, and g32's two
+# batch-sized probe sides (the batch signatures, and the batch side of
+# the verifying band join).  g12's label sides carry no hint (one row
+# per document), so Spark's estimate decides.
 _UNGATED = {
     "g02_dedup_near": 0,
     "g02b_dedup_lsh": 0,
@@ -107,10 +109,11 @@ _UNGATED = {
     "g21_dedup_agreement": 0,
     "g26_dedup_clusters": 0,
     "g30_dedup_incremental": 2,
+    "g32_dedup_band_probe": 2,
 }
 
 
-@pytest.mark.slow  # ~90 s for the seven queries, twice each
+@pytest.mark.slow  # ~100 s for the eight queries, twice each
 @pytest.mark.parametrize("name", sorted(_UNGATED))
 def test_zero_budget_fallbacks_keep_rows(spark, sf_dir, monkeypatch, name):
     """At ``_BROADCAST_BYTES = 0`` every gated join takes its shuffle

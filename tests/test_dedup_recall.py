@@ -109,6 +109,82 @@ def test_g32_band_probe_agrees_with_exact_incremental(spark, sf_dir):
     assert r >= 0.90, f"g32 probe recall vs exact incremental fell to {r:.4f}"
 
 
+_PROBE_REFERENCE_SQL = """
+WITH toks AS (
+  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
+),
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
+cands AS (
+  SELECT DISTINCT b.doc_id AS d1, i.doc_id AS d2
+  FROM batch_sigs b JOIN index_sigs i USING (band, sig)
+),
+shared AS (
+  SELECT c.d1, c.d2, COUNT(*) AS s
+  FROM cands c
+  JOIN toks t1 ON t1.doc_id = c.d1
+  JOIN toks t2 ON t2.doc_id = c.d2 AND t2.tok = t1.tok
+  GROUP BY 1, 2
+),
+near AS (
+  SELECT d1, MIN(d2) AS m
+  FROM shared JOIN sizes s1 ON s1.doc_id = d1 JOIN sizes s2 ON s2.doc_id = d2
+  WHERE s::DOUBLE / (s1.n + s2.n - s)::DOUBLE >= 0.8
+  GROUP BY d1
+)
+SELECT d.doc_id,
+       CASE WHEN near.m IS NULL THEN 'unique' ELSE 'near' END AS verdict,
+       near.m AS match_id
+FROM documents d LEFT JOIN near ON near.d1 = d.doc_id
+WHERE d.doc_id % 7 = 0
+"""
+
+
+def test_g32_band_probe_matches_duckdb_reference(spark, sf_dir, tmp_path):
+    """The index probe against a doc-space answer computed without the
+    engine's verify: per batch doc, the min corpus doc that shares a
+    stored (band, sig) with it and has token-set Jaccard >= 0.8,
+    computed in DuckDB from the stored index and Spark's signatures of
+    the batch.  Pins the probe's candidate set and its rep-space
+    verify exactly, where the test above only bounds recall."""
+    from pyspark.sql import functions as F
+
+    from data_lake_staging_engine_spark.operators.llmops import (
+        BandSignatureIndex,
+        _band_signatures,
+        _tokens,
+        incremental_band_probe,
+    )
+    from data_lake_staging_engine_spark.sources import load
+    from data_lake_staging_engine_spark.testing import duck_connection
+
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    newdocs = d.filter(F.col("doc_id") % 7 == 0)
+    corpus = d.filter(F.col("doc_id") % 7 != 0)
+    root = str(tmp_path / "bandidx")
+    store = BandSignatureIndex(root, spark)
+    store.build(corpus)
+    n_hashes, bands = store.params()
+    index_sigs = store.signatures(spark).toArrow()
+    batch_sigs = _band_signatures(
+        _tokens(newdocs), n_hashes=n_hashes, bands=bands
+    ).toArrow()
+    con = duck_connection(sf_dir)
+    try:
+        con.register("index_sigs", index_sigs)
+        con.register("batch_sigs", batch_sigs)
+        want = sorted(con.execute(_PROBE_REFERENCE_SQL).fetchall())
+    finally:
+        con.close()
+    got = sorted(
+        (r["doc_id"], r["verdict"], r["match_id"])
+        for r in incremental_band_probe(
+            newdocs, corpus, index_path=root
+        ).collect()
+    )
+    assert any(v == "near" for _, v, _ in want)  # not vacuous
+    assert got == want
+
+
 def test_banding_recall_under_duplicate_storm(spark, tmp_path):
     """The 10x replica's Caesar vocabulary keeps cross-copy near-dups
     away BY DESIGN, so it cannot probe the regime banding exists for:

@@ -4,6 +4,8 @@ engine claims — pushdown, pruning, broadcast, map-side combine, codegen
 regress. Correctness tests prove the small-SF answer; these prove the
 plan still holds at 1000 executors."""
 
+import re
+
 from data_lake_staging_engine_spark.plans.inspect import (
     codegen_ids,
     join_kinds,
@@ -558,3 +560,24 @@ def test_kmeans_iterates_over_cache_without_window(spark, sf_dir, monkeypatch):
     assert len(seen) == 1, len(seen)
     assert "InMemoryRelation" in seen[0], seen[0]
     assert "Window" not in seen[0], seen[0]
+
+
+def test_band_probe_verifies_inside_the_band_join(spark, sf_dir):
+    """g32: the popcount verify is the (band, sig) join's own condition,
+    so no candidate-pair frame exists — no aggregate keyed on (batch
+    doc, candidate), and no exchange between the band join and the
+    verify."""
+    df = _REG["g32_dedup_band_probe"].fn(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].splitlines()  # final plan
+    for line in lines:
+        m = re.search(r"HashAggregate\(keys=\[([^\]]*)\]", line)
+        if m and "d1#" in m.group(1):
+            assert m.group(1).count("#") == 1, line
+    band_joins = [
+        line for line in lines if re.search(r"Join \[band#\d+, sig#\d+L?\]", line)
+    ]
+    assert band_joins, plan
+    for line in band_joins:
+        assert "bit_count(" in line, line

@@ -17,8 +17,17 @@ from data_lake_staging_engine_spark.operators.llmops import (
 
 
 def test_unit_vectors_drop_zero_norm_and_null(spark):
+    """Only finite, positive norms survive.  A NaN component gives a NaN
+    norm and an Inf component an infinite one; both pass `> 0`."""
     e = spark.createDataFrame(
-        [(0, [3.0, 4.0]), (1, [0.0, 0.0]), (2, None), (3, [0.0, -2.0])],
+        [
+            (0, [3.0, 4.0]),
+            (1, [0.0, 0.0]),
+            (2, None),
+            (3, [0.0, -2.0]),
+            (4, [float("nan"), 1.0]),
+            (5, [float("inf"), 0.0]),
+        ],
         "vec_id long, embedding array<float>",
     )
     vn, n = _unit_vectors(e)
