@@ -22,6 +22,19 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 
+def drop_managed_table(spark: SparkSession, table: str) -> None:
+    """Drop ``table`` and its warehouse directory.  A fresh (in-memory)
+    metastore doesn't know about tables from a previous process, but
+    their warehouse directories survive and block CREATE — so drop
+    both, like the reference's idempotent create-or-update Glue
+    sync."""
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    path = os.path.join(warehouse.removeprefix("file:"), table)
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+
+
 class CatalogSync:
     """Register a staged DataFrame/location as a queryable table."""
 
@@ -37,16 +50,7 @@ class SessionCatalogSync(CatalogSync):
     implementation — the tested code path."""
 
     def sync_table(self, df, table, partition_cols=None):
-        spark = df.sparkSession
-        # A fresh (in-memory) metastore doesn't know about tables from a
-        # previous process, but their warehouse directories survive and
-        # block CREATE — drop both, like the reference's idempotent
-        # create-or-update Glue sync.
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        path = os.path.join(warehouse.removeprefix("file:"), table)
-        if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
+        drop_managed_table(df.sparkSession, table)
         writer = df.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
@@ -54,9 +58,6 @@ class SessionCatalogSync(CatalogSync):
 
     def read_table(self, spark, table):
         return spark.table(table)
-
-    def drop_table(self, spark: SparkSession, table: str) -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 class GlueBoto3CatalogSync(CatalogSync):

@@ -15,12 +15,15 @@ Scale design notes:
   representative per DISTINCT set, and the single popcount Jaccard
   that every candidate generator (all-pairs, prefix join, MinHash
   banding, the g32 band-index probe) is verified with.  The band-index
-  probe verifies inside its (band, sig) join, against one carrier per
-  candidate mask group, so its candidates never form a frame of their
-  own.  Open universes use the AllPairs-style prefix-filtered token
-  join.  Pair consumers call `_jaccard_pairs`; rep-space consumers
-  (g26, g30) call `_near_rep_pairs`, which on open vocabularies
-  returns the lazy token-join doc pairs and no group map.
+  probe has one route, `BandSignatureIndex.probe`: it reads one
+  manifest entry for both the stored signatures and the parameters
+  the batch is banded with, and verifies inside its (band, sig) join,
+  against one carrier per candidate mask group, so its candidates
+  never form a frame of their own.  Open universes use the
+  AllPairs-style prefix-filtered token join.  Pair consumers call
+  `_jaccard_pairs`; rep-space consumers (g26, g30) call
+  `_near_rep_pairs`, which on open vocabularies returns the lazy
+  token-join doc pairs and no group map.
 - Broadcast vs shuffle: every size-gated join of the dedup family asks
   `_fits_broadcast` (observed rows x `row_bytes` of the broadcast side
   against one `_BROADCAST_BYTES`); sides bounded by construction (the
@@ -3666,9 +3669,10 @@ def g30_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: the exact layer is a digest equi-join of the BATCH (tiny)
     against the corpus digest index (a broadcast or bucketed probe);
     the near layer banding (g02b) indexes only the corpus once and
-    probes each new batch's signatures against the band index — cost
-    scales with the batch, not the corpus. The broadcast new-id flag
-    here is the correctness twin of that probe, and the completeness
+    probes each new batch's signatures against the band index
+    (``BandSignatureIndex.probe``, driven by g32) — cost scales with
+    the batch, not the corpus. The broadcast new-id flag here is the
+    correctness twin of that probe, and the completeness
     property (incremental == full-corpus dedup restricted to B x C)
     is pinned in tests/test_properties.py."""
     d = load(spark, sf_dir, "documents")
@@ -3775,10 +3779,10 @@ class BandSignatureIndex:
     ``VersionedTable`` version (plain parquet behind an atomically
     flipped manifest — works on bare paths and on hdfs://s3a://
     roots).  Any LATER SparkSession then probes new batches against
-    the stored signatures via ``probe`` (or
-    ``incremental_band_probe(index_path=...)``) without re-banding
-    the corpus: the daily-ingest loop reads the index, bands only the
-    batch, and re-publishes signatures on its own cadence.
+    the stored signatures with ``probe`` — the one probe route —
+    without re-banding the corpus: the daily-ingest loop reads the
+    index, bands only the batch, and re-publishes signatures on its
+    own cadence.
 
     At 100 TB the index is ~bands rows of 24 bytes per document —
     three orders of magnitude smaller than the text it summarizes
@@ -3801,9 +3805,12 @@ class BandSignatureIndex:
         """Band the corpus once and publish the signatures; returns the
         published version number.  ``n_hashes``/``bands`` are recorded
         on the manifest entry so every later probe bands its batch with
-        the SAME parameters (ADVICE r14: an index built 32x8 probed
-        16x4 would silently produce near-zero candidate recall — the
-        band hashes never collide across parameterizations)."""
+        the SAME parameters (ADVICE r14).  A batch banded with other
+        parameters silently loses recall: with a different rows-per-
+        band (``n_hashes // bands``) no band hash ever collides, and
+        with the same rows-per-band only the shared leading bands do
+        (``h_i`` is seeded by ``i`` alone, so a 16x4 batch and a 32x8
+        index agree on bands 0-3 and miss on 4-7)."""
         sigs = _band_signatures(
             _tokens(corpus), n_hashes=n_hashes, bands=bands
         )
@@ -3817,12 +3824,8 @@ class BandSignatureIndex:
         return self.table.read(spark, version)
 
     def params(self, version: int | None = None) -> tuple[int, int]:
-        """(n_hashes, bands) the given version was built with, from the
-        manifest entry.  Versions published before the parameters were
-        recorded fall back to the build defaults (16, 4) — the only
-        parameterization that could have produced them."""
-        e = self.table.entry(version)
-        return int(e.get("n_hashes", 16)), int(e.get("bands", 4))
+        """(n_hashes, bands) the given version was built with."""
+        return _band_params(self.table.entry(version))
 
     def probe(
         self,
@@ -3831,37 +3834,131 @@ class BandSignatureIndex:
         threshold: float = 0.8,
         version: int | None = None,
     ) -> DataFrame:
-        """``incremental_band_probe`` against the STORED signatures —
-        the corpus text is touched only for the candidate-bounded
-        exact verify, never re-banded.  The batch is banded with the
-        parameters recorded at build time for ``version``."""
-        n_hashes, bands = self.params(version)
-        return incremental_band_probe(
-            newdocs,
-            corpus,
-            threshold=threshold,
-            index=self.signatures(newdocs.sparkSession, version),
-            n_hashes=n_hashes,
-            bands=bands,
+        """Probe a new batch against the stored signatures — the 100 TB
+        INCREMENTAL near-dup path that g30's docstring prescribes: the
+        batch computes only its OWN signatures and probes the index by
+        (band, sig), and the surviving candidates get the exact Jaccard
+        verify, with the corpus side RESTRICTED by a semi-join to
+        candidate-matched docs, so the text work is O(batch + candidate
+        docs); the candidate docs can be most of the corpus when the
+        batch's bucket keys are common.  On the bitmap branch the
+        verify runs in REP SPACE (``_probe_rep_space``): one carrier
+        per distinct token set, verified inside the (band, sig) join
+        and min-aggregated straight to the answer, never materializing
+        candidate pairs — at the 10x replica rep space took the probe
+        from 36 s to ~4-8 s by collapsing the 15.6M-pair mega-bucket
+        explosion (BASELINE.md r15).
+
+        ``version`` pins the probe to a published index version (None =
+        latest) — the daily-loop shape where many probes run against
+        version N while a republish builds N+1 concurrently (old
+        versions stay readable per the VersionedTable vacuum contract).
+        The manifest entry is resolved ONCE: the signatures path and
+        the ``n_hashes``/``bands`` the batch is banded with both come
+        from it, so a republish landing mid-probe cannot pair one
+        version's parameters with another version's signatures.
+
+        Output: one row per batch doc — (doc_id, verdict near|unique,
+        match_id = MIN matching corpus doc or NULL).  Approximate on
+        recall exactly like g02b (same bands, same seeded hashes;
+        recall floors in tests/test_dedup_recall.py); precision 1
+        (exact verify).  Batch-internal duplicates are intentionally
+        out of scope, same as ``incremental_dedup`` — the batch joins
+        the corpus after the probe, so the next batch sees it."""
+        entry = self.table.entry(version)
+        n_hashes, bands = _band_params(entry)
+        index = newdocs.sparkSession.read.parquet(entry["path"])
+        # Batch signatures, banded ONCE (eager: they feed candidate-id
+        # discovery and both verify routes).
+        probe_sigs = _band_signatures(
+            _tokens(newdocs), n_hashes=n_hashes, bands=bands
+        ).localCheckpoint(eager=True)
+        # Candidate corpus ids WITHOUT materializing doc pairs (round
+        # 15): a semi-join of the index against the batch's distinct
+        # bucket keys emits each candidate corpus row at most once —
+        # the doc-pair join this replaces exploded mega-buckets into
+        # 15.6M pairs at the 10x replica before ever producing the
+        # same id set.  The id count rides the checkpoint job as an
+        # observed metric.
+        obs_cands = Observation()
+        cand_ids = (
+            index.join(
+                F.broadcast(probe_sigs.select("band", "sig").distinct()),
+                ["band", "sig"],
+                "left_semi",
+            )
+            .select("doc_id")
+            .distinct()
+            .observe(obs_cands, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        # The ids feed two semi-joins (the corpus slice below and the
+        # rep-space carriers).  They are NOT batch-bounded: a batch
+        # whose bucket keys are common collides with most of the
+        # corpus (12,344 of 12,750 corpus docs on perfbench
+        # ``analytics``' first batch), so the hint is decided by the
+        # observed count like every other gated side.
+        if _fits_broadcast(cand_ids, int(obs_cands.get["n"] or 0)):
+            cand_ids = F.broadcast(cand_ids)
+        # Exact verify over the union of the batch and the CANDIDATE-
+        # MATCHED corpus slice (both sides' token sets are needed, but
+        # only for docs the probe bucketed with the batch) — the
+        # semi-join is what keeps post-index work off the corpus's
+        # non-candidates.
+        corpus_hit = corpus.select("doc_id", "text").join(
+            cand_ids, "doc_id", "left_semi"
+        )
+        alldocs = newdocs.select("doc_id", "text").unionByName(corpus_hit)
+        toks = _tokens(alldocs)
+        hit = _bitmap_vocab(toks, probe=_tokens_raw(alldocs))
+        if hit is not None:
+            vocab, vocab_n = hit
+            # Rep-space probe: the popcount verify runs inside the
+            # (band, sig) join against one carrier per distinct mask,
+            # and the survivors are min-aggregated straight to the
+            # per-batch-doc answer — no candidate-pair frame anywhere.
+            near = _probe_rep_space(
+                probe_sigs, index, cand_ids,
+                _mask_groups(toks, vocab_n, vocab=vocab), threshold,
+            )
+        else:
+            # Open-vocabulary fallback: token-join verify needs real
+            # doc pairs; materialize them once.
+            cands = _probe_candidates(probe_sigs, index).localCheckpoint(
+                eager=True
+            )
+            verified = _verify_pairs_token_join(cands, toks, threshold)
+            near = verified.groupBy("d1").agg(F.min("d2").alias("near_m"))
+        return (
+            newdocs.select("doc_id")
+            .join(near, newdocs["doc_id"] == near["d1"], "left")
+            .select(
+                newdocs["doc_id"],
+                F.when(F.col("near_m").isNotNull(), "near")
+                .otherwise("unique")
+                .alias("verdict"),
+                F.col("near_m").alias("match_id"),
+            )
         )
 
 
-def _probe_candidates(
-    new_toks: DataFrame,
-    index: DataFrame,
-    n_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """Candidate (d1=batch, d2=corpus) pairs from probing the stored
-    band signatures: band the BATCH only — with the SAME
-    ``n_hashes``/``bands`` the index was built with (ADVICE r14) —
-    equi-join on (band, sig).  This is the only place probe-side
-    banding happens — the plan carries exactly one minhash aggregate
-    (the batch's) plus the index scan, which tests/test_band_index.py
-    pins as the no-re-banding property."""
-    probe = _band_signatures(new_toks, n_hashes=n_hashes, bands=bands)
+def _band_params(entry: dict) -> tuple[int, int]:
+    """(n_hashes, bands) recorded on an index manifest entry.  Versions
+    published before the parameters were recorded fall back to the
+    build defaults (16, 4) — the only parameterization that could have
+    produced them."""
+    return int(entry.get("n_hashes", 16)), int(entry.get("bands", 4))
+
+
+def _probe_candidates(probe_sigs: DataFrame, index: DataFrame) -> DataFrame:
+    """Candidate (d1=batch, d2=corpus) pairs: the batch's band
+    signatures (banded with the index's recorded parameters) equi-
+    joined to the stored index on (band, sig).  The corpus is never
+    banded here — the plan carries the index scan and only the batch's
+    minhash aggregate, which tests/test_band_index.py pins as the
+    no-re-banding property."""
     return (
-        probe.alias("p")
+        probe_sigs.alias("p")
         .join(index.alias("i"), ["band", "sig"])
         .select(
             F.col("p.doc_id").alias("d1"), F.col("i.doc_id").alias("d2")
@@ -3937,151 +4034,6 @@ def _probe_rep_space(
     return verified.groupBy("d1").agg(F.min("c.doc_id").alias("near_m"))
 
 
-def incremental_band_probe(
-    newdocs: DataFrame,
-    corpus: DataFrame,
-    threshold: float = 0.8,
-    index: DataFrame | None = None,
-    index_path: str | None = None,
-    n_hashes: int | None = None,
-    bands: int | None = None,
-    version: int | None = None,
-) -> DataFrame:
-    """Banding-index probe — the 100 TB INCREMENTAL near-dup path that
-    g30's docstring prescribes, as a callable core: the corpus's band
-    signatures are computed ONCE (the stored index), each new batch
-    computes only its OWN signatures and probes the index by (band,
-    sig), and the surviving candidates get the exact Jaccard verify —
-    with the corpus side RESTRICTED by a semi-join to candidate-
-    matched docs, so the text work is O(batch + candidate docs); the
-    candidate docs can be most of the corpus when the batch's bucket
-    keys are common.  On the bitmap branch the verify runs in REP
-    SPACE (``_probe_rep_space``): one carrier per distinct token set,
-    verified inside the (band, sig) join and min-aggregated straight
-    to the answer, never materializing candidate pairs — at the 10x
-    replica rep space took the stored-index probe from 36 s to ~4-8 s
-    by collapsing the 15.6M-pair mega-bucket explosion (BASELINE.md
-    r15).
-
-    The index (round 14): pass ``index_path`` to probe the signatures
-    a ``BandSignatureIndex.build`` published in ANY earlier session —
-    the production shape, where the store outlives the batch jobs that
-    probe it; or pass ``index`` as an already-loaded (doc_id, band,
-    sig) frame.  With neither, the signatures are computed in-session
-    and localCheckpointed — the self-contained fallback for one-shot
-    use (this rebuilds per invocation; a standing pipeline should
-    persist).
-
-    Round 15: ``version`` pins the probe to a specific published index
-    version (None = latest) — the daily-loop shape where many probes
-    run against version N while a republish builds N+1 concurrently
-    (old versions stay readable per the VersionedTable vacuum
-    contract).  The batch is banded with the ``n_hashes``/``bands``
-    recorded on that version's manifest entry (ADVICE r14: probing a
-    32x8 index with 16x4 batch signatures never collides, so every doc
-    would silently read 'unique'); explicit arguments override only
-    for the ``index``-frame route, where no manifest exists to
-    consult.
-
-    Output: one row per batch doc — (doc_id, verdict near|unique,
-    match_id = MIN matching corpus doc or NULL).  Approximate on
-    recall exactly like g02b (same bands, same seeded hashes; recall
-    floors in tests/test_dedup_recall.py); precision 1 (exact verify).
-    Batch-internal duplicates are intentionally out of scope, same as
-    ``incremental_dedup`` — the batch joins the corpus after the
-    probe, so the next batch sees it."""
-    new_toks = _tokens(newdocs)
-    if index_path is not None:
-        if index is not None:
-            raise ValueError("pass index or index_path, not both")
-        store = BandSignatureIndex(index_path, newdocs.sparkSession)
-        # Band the batch with the parameters the store recorded at
-        # build time (ADVICE r14) — explicit n_hashes/bands arguments
-        # win only if the caller insists.
-        stored_h, stored_b = store.params(version)
-        n_hashes = stored_h if n_hashes is None else n_hashes
-        bands = stored_b if bands is None else bands
-        index = store.signatures(newdocs.sparkSession, version)
-    n_hashes = 16 if n_hashes is None else n_hashes
-    bands = 4 if bands is None else bands
-    if index is None:
-        # In-session fallback: banded once, reused across this frame's
-        # actions via the eager materialization.
-        index = _band_signatures(
-            _tokens(corpus), n_hashes=n_hashes, bands=bands
-        ).localCheckpoint(eager=True)
-    # Batch signatures, banded ONCE (eager: they feed candidate-id
-    # discovery and the rep-space verify join).
-    probe_sigs = _band_signatures(
-        new_toks, n_hashes=n_hashes, bands=bands
-    ).localCheckpoint(eager=True)
-    # Candidate corpus ids WITHOUT materializing doc pairs (round 15):
-    # a semi-join of the index against the batch's distinct bucket
-    # keys emits each candidate corpus row at most once — the doc-pair
-    # join this replaces exploded mega-buckets into 15.6M pairs at the
-    # 10x replica before ever producing the same id set.  The id count
-    # rides the checkpoint job as an observed metric.
-    obs_cands = Observation()
-    cand_ids = (
-        index.join(
-            F.broadcast(probe_sigs.select("band", "sig").distinct()),
-            ["band", "sig"],
-            "left_semi",
-        )
-        .select("doc_id")
-        .distinct()
-        .observe(obs_cands, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    # The ids feed two semi-joins (the corpus slice below and the
-    # rep-space carriers).  They are NOT batch-bounded: a batch whose
-    # bucket keys are common collides with most of the corpus (12,344
-    # of 12,750 corpus docs on perfbench ``analytics``' first batch),
-    # so the hint is decided by the observed count like every other
-    # gated side.
-    if _fits_broadcast(cand_ids, int(obs_cands.get["n"] or 0)):
-        cand_ids = F.broadcast(cand_ids)
-    # Exact verify over the union of the batch and the CANDIDATE-
-    # MATCHED corpus slice (both sides' token sets are needed, but
-    # only for docs the probe bucketed with the batch) — the semi-join
-    # is what keeps post-index work off the corpus's non-candidates.
-    corpus_hit = corpus.select("doc_id", "text").join(
-        cand_ids, "doc_id", "left_semi"
-    )
-    alldocs = newdocs.select("doc_id", "text").unionByName(corpus_hit)
-    toks = _tokens(alldocs)
-    hit = _bitmap_vocab(toks, probe=_tokens_raw(alldocs))
-    if hit is not None:
-        vocab, vocab_n = hit
-        # Rep-space probe: the popcount verify runs inside the (band,
-        # sig) join against one carrier per distinct mask, and the
-        # survivors are min-aggregated straight to the per-batch-doc
-        # answer — no candidate-pair frame anywhere.
-        near = _probe_rep_space(
-            probe_sigs, index, cand_ids,
-            _mask_groups(toks, vocab_n, vocab=vocab), threshold,
-        )
-    else:
-        # Open-vocabulary fallback: token-join verify needs real doc
-        # pairs; materialize them once.
-        cands = _probe_candidates(
-            new_toks, index, n_hashes=n_hashes, bands=bands
-        ).localCheckpoint(eager=True)
-        verified = _verify_pairs_token_join(cands, toks, threshold)
-        near = verified.groupBy("d1").agg(F.min("d2").alias("near_m"))
-    return (
-        newdocs.select("doc_id")
-        .join(near, newdocs["doc_id"] == near["d1"], "left")
-        .select(
-            newdocs["doc_id"],
-            F.when(F.col("near_m").isNotNull(), "near")
-            .otherwise("unique")
-            .alias("verdict"),
-            F.col("near_m").alias("match_id"),
-        )
-    )
-
-
 @query("g32_dedup_band_probe", oracle=None)  # approximate — rows-only tier
 def g32_dedup_band_probe(
     spark: SparkSession, sf_dir: str, index_root: str | None = None
@@ -4092,10 +4044,10 @@ def g32_dedup_band_probe(
     index built once, probe cost O(batch), exact verify on the
     candidates only.  Round 14: the index is genuinely PERSISTED
     (``BandSignatureIndex`` — a VersionedTable of (doc_id, band, sig)
-    parquet) and the probe reads it back through the manifest, so this
-    driver row exercises the same store-then-probe path the
-    two-session test (tests/test_band_index.py) proves across
-    SparkSessions.  Rows-only tier (banding recall, like g02b); g30 is
+    parquet) and ``BandSignatureIndex.probe`` reads it back through
+    the manifest, so this driver row exercises the same store-then-
+    probe path the two-session test (tests/test_band_index.py) proves
+    across SparkSessions.  Rows-only tier (banding recall, like g02b); g30 is
     the exact twin carrying the hash burden, and
     tests/test_dedup_recall.py pins this probe's agreement with g30's
     exact near layer.
@@ -4116,6 +4068,4 @@ def g32_dedup_band_probe(
     store = BandSignatureIndex(idx_root, spark)
     if store.table.latest() is None:
         store.build(corpus)
-    return incremental_band_probe(
-        newdocs, corpus, threshold=0.8, index_path=idx_root
-    )
+    return store.probe(newdocs, corpus, threshold=0.8)

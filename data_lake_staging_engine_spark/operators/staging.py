@@ -40,7 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from data_lake_staging_engine_spark.catalog import SessionCatalogSync
+from data_lake_staging_engine_spark.catalog import SessionCatalogSync, drop_managed_table
 from data_lake_staging_engine_spark.functions.determinism import (
     as_long,
     dec_sum,
@@ -358,11 +358,7 @@ def a15_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (cust, "bkt_customer", "c_custkey"),
         (orders, "bkt_orders", "o_custkey"),
     ):
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        path = os.path.join(warehouse.removeprefix("file:"), table)
-        if os.path.isdir(path):
-            shutil.rmtree(path, ignore_errors=True)
+        drop_managed_table(spark, table)
         (
             df.write.mode("overwrite")
             .bucketBy(8, key)
@@ -569,23 +565,24 @@ def a19_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE INTO does on a transactional table format (Delta/Iceberg);
     on plain parquet the atomic-directory-swap here is the idempotent
     equivalent. Tie-break (ts, event_id) keeps replays deterministic."""
-    from data_lake_staging_engine_spark.streaming.runner import landing_copy
+    from data_lake_staging_engine_spark.streaming.runner import drain, landing_copy
 
     landing_dir, schema = landing_copy(spark, sf_dir, "events", n_files=4)
     state_dir = _tmpdir("upsert_state")
     checkpoint = _tmpdir("ckpt19")
     upsert = make_keyed_upsert(spark, state_dir)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    stream.awaitTermination(180)
+    try:
+        drain(
+            spark,
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(landing_dir)
+            .writeStream.foreachBatch(upsert)
+            .option("checkpointLocation", checkpoint),
+            180,
+        )
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
     final = spark.read.schema(schema).parquet(os.path.join(state_dir, "current"))
     return final.select(
         "user_id",

@@ -40,6 +40,7 @@ from data_lake_staging_engine_spark.operators.staging import (
 from data_lake_staging_engine_spark.registry import registry
 from data_lake_staging_engine_spark.session import DEFAULT_SF_DIR, get_spark, tune_session
 from data_lake_staging_engine_spark.sources import TABLES, load, register_views
+from data_lake_staging_engine_spark.streaming.runner import drain
 from data_lake_staging_engine_spark.fs import filesystem_for
 
 
@@ -300,11 +301,12 @@ class StagingPipeline:
             .option("checkpointLocation", self.checkpoint_dir)
         )
 
-    def run_available_now(self, timeout_s: int = 300) -> DataFrame:
+    def run_available_now(self, timeout_s: float = 300) -> DataFrame:
         """Drain everything currently in the landing dir (deterministic,
-        batch-equivalent), sync the catalog, return the staged table."""
-        q = self._writer().trigger(availableNow=True).start()
-        q.awaitTermination(timeout_s)
+        batch-equivalent), sync the catalog, return the staged table.
+        A drain that outlives ``timeout_s`` is stopped and raises
+        ``TimeoutError`` before anything is synced."""
+        drain(self.spark, self._writer(), timeout_s)
         return self.sync()
 
     def start(self, processing_time: str | None = None):

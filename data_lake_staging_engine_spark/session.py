@@ -70,6 +70,20 @@ def fixture_split_bytes() -> str:
     return os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m")
 
 
+#: Runtime-settable confs every engine session carries, whoever built
+#: it: ``get_spark`` builds with them and ``tune_session`` applies them
+#: to a driver-supplied session.  UTC session time, AQE, Arrow transfer,
+#: no TIMESTAMP_NTZ inference, and NANOS parquet read as longs (the
+#: fixture ``events.ts``).
+_SESSION_CONFS = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+    ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+)
+
+
 def get_spark(
     app_name: str = "data-lake-staging-engine-spark",
     cores: int | None = None,
@@ -93,18 +107,15 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    for key, val in _SESSION_CONFS:
+        builder = builder.config(key, val)
     return builder.getOrCreate()
 
 
@@ -122,13 +133,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     process, and collection renders timestamps in the process-local
     zone — session-level UTC alone is not enough on a non-UTC host."""
     _pin_process_utc()
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    settings = [
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-    ]
+    settings = list(_SESSION_CONFS)
     env_split = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
     if env_split is not None:
         settings.append(("spark.sql.files.maxPartitionBytes", env_split))

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from data_lake_staging_engine_spark.functions.determinism import as_long, duck_round
 from data_lake_staging_engine_spark.registry import query
 from data_lake_staging_engine_spark.streaming.runner import (
+    drain,
     landing_copy,
     run_to_memory,
     scaled_state_partitions,
@@ -420,25 +421,18 @@ def e07_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     flagged = s.withWatermark("ts", "1 hour")
     checkpoint = tempfile.mkdtemp(prefix="dlse_ckpt_e07_")
     try:
-        q = (
-            flagged.writeStream.foreachBatch(account)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            spark,
+            flagged.writeStream.foreachBatch(account).option(
+                "checkpointLocation", checkpoint
+            ),
+            180,
         )
-        finished = q.awaitTermination(180)
-        if not finished:
-            # Timed out with the query still active: stop it before the
-            # finally block deletes its checkpoint out from under it and
-            # reads a partially written accounting file (ADVICE r02).
-            q.stop()
-            raise RuntimeError("e07: stream did not drain within 180s")
         with open(acc_path) as f:
             batches = [json.loads(line) for line in f]
     finally:
         os.unlink(acc_path)
         shutil.rmtree(checkpoint, ignore_errors=True)
-        spark.streams.resetTerminated()
     return spark.createDataFrame(
         [(len(batches), int(counts["total"]))], "n_batches bigint, n_rows bigint"
     )

@@ -79,6 +79,31 @@ def scaled_state_partitions(spark: SparkSession, landing: str) -> int:
     return max(min(8, session_cap), min(session_cap, total // (32 << 20) + 1))
 
 
+def drain(spark: SparkSession, writer, timeout_s: float):
+    """Run ``writer`` (a configured DataStreamWriter) to completion
+    under an AvailableNow trigger; returns the terminated query.
+
+    A drain still running after ``timeout_s`` seconds raises
+    ``TimeoutError``, and a drain that raises for any reason is stopped
+    first: its output is partial, and a query left running keeps
+    writing to its sink and checkpoint while the caller reads or
+    deletes them (ADVICE r02).  The session's terminated-query record
+    is reset either way, so a long-lived session running many drains
+    does not accumulate it."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not drain within "
+                f"{timeout_s}s"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
+        spark.streams.resetTerminated()
+    return q
+
+
 def run_to_memory(
     writer_builder,
     spark: SparkSession,
@@ -92,11 +117,12 @@ def run_to_memory(
     contents as a local-relation DataFrame.
 
     The sink's temp view, the terminated-query handle, and the checkpoint
-    dir are all released before returning: a long-lived session running
-    many streaming queries (the driver's 133-query correctness sweep,
-    bench) would otherwise accumulate memory-sink rows + state-store
-    references per query and degrade over the sweep (measured: e06 ran
-    4s fresh but 30.7s after 130 prior queries before this cleanup).
+    dir are all released before returning, and also when the drain
+    raises: a long-lived session running many streaming queries (the
+    driver's 133-query correctness sweep, bench) would otherwise
+    accumulate memory-sink rows + state-store references per query and
+    degrade over the sweep (measured: e06 ran 4s fresh but 30.7s after
+    130 prior queries before this cleanup).
 
     Concurrency contract (ADVICE r03): when ``state_partitions`` is set,
     the session-global ``spark.sql.shuffle.partitions`` is temporarily
@@ -115,38 +141,31 @@ def run_to_memory(
         saved_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
+        q = drain(
+            spark,
             writer_builder.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", checkpoint),
+            timeout_s,
         )
-        q.awaitTermination(timeout_s)
-        if q.isActive:  # pragma: no cover - safety net
-            q.stop()
-            raise TimeoutError("streaming query did not drain under AvailableNow")
+        _capture_run_stats(q, checkpoint)
+        # Freeze the sink contents JVM-side (round 17): the old
+        # collect() + createDataFrame(rows, schema) decoupled the
+        # returned frame from the about-to-be-dropped temp view by
+        # shipping EVERY output row JVM -> Python -> JVM — pickled both
+        # ways, paid by all 13 streaming queries per invocation (guide
+        # §4: don't cross the Python boundary with data the computation
+        # never needed there).  An eager localCheckpoint decouples
+        # identically — the frame owns its blocks, so the view drop and
+        # checkpoint cleanup below cannot invalidate it — with zero
+        # Python traffic and the same schema and row order.
+        return spark.table(name).localCheckpoint(eager=True)
     finally:
         if saved_shuffle is not None:
             spark.conf.set("spark.sql.shuffle.partitions", saved_shuffle)
-    _capture_run_stats(q, checkpoint)
-    sink = spark.table(name)
-    # Freeze the sink contents JVM-side (round 17): the old
-    # collect() + createDataFrame(rows, schema) decoupled the returned
-    # frame from the about-to-be-dropped temp view by shipping EVERY
-    # output row JVM -> Python -> JVM — pickled both ways, paid by all
-    # 13 streaming queries per invocation (guide §4: don't cross the
-    # Python boundary with data the computation never needed there).
-    # An eager localCheckpoint decouples identically — the frame owns
-    # its blocks, so the view drop and checkpoint cleanup below cannot
-    # invalidate it — with zero Python traffic and the same schema and
-    # row order.
-    frozen = sink.localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    spark.streams.resetTerminated()
-    shutil.rmtree(checkpoint, ignore_errors=True)
-    return frozen
+        spark.catalog.dropTempView(name)
+        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 #: Stats of the most recent ``run_to_memory`` drain — state-store rows

@@ -7,14 +7,15 @@ The contract proven here:
 - build-dispose-probe: a SEPARATE SparkSession (subprocess, vanilla,
   cwd=/tmp — the driver's shape) builds the index and exits; this
   suite's session then probes the stored signatures and gets exactly
-  the rows the self-contained in-session probe computes.  The store
-  outlives its builder.
-- no re-banding on probe: the probed plan scans the index parquet
+  the rows a store built in this session answers.  The store outlives
+  its builder.
+- no re-banding on probe: the candidate plan scans the index parquet
   (the version dir is in the plan) and contains ONE minhash banding
-  aggregate (the batch's own), where the in-session fallback carries
-  two (batch + corpus).
+  aggregate (the batch's own).
 - the index is versioned: publishing a grown corpus makes a v2;
-  probing version=1 still answers from the old signatures.
+  probing version=1 still answers from the old signatures, and an
+  unpinned probe reads ONE manifest entry for both the signatures and
+  the banding parameters.
 """
 
 import os
@@ -25,9 +26,9 @@ from pyspark.sql import functions as F
 
 from data_lake_staging_engine_spark.operators.llmops import (
     BandSignatureIndex,
+    _band_signatures,
     _probe_candidates,
     _tokens,
-    incremental_band_probe,
 )
 from data_lake_staging_engine_spark.plans.inspect import physical_plan
 from data_lake_staging_engine_spark.sources import load
@@ -73,7 +74,8 @@ def _rows(df):
 
 def test_build_dispose_probe_across_sessions(spark, tmp_path):
     """The index built by a now-dead SparkSession answers this
-    session's probe with the exact in-session result."""
+    session's probe with exactly the rows of a store built in this
+    session."""
     root = str(tmp_path / "bandidx")
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)
@@ -89,9 +91,12 @@ def test_build_dispose_probe_across_sessions(spark, tmp_path):
     assert "BUILT_VERSION 1" in proc.stdout, proc.stdout[-2000:]
 
     newdocs, corpus = _split(spark)
-    probed = incremental_band_probe(newdocs, corpus, index_path=root)
-    in_session = incremental_band_probe(newdocs, corpus)
-    assert _rows(probed) == _rows(in_session)
+    idx = BandSignatureIndex(root)
+    in_session = BandSignatureIndex(str(tmp_path / "in_session"))
+    assert in_session.build(corpus) == 1
+    assert _rows(idx.probe(newdocs, corpus)) == _rows(
+        in_session.probe(newdocs, corpus)
+    )
 
     # No re-banding: the candidate generation (the only stage that
     # touches the index; the probe checkpoints its output, truncating
@@ -99,21 +104,12 @@ def test_build_dispose_probe_across_sessions(spark, tmp_path):
     # index root appears as a parquet scan — and carries exactly ONE
     # minhash banding aggregate: the 16 per-hash mins of the BATCH.
     # The corpus contributes no aggregate because it is never banded.
-    idx = BandSignatureIndex(root)
-    cands = _probe_candidates(_tokens(newdocs), idx.signatures(spark))
+    cands = _probe_candidates(
+        _band_signatures(_tokens(newdocs)), idx.signatures(spark)
+    )
     logical = cands._jdf.queryExecution().optimizedPlan().toString()
     assert root in physical_plan(cands)  # index version dir is a scan
     assert logical.count("min(xxhash64") == 16
-
-
-def test_probe_method_matches_function(spark, tmp_path):
-    root = str(tmp_path / "idx")
-    newdocs, corpus = _split(spark)
-    idx = BandSignatureIndex(root)
-    assert idx.build(corpus) == 1
-    assert _rows(idx.probe(newdocs, corpus)) == _rows(
-        incremental_band_probe(newdocs, corpus)
-    )
 
 
 def test_index_versions_are_stable(spark, tmp_path):
@@ -137,21 +133,6 @@ def test_index_versions_are_stable(spark, tmp_path):
     for d, v, _m in v1:
         if v == "near":
             assert latest[d] == "near"
-
-
-def test_index_path_and_frame_are_exclusive(spark, tmp_path):
-    newdocs, corpus = _split(spark)
-    idx = BandSignatureIndex(str(tmp_path / "idx"))
-    idx.build(corpus)
-    sigs = idx.signatures(spark)
-    try:
-        incremental_band_probe(
-            newdocs, corpus, index=sigs, index_path=str(tmp_path / "idx")
-        )
-    except ValueError as e:
-        assert "not both" in str(e)
-    else:
-        raise AssertionError("expected ValueError")
 
 
 def test_vacuumed_index_version_fails_loudly(spark, tmp_path):
@@ -209,40 +190,44 @@ def test_multi_batch_daily_loop(spark, tmp_path):
 
 def test_nondefault_params_recorded_and_probed(spark, tmp_path):
     """ADVICE r14 (medium): an index built with non-default
-    n_hashes/bands used to be probed with the DEFAULT parameters —
-    band hashes never collide across parameterizations, so every doc
-    silently read 'unique'.  Now build records (n_hashes, bands) on
-    the manifest entry and every probe route bands the batch with the
-    stored values."""
+    n_hashes/bands used to be probed with the DEFAULT parameters.  A
+    batch banded with other parameters than its index loses recall: a
+    different rows-per-band (n_hashes // bands) never collides, and
+    the same rows-per-band collides only in the shared leading bands
+    (h_i is seeded by i alone, so a 16x4 batch and a 32x8 index agree
+    on bands 0-3 and miss on 4-7).  Build records (n_hashes, bands) on
+    the manifest entry and the probe bands the batch with the stored
+    values."""
     root = str(tmp_path / "idx32x8")
     newdocs, corpus = _split(spark)
     idx = BandSignatureIndex(root)
     assert idx.build(corpus, n_hashes=32, bands=8) == 1
     assert idx.params() == (32, 8)
 
-    # Both probe routes (method + index_path) agree with the
-    # in-session probe at the SAME parameterization.
-    expected = _rows(
-        incremental_band_probe(newdocs, corpus, n_hashes=32, bands=8)
-    )
-    assert _rows(idx.probe(newdocs, corpus)) == expected
-    assert _rows(
-        incremental_band_probe(newdocs, corpus, index_path=root)
-    ) == expected
+    # A store opened on the root alone reads the parameters from the
+    # manifest and answers like the builder's, with every near verdict
+    # inside the 32x8 candidate set.
+    probed = _rows(BandSignatureIndex(root).probe(newdocs, corpus))
+    assert probed == _rows(idx.probe(newdocs, corpus))
+    near = {d for d, v, _m in probed if v == "near"}
+    assert near  # not vacuous
 
-    # The bug this fix kills: banding the batch with the defaults
-    # against the 32x8 index yields (near-)zero candidates — the
-    # fixture's known near-dup mass vanishes.  Recovering a non-empty
-    # candidate set at the stored parameters proves the plumbing is
-    # what restored recall, not luck.
-    good = _probe_candidates(
-        _tokens(newdocs), idx.signatures(spark), n_hashes=32, bands=8
-    ).count()
-    bad = _probe_candidates(
-        _tokens(newdocs), idx.signatures(spark), n_hashes=16, bands=4
-    ).count()
-    assert good > 0
-    assert bad < good
+    sigs = idx.signatures(spark)
+
+    def cands(n_hashes, bands):
+        return _probe_candidates(
+            _band_signatures(_tokens(newdocs), n_hashes=n_hashes, bands=bands),
+            sigs,
+        )
+
+    good = cands(32, 8)
+    assert near <= {r.d1 for r in good.select("d1").distinct().collect()}
+    # Same rows-per-band (4): only bands 0-3 collide, so the defaults
+    # find fewer candidates, not none.  A different rows-per-band (2)
+    # finds none at all.
+    bad = cands(16, 4).count()
+    assert 0 < bad < good.count()
+    assert cands(16, 8).count() == 0
 
 
 def test_params_default_for_legacy_manifest_entries(spark, tmp_path):
@@ -313,6 +298,39 @@ def test_probe_pinned_version_stable_under_racing_republish(spark, tmp_path):
     assert set(latest.values()) == {"near"}
 
 
+def test_unpinned_probe_reads_one_manifest_entry(spark, tmp_path):
+    """An unpinned probe resolves ``latest`` once: the stored
+    signatures and the parameters the batch is banded with come from
+    the same manifest entry.  Here the first manifest read republishes
+    the index at a different rows-per-band (32x4: 8 rows per band
+    against v1's 4), whose band hashes never collide with 16x4 batch
+    signatures.  A probe that read the manifest twice would band the
+    batch for v1 and scan v2, and read every doc 'unique'; this one
+    must answer exactly like the probe pinned to v1."""
+    root = str(tmp_path / "idx")
+    newdocs, corpus = _split(spark)
+    idx = BandSignatureIndex(root)
+    assert idx.build(corpus) == 1
+    pinned = _rows(idx.probe(newdocs, corpus, version=1))
+    assert any(v == "near" for _d, v, _m in pinned)  # not vacuous
+
+    entry = idx.table.entry
+    reads = []
+
+    def racing_entry(version=None):
+        got = entry(version)
+        reads.append(version)
+        if len(reads) == 1:
+            assert idx.build(corpus, n_hashes=32, bands=4) == 2
+        return got
+
+    idx.table.entry = racing_entry
+    unpinned = _rows(idx.probe(newdocs, corpus))
+    assert idx.table.latest() == 2
+    assert unpinned == pinned
+    assert reads == [None]
+
+
 def test_probe_cost_is_corpus_size_flat(spark, tmp_path):
     """VERDICT r15 #6: the O(batch) probe claim, pinned as a CURVE
     property rather than a single point.  A fixed batch probes two
@@ -366,8 +384,8 @@ def test_probe_cost_is_corpus_size_flat(spark, tmp_path):
     def probe_once(name):
         idx, corpus = stores[name]
         t0 = time.perf_counter()
-        incremental_band_probe(
-            batch, corpus, threshold=0.8, index_path=str(tmp_path / name)
+        BandSignatureIndex(str(tmp_path / name), spark).probe(
+            batch, corpus, threshold=0.8
         ).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 

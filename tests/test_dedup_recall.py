@@ -152,7 +152,6 @@ def test_g32_band_probe_matches_duckdb_reference(spark, sf_dir, tmp_path):
         BandSignatureIndex,
         _band_signatures,
         _tokens,
-        incremental_band_probe,
     )
     from data_lake_staging_engine_spark.sources import load
     from data_lake_staging_engine_spark.testing import duck_connection
@@ -177,8 +176,8 @@ def test_g32_band_probe_matches_duckdb_reference(spark, sf_dir, tmp_path):
         con.close()
     got = sorted(
         (r["doc_id"], r["verdict"], r["match_id"])
-        for r in incremental_band_probe(
-            newdocs, corpus, index_path=root
+        for r in BandSignatureIndex(root, spark).probe(
+            newdocs, corpus
         ).collect()
     )
     assert any(v == "near" for _, v, _ in want)  # not vacuous

@@ -65,6 +65,48 @@ def test_nothing_staged_yet_reads_empty(spark, sf_dir, tmp_path):
     assert pipe.run_available_now(timeout_s=180).count() == n
 
 
+def test_timed_out_drain_is_stopped_and_raises(spark, sf_dir, tmp_path):
+    """A drain that outlives its timeout raises TimeoutError instead of
+    syncing a partial table, and no query is left running on the
+    checkpoint.  ``awaitTermination`` rejects a zero timeout, so 1 ms
+    stands in for "no time at all"; the rejected zero must not leave a
+    query running either."""
+    pipe, landing, schema = _events_pipe(spark, sf_dir, str(tmp_path))
+    before = {str(q.id) for q in spark.streams.active}
+    with pytest.raises(TimeoutError):
+        pipe.run_available_now(timeout_s=0.001)
+    with pytest.raises(ValueError):
+        pipe.run_available_now(timeout_s=0)
+    assert pipe._active_query_on_checkpoint() is None
+    assert {str(q.id) for q in spark.streams.active} <= before
+
+
+def test_timed_out_memory_drain_releases_sink(spark, sf_dir, monkeypatch):
+    """run_to_memory drops its sink view and temp checkpoint also when
+    the drain times out."""
+    from data_lake_staging_engine_spark.streaming import runner
+
+    landing, schema = landing_copy(spark, sf_dir, "events", n_files=4)
+    made = []
+    tmpdir = runner._tmpdir
+
+    def spy(tag):
+        made.append(tmpdir(tag))
+        return made[-1]
+
+    monkeypatch.setattr(runner, "_tmpdir", spy)
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    with pytest.raises(TimeoutError):
+        runner.run_to_memory(
+            spark.readStream.schema(schema).parquet(landing),
+            spark,
+            "append",
+            timeout_s=0.001,
+        )
+    assert len(made) == 1 and not os.path.exists(made[0])
+    assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == views
+
+
 def test_legacy_precompact_leftover_is_refused_not_healed(spark, sf_dir, tmp_path):
     """A table parked beside staged_dir by a crashed rename-swap
     compaction (older releases) stops every pipeline entry with an

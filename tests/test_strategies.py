@@ -216,6 +216,34 @@ def test_open_vocab_branch_matches_bitmap_branch(
     assert forced == base
 
 
+def test_g32_open_vocab_route_matches_bitmap_route(
+    spark, sf_dir, monkeypatch, tmp_path
+):
+    """g32's band-index probe on the open-vocabulary route (forced by a
+    zero bitmap cutoff, so its candidate pairs are verified by the
+    token join) must emit exactly the rows of the default rep-space
+    route.  Both runs probe one stored index."""
+    import data_lake_staging_engine_spark.operators.llmops as llmops
+
+    root = str(tmp_path / "bandidx")
+    fn = llmops.g32_dedup_band_probe
+    base = sorted(tuple(r) for r in fn(spark, sf_dir, root).collect())
+    calls = []
+    verify = llmops._verify_pairs_token_join
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return verify(*a, **kw)
+
+    monkeypatch.setattr(llmops, "_BITMAP_MAX_VOCAB", 0)
+    monkeypatch.setattr(llmops, "_verify_pairs_token_join", spy)
+    forced = sorted(tuple(r) for r in fn(spark, sf_dir, root).collect())
+    monkeypatch.undo()
+    assert calls, "the token-join route was not taken"
+    assert any(v == "near" for _d, v, _m in base)
+    assert forced == base
+
+
 def test_lsh_outputs_subset_of_exact(spark, sf_dir):
     """MinHash-LSH near-dup (g02b token, g02e shingle) verifies
     candidates with EXACT Jaccard, so precision is 1 by construction:
