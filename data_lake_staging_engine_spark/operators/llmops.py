@@ -14,11 +14,13 @@ Scale design notes:
   `_mask_groups`: multi-word token bitmaps, one checkpointed min-doc_id
   representative per DISTINCT set, and the single popcount Jaccard
   that every candidate generator (all-pairs, prefix join, MinHash
-  banding, the g32 band-index probe) is verified with.  The band-index
-  probe has one route, `BandSignatureIndex.probe`: it reads one
-  manifest entry for both the stored signatures and the parameters
-  the batch is banded with, and verifies inside its (band, sig) join,
-  against one carrier per candidate mask group, so its candidates
+  banding, the g32 band-index probe) is verified with.  The band index
+  is built once with its corpus's rep space (the same token ids and
+  min-doc_id carriers, stored with the signatures), and
+  `BandSignatureIndex.probe` is its one probe route: it reads one
+  manifest entry for the stored version and the parameters the batch
+  is banded with, tokenizes only the batch, and verifies inside its
+  (band, sig) join against the stored carriers, so its candidates
   never form a frame of their own.  Open universes use the
   AllPairs-style prefix-filtered token join.  Pair consumers call
   `_jaccard_pairs`; rep-space consumers (g26, g30) call
@@ -395,9 +397,9 @@ def _probe_doc_sample(probe_src: DataFrame) -> DataFrame:
 def _bitmap_vocab(
     toks: DataFrame, probe: DataFrame | None = None
 ) -> tuple[DataFrame, int] | None:
-    """(materialized distinct-token DataFrame, exact size) IF the
-    universe is provably small enough for the bitmap strategy, else
-    None (take the token-join path).
+    """(materialized (tok, tok_id) vocab, exact size) IF the universe
+    is provably small enough for the bitmap strategy, else None (take
+    the token-join path).
 
     Two-stage probe, neither stage a full-corpus shuffle (the exact
     global ``distinct().count()`` probe this replaces costs more at
@@ -416,7 +418,10 @@ def _bitmap_vocab(
        eagerly localCheckpointed, so a misprediction can never
        materialize an unbounded set, and the checked vocabulary is
        REUSED by the bitmap build (the full-stream distinct runs once,
-       not once to count and once to assign token ids)."""
+       not once to count and once to assign token ids).  The token ids
+       (``_vocab_ids``) are assigned inside the same checkpoint job:
+       the LIMIT already leaves one partition, so the rank window adds
+       no exchange and no job."""
     probe_src = _probe_doc_sample(probe if probe is not None else toks)
     approx_n = int(
         probe_src.agg(F.approx_count_distinct("tok").alias("n")).first()[0]
@@ -427,13 +432,13 @@ def _bitmap_vocab(
     # (round 17, the _mask_groups template): the separate
     # vocab.count() this replaces was one extra job in EVERY
     # strategy-routed dedup invocation — g02/g02d/g02e/g12/g21/g26/
-    # g30/g31/g32 all pass through here.  The metric sits above the
-    # LIMIT, so it counts exactly the checkpointed rows.
+    # g30/g31/g32 all pass through here.  The metric sits at the root
+    # of the checkpointed plan, so it counts exactly the checkpointed
+    # rows; below the rank window, AQE drops it on an empty corpus
+    # (the window over an empty limit is propagated away with it).
     obs = Observation()
     vocab = (
-        toks.select("tok")
-        .distinct()
-        .limit(_BITMAP_MAX_VOCAB + 1)
+        _vocab_ids(toks.select("tok").distinct().limit(_BITMAP_MAX_VOCAB + 1))
         .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
@@ -493,39 +498,60 @@ def _doc_bitmaps(
     into ceil(vocab/64) longs via a broadcast token-id join + bit_or.
 
     Callers must pre-check the vocabulary via ``_bitmap_vocab`` (and
-    should pass its materialized frame through ``vocab`` so the
-    full-stream distinct is not recomputed here): the guard below makes
-    the single-partition ``row_number`` token-id assignment provably
-    bounded (<= _BITMAP_MAX_VOCAB rows through one task) and caps the
-    plan at ceil(4096/64) = 64 bitmap columns."""
+    should pass its materialized (tok, tok_id) frame through ``vocab``
+    so the full-stream distinct is not recomputed here): the guard
+    below makes the single-partition ``row_number`` token-id
+    assignment provably bounded (<= _BITMAP_MAX_VOCAB rows through one
+    task) and caps the plan at ceil(4096/64) = 64 bitmap columns."""
     if vocab_n > _BITMAP_MAX_VOCAB:
         raise ValueError(
             f"bitmap strategy requires vocab <= {_BITMAP_MAX_VOCAB}, got {vocab_n}; "
             "route through _bitmap_vocab / the token-join path"
         )
-    # max(1, ...): an EMPTY corpus has vocab_n == 0, which would build
-    # zero bitmap columns and hit Spark's "exprs should not be empty"
-    # assert in agg() (round-9 empty-input audit — 8 dedup queries
-    # crashed).  One all-zero word column is inert: the vocab join
-    # yields no rows, so masks/pairs are empty frames with the right
-    # schema and every downstream stage no-ops.
-    n_words = max(1, (vocab_n + 63) // 64)
     if vocab is None:
-        vocab = toks.select("tok").distinct()
-    vocab = vocab.withColumn(
+        vocab = _vocab_ids(toks.select("tok").distinct())
+    wcols = _word_cols(vocab_n)
+    masks = (
+        toks.join(F.broadcast(vocab), "tok")
+        .groupBy("doc_id")
+        .agg(*_mask_words(wcols))
+    )
+    return masks, wcols
+
+
+def _word_cols(vocab_n: int) -> list[str]:
+    """The mask word columns w0..wk of a ``vocab_n``-token universe.
+    max(1, ...): an EMPTY corpus has vocab_n == 0, which would build
+    zero bitmap columns and hit Spark's "exprs should not be empty"
+    assert in agg() (round-9 empty-input audit — 8 dedup queries
+    crashed).  One all-zero word column is inert: the vocab join
+    yields no rows, so masks/pairs are empty frames with the right
+    schema and every downstream stage no-ops."""
+    return [f"w{w}" for w in range(max(1, (vocab_n + 63) // 64))]
+
+
+def _vocab_ids(vocab: DataFrame) -> DataFrame:
+    """(tok, tok_id): the one token-id assignment every mask uses — the
+    rank of the token in the distinct vocab, so a stored vocab and the
+    masks built from it agree bit for bit."""
+    return vocab.withColumn(
         "tok_id", F.row_number().over(Window.orderBy("tok")) - F.lit(1)
     )
-    word_aggs = [
+
+
+def _mask_words(wcols: list[str]) -> list[Column]:
+    """Per-doc ``bit_or`` aggregates packing ``tok_id`` into the
+    ``wcols`` words; a NULL ``tok_id`` (a token outside the vocab, on a
+    left join) sets no bit."""
+    return [
         F.bit_or(
             F.when(
                 F.floor(F.col("tok_id") / 64) == w,
                 F.expr("shiftleft(1L, CAST(tok_id % 64 AS INT))"),
             ).otherwise(F.lit(0).cast("long"))
-        ).alias(f"w{w}")
-        for w in range(n_words)
+        ).alias(c)
+        for w, c in enumerate(wcols)
     ]
-    masks = toks.join(F.broadcast(vocab), "tok").groupBy("doc_id").agg(*word_aggs)
-    return masks, [f"w{w}" for w in range(n_words)]
 
 
 class _MaskGroups(NamedTuple):
@@ -1073,13 +1099,18 @@ def g02b_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _band_signatures(
-    toks: DataFrame, n_hashes: int = 16, bands: int = 4
+    toks: DataFrame,
+    n_hashes: int = 16,
+    bands: int = 4,
+    per_doc: tuple[Column, ...] = (),
 ) -> DataFrame:
     """(doc_id, band, sig) MinHash band signatures over any (doc_id,
     tok) set stream — the unit the banding family joins on, and the
     thing a production signature STORE persists (g32 probes new
     batches against exactly this frame).  One corpus scan, one agg
-    shuffle (see the posexplode note below)."""
+    shuffle (see the posexplode note below).  ``per_doc``: aliased
+    aggregates over the same stream computed in that one groupBy and
+    carried on every band row (the band-index probe's mask words)."""
     rows_per_band = n_hashes // bands
     # minhash_i(doc) = min over tokens of hash_i(tok). Hash the (cheap
     # to re-read, expensive to hash) string ONCE per row, then derive
@@ -1091,7 +1122,8 @@ def _band_signatures(
         *[
             F.min(F.xxhash64(F.col("h0"), F.lit(i))).alias(f"h{i}")
             for i in range(n_hashes)
-        ]
+        ],
+        *per_doc,
     )
     # band signature = hash of the band's rows. Emitted as ONE
     # posexplode over an array of the per-band hashes (pos = band id)
@@ -1109,7 +1141,9 @@ def _band_signatures(
         for b in range(bands)
     ]
     return minhashes.select(
-        "doc_id", F.posexplode(F.array(*band_sigs)).alias("band", "sig")
+        "doc_id",
+        F.posexplode(F.array(*band_sigs)).alias("band", "sig"),
+        *minhashes.columns[1 + n_hashes:],
     )
 
 
@@ -3779,20 +3813,29 @@ class BandSignatureIndex:
     ``VersionedTable`` version (plain parquet behind an atomically
     flipped manifest — works on bare paths and on hdfs://s3a://
     roots).  Any LATER SparkSession then probes new batches against
-    the stored signatures with ``probe`` — the one probe route —
-    without re-banding the corpus: the daily-ingest loop reads the
-    index, bands only the batch, and re-publishes signatures on its
-    own cadence.
+    the stored version with ``probe`` — the one probe route — without
+    re-banding the corpus: the daily-ingest loop reads the index,
+    bands only the batch, and re-publishes on its own cadence.
 
-    At 100 TB the index is ~bands rows of 24 bytes per document —
-    three orders of magnitude smaller than the text it summarizes
-    (measured ratio in BASELINE.md r14).  The batch is never checked
-    against the corpus TEXT at large: its signatures are broadcast into
-    a semi-join over the index to find the candidate corpus docs, only
-    those docs' text is tokenized, and the exact verify runs inside a
-    second index scan's (band, sig) join.  The candidate docs are not
-    batch-bounded, though: a batch of common bucket keys collides with
-    most of the corpus, and the probe then tokenizes most of it."""
+    The build also picks the verify route once, over the whole corpus
+    (``_bitmap_vocab``).  On the bitmap route (<= 4,096 distinct
+    tokens) the version stores the corpus's rep space next to its
+    signatures: the signature rows of each distinct token set's min-
+    doc_id member (its carrier) hold the set's mask words, and the
+    ``_vocab`` sidecar holds the token ids.  A probe then tokenizes
+    and bands only the batch and never reads the corpus.  On the open
+    route (and for versions published before the rep space was
+    stored) the probe re-reads the candidate corpus docs' text and
+    verifies by token join.
+
+    At 100 TB the signatures are ~bands rows of 24 bytes per document —
+    three orders of magnitude smaller than the text they summarize
+    (measured ratio in BASELINE.md r14); the stored rep space adds 8
+    bytes per mask word on carrier rows only, and the vocab.
+
+    Stated trade-off: the route is a property of the whole corpus, so
+    a corpus over 4,096 distinct tokens probes on the open route even
+    when a batch's candidate docs alone would fit a bitmap."""
 
     def __init__(self, root: str, spark: SparkSession | None = None) -> None:
         from data_lake_staging_engine_spark.versioning import VersionedTable
@@ -3810,18 +3853,57 @@ class BandSignatureIndex:
         band (``n_hashes // bands``) no band hash ever collides, and
         with the same rows-per-band only the shared leading bands do
         (``h_i`` is seeded by ``i`` alone, so a 16x4 batch and a 32x8
-        index agree on bands 0-3 and miss on 4-7)."""
+        index agree on bands 0-3 and miss on 4-7).
+
+        On the bitmap route the same version also stores the rep space
+        of ``_mask_groups`` (same token ids, same min-doc_id carriers):
+        the carrier rows' mask words and the ``_vocab`` sidecar, written
+        before the manifest flip.  The mask words come out of the
+        signatures' own per-doc aggregate and a window over the words
+        picks each group's carrier, so one aggregate serves both (the
+        route pick reads the corpus tokens before it, for the HLL
+        probe and the exact vocab).  The entry records the route, the
+        vocab size, the carrier count (observed by the write) and the
+        stored schema, which the probe reads the version with."""
+        toks = _tokens(corpus)
+        extra = {"n_hashes": n_hashes, "bands": bands, "route": "open"}
+        hit = _bitmap_vocab(toks, probe=_tokens_raw(corpus))
+        if hit is None:
+            stored = _band_signatures(toks, n_hashes=n_hashes, bands=bands)
+            extra["schema"] = _ddl(stored.schema)
+            return self.table.publish(stored, extra=extra)
+        vocab, vocab_n = hit
+        wcols = _word_cols(vocab_n)
         sigs = _band_signatures(
-            _tokens(corpus), n_hashes=n_hashes, bands=bands
+            toks.join(F.broadcast(vocab), "tok"),
+            n_hashes=n_hashes,
+            bands=bands,
+            per_doc=tuple(_mask_words(wcols)),
+        ).withColumn("rep", F.min("doc_id").over(Window.partitionBy(*wcols)))
+        carrier = F.col("doc_id") == F.col("rep")
+        obs = Observation()
+        stored = sigs.observe(
+            obs, F.sum((carrier & (F.col("band") == 0)).cast("long")).alias("n")
+        ).select(
+            "doc_id",
+            "band",
+            "sig",
+            *[F.when(carrier, F.col(c)).alias(c) for c in wcols],
         )
+        extra.update(route="bitmap", vocab_n=vocab_n, schema=_ddl(stored.schema))
         return self.table.publish(
-            sigs, extra={"n_hashes": n_hashes, "bands": bands}
+            stored,
+            extra=lambda: {**extra, "carriers": int(obs.get["n"] or 0)},
+            sidecars={_VOCAB_SIDECAR: vocab},
         )
 
     def signatures(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        return self.table.read(spark, version)
+        """The (doc_id, band, sig) rows of one version, every corpus doc."""
+        return _read_index(spark, self.table.entry(version)).select(
+            "doc_id", "band", "sig"
+        )
 
     def params(self, version: int | None = None) -> tuple[int, int]:
         """(n_hashes, bands) the given version was built with."""
@@ -3834,27 +3916,28 @@ class BandSignatureIndex:
         threshold: float = 0.8,
         version: int | None = None,
     ) -> DataFrame:
-        """Probe a new batch against the stored signatures — the 100 TB
+        """Probe a new batch against the stored index — the 100 TB
         INCREMENTAL near-dup path that g30's docstring prescribes: the
         batch computes only its OWN signatures and probes the index by
         (band, sig), and the surviving candidates get the exact Jaccard
-        verify, with the corpus side RESTRICTED by a semi-join to
-        candidate-matched docs, so the text work is O(batch + candidate
-        docs); the candidate docs can be most of the corpus when the
-        batch's bucket keys are common.  On the bitmap branch the
-        verify runs in REP SPACE (``_probe_rep_space``): one carrier
-        per distinct token set, verified inside the (band, sig) join
-        and min-aggregated straight to the answer, never materializing
-        candidate pairs — at the 10x replica rep space took the probe
-        from 36 s to ~4-8 s by collapsing the 15.6M-pair mega-bucket
-        explosion (BASELINE.md r15).
+        verify.
+
+        Bitmap-route versions (``_probe_rep_space``): the batch is
+        tokenized and banded once, and its tokens are mapped to the
+        stored token ids; the verify runs inside the (band, sig) join
+        against the stored carriers and is min-aggregated straight to
+        the answer.  ``corpus`` is not read.  Open-route and older
+        versions: the candidate corpus docs (a semi-join of the index
+        against the batch's bucket keys) are re-read from ``corpus``
+        and verified by token join; those docs can be most of the
+        corpus when the batch's bucket keys are common.
 
         ``version`` pins the probe to a published index version (None =
         latest) — the daily-loop shape where many probes run against
         version N while a republish builds N+1 concurrently (old
         versions stay readable per the VersionedTable vacuum contract).
-        The manifest entry is resolved ONCE: the signatures path and
-        the ``n_hashes``/``bands`` the batch is banded with both come
+        The manifest entry is resolved ONCE: the paths, the route and
+        the ``n_hashes``/``bands`` the batch is banded with all come
         from it, so a republish landing mid-probe cannot pair one
         version's parameters with another version's signatures.
 
@@ -3867,68 +3950,15 @@ class BandSignatureIndex:
         the corpus after the probe, so the next batch sees it."""
         entry = self.table.entry(version)
         n_hashes, bands = _band_params(entry)
-        index = newdocs.sparkSession.read.parquet(entry["path"])
-        # Batch signatures, banded ONCE (eager: they feed candidate-id
-        # discovery and both verify routes).
-        probe_sigs = _band_signatures(
-            _tokens(newdocs), n_hashes=n_hashes, bands=bands
-        ).localCheckpoint(eager=True)
-        # Candidate corpus ids WITHOUT materializing doc pairs (round
-        # 15): a semi-join of the index against the batch's distinct
-        # bucket keys emits each candidate corpus row at most once —
-        # the doc-pair join this replaces exploded mega-buckets into
-        # 15.6M pairs at the 10x replica before ever producing the
-        # same id set.  The id count rides the checkpoint job as an
-        # observed metric.
-        obs_cands = Observation()
-        cand_ids = (
-            index.join(
-                F.broadcast(probe_sigs.select("band", "sig").distinct()),
-                ["band", "sig"],
-                "left_semi",
-            )
-            .select("doc_id")
-            .distinct()
-            .observe(obs_cands, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        # The ids feed two semi-joins (the corpus slice below and the
-        # rep-space carriers).  They are NOT batch-bounded: a batch
-        # whose bucket keys are common collides with most of the
-        # corpus (12,344 of 12,750 corpus docs on perfbench
-        # ``analytics``' first batch), so the hint is decided by the
-        # observed count like every other gated side.
-        if _fits_broadcast(cand_ids, int(obs_cands.get["n"] or 0)):
-            cand_ids = F.broadcast(cand_ids)
-        # Exact verify over the union of the batch and the CANDIDATE-
-        # MATCHED corpus slice (both sides' token sets are needed, but
-        # only for docs the probe bucketed with the batch) — the
-        # semi-join is what keeps post-index work off the corpus's
-        # non-candidates.
-        corpus_hit = corpus.select("doc_id", "text").join(
-            cand_ids, "doc_id", "left_semi"
-        )
-        alldocs = newdocs.select("doc_id", "text").unionByName(corpus_hit)
-        toks = _tokens(alldocs)
-        hit = _bitmap_vocab(toks, probe=_tokens_raw(alldocs))
-        if hit is not None:
-            vocab, vocab_n = hit
-            # Rep-space probe: the popcount verify runs inside the
-            # (band, sig) join against one carrier per distinct mask,
-            # and the survivors are min-aggregated straight to the
-            # per-batch-doc answer — no candidate-pair frame anywhere.
+        index = _read_index(newdocs.sparkSession, entry)
+        if entry.get("route") == "bitmap":
             near = _probe_rep_space(
-                probe_sigs, index, cand_ids,
-                _mask_groups(toks, vocab_n, vocab=vocab), threshold,
+                newdocs, index, entry, n_hashes, bands, threshold
             )
         else:
-            # Open-vocabulary fallback: token-join verify needs real
-            # doc pairs; materialize them once.
-            cands = _probe_candidates(probe_sigs, index).localCheckpoint(
-                eager=True
+            near = _probe_token_join(
+                newdocs, corpus, index, n_hashes, bands, threshold
             )
-            verified = _verify_pairs_token_join(cands, toks, threshold)
-            near = verified.groupBy("d1").agg(F.min("d2").alias("near_m"))
         return (
             newdocs.select("doc_id")
             .join(near, newdocs["doc_id"] == near["d1"], "left")
@@ -3940,6 +3970,26 @@ class BandSignatureIndex:
                 F.col("near_m").alias("match_id"),
             )
         )
+
+
+# A bitmap-route index version's token ids: (tok, tok_id) parquet
+# inside the version dir, skipped by reads of the version itself.
+_VOCAB_SIDECAR = "_vocab"
+
+
+def _ddl(schema: StructType) -> str:
+    """``schema`` as the DDL string ``spark.read.schema`` takes."""
+    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
+
+
+def _read_index(spark: SparkSession, entry: dict) -> DataFrame:
+    """One index version's parquet, read with the schema its build
+    recorded, so no schema-inference job runs.  Versions published
+    before the schema was recorded infer it."""
+    reader = spark.read
+    if "schema" in entry:
+        reader = reader.schema(entry["schema"])
+    return reader.parquet(entry["path"])
 
 
 def _band_params(entry: dict) -> tuple[int, int]:
@@ -3967,32 +4017,81 @@ def _probe_candidates(probe_sigs: DataFrame, index: DataFrame) -> DataFrame:
     )
 
 
-def _probe_rep_space(
-    probe_sigs: DataFrame,
+def _probe_token_join(
+    newdocs: DataFrame,
+    corpus: DataFrame,
     index: DataFrame,
-    cand_ids: DataFrame,
-    g: _MaskGroups,
+    n_hashes: int,
+    bands: int,
     threshold: float,
 ) -> DataFrame:
-    """Rep-space band probe: per-batch-doc (d1, near_m = MIN matching
-    corpus id), with the exact popcount verify inside the (band, sig)
-    join, so no candidate pair is ever materialized.
+    """Open-route band probe: per-batch-doc (d1, near_m), verified by
+    token join over the candidate pairs.  The corpus side is RESTRICTED
+    by a semi-join to candidate-matched docs, so only their text is
+    re-tokenized."""
+    # Batch signatures, banded ONCE (eager: they feed candidate-id
+    # discovery and the candidate pairs).
+    probe_sigs = _band_signatures(
+        _tokens(newdocs), n_hashes=n_hashes, bands=bands
+    ).localCheckpoint(eager=True)
+    # Candidate corpus ids WITHOUT materializing doc pairs (round
+    # 15): a semi-join of the index against the batch's distinct
+    # bucket keys emits each candidate corpus row at most once.  The
+    # id count rides the checkpoint job as an observed metric.
+    obs_cands = Observation()
+    cand_ids = (
+        index.join(
+            F.broadcast(probe_sigs.select("band", "sig").distinct()),
+            ["band", "sig"],
+            "left_semi",
+        )
+        .select("doc_id")
+        .distinct()
+        .observe(obs_cands, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    # The ids are NOT batch-bounded: a batch whose bucket keys are
+    # common collides with most of the corpus, so the hint is decided
+    # by the observed count like every other gated side.
+    if _fits_broadcast(cand_ids, int(obs_cands.get["n"] or 0)):
+        cand_ids = F.broadcast(cand_ids)
+    corpus_hit = corpus.select("doc_id", "text").join(
+        cand_ids, "doc_id", "left_semi"
+    )
+    toks = _tokens(newdocs.select("doc_id", "text").unionByName(corpus_hit))
+    # The token-join verify needs real doc pairs; materialize them once.
+    cands = _probe_candidates(probe_sigs, index).localCheckpoint(eager=True)
+    verified = _verify_pairs_token_join(cands, toks, threshold)
+    return verified.groupBy("d1").agg(F.min("d2").alias("near_m"))
 
-    The closure property that makes this exact: on this branch the
-    vocab from ``_bitmap_vocab`` is the COMPLETE distinct token set,
-    so mask equality <=> token-set equality, and the band signatures
-    are a pure function of the token set — every doc in a distinct-
-    mask group carries identical (band, sig) rows, so the group is
-    candidate-to-a-batch-doc as a UNIT, its Jaccard against any mask
-    is one popcount, and the min corpus member answers match_id.  So
-    the index side of the join is ONE carrier per candidate group: its
-    min corpus member (the key into the index, and the answer) with
-    the group's mask words.  The batch side is the batch's signatures
-    with their own mask words (batch x bands rows).  Each collision is
-    verified in the join condition and the min aggregate reads the
-    survivors directly: a pair that collides in k bands is verified k
-    times and the min absorbs the repeats (the same argument
-    ``_minhash_lsh_candidates`` rests on).
+
+def _probe_rep_space(
+    newdocs: DataFrame,
+    index: DataFrame,
+    entry: dict,
+    n_hashes: int,
+    bands: int,
+    threshold: float,
+) -> DataFrame:
+    """Rep-space band probe against a bitmap-route version: per-batch-
+    doc (d1, near_m = MIN matching corpus id), with the exact popcount
+    verify inside the (band, sig) join, so no candidate pair is ever
+    materialized and the corpus text is never read.
+
+    The closure property that makes this exact: the stored vocab is
+    the corpus's COMPLETE distinct token set, so mask equality <=>
+    token-set equality, and the band signatures are a pure function of
+    the token set — every doc in a distinct-mask group carries
+    identical (band, sig) rows, so the group is candidate-to-a-batch-
+    doc as a UNIT, its Jaccard against any batch doc is one popcount,
+    and its min member (the carrier, whose index rows hold the group's
+    mask words) answers match_id.  A batch doc's tokens outside the
+    vocab set no bit but count in its size ``n``, and no carrier holds
+    them, so Jaccard = shared / (n + n_carrier - shared) is exact.
+    Each collision is verified in the join condition and the min
+    aggregate reads the survivors directly: a pair that collides in k
+    bands is verified k times and the min absorbs the repeats (the
+    same argument ``_minhash_lsh_candidates`` rests on).
 
     Why carriers: banding buckets template corpora hard — the 10x
     replica puts 93% of its 15.6M candidate-pair mass in ~60 buckets
@@ -4002,36 +4101,43 @@ def _probe_rep_space(
     first batch (seed 1: 750 batch docs, 9,698 carriers) it emits
     1,988,574 rows, 1,169,487 distinct (d1, group) pairs, for 576
     near batch docs — so no exchange or broadcast may sit between the
-    join and the verify.  The carriers are broadcast while they fit
-    (``_fits_broadcast`` on the observed rep count, an upper bound of
-    the groups); the batch-sized sides are broadcast unconditionally,
-    because the checkpointed inputs carry no stats for the optimizer
-    to size them itself."""
-    # Leave the carriers lazy: an eager localCheckpoint of this
-    # semi-join + aggregate (measured in round 17 at sf0.1 when it fed
-    # two broadcast builds: jobs 34 -> 35, warm probe 4.2-5.2 s ->
-    # 5.3-7.1 s) is a synchronous barrier on the critical path.
-    carriers = (
-        g.d2r.join(cand_ids, "doc_id", "left_semi")
-        .groupBy(*g.cols("b"))
-        .agg(F.min("doc_id").alias("doc_id"))
+    join and the verify.  The batch side (batch x bands rows, its mask
+    words and its one minhash aggregate) and the vocab (<= 4,096 rows)
+    are broadcast unconditionally: both are bounded by construction."""
+    spark = newdocs.sparkSession
+    wcols = _word_cols(int(entry["vocab_n"]))
+    vocab = spark.read.schema("tok string, tok_id int").parquet(
+        os.path.join(entry["path"], _VOCAB_SIDECAR)
     )
-    if _fits_broadcast(carriers, g.n_reps):
-        carriers = F.broadcast(carriers)
-    carrier_sigs = index.join(carriers, "doc_id").alias("c")
     batch = (
-        F.broadcast(probe_sigs)
-        .join(g.d2r.select("doc_id", *g.cols("a")), "doc_id")
-        .withColumnRenamed("doc_id", "d1")
-        .alias("p")
+        _band_signatures(
+            _tokens(newdocs).join(F.broadcast(vocab), "tok", "left"),
+            n_hashes=n_hashes,
+            bands=bands,
+            per_doc=(*_mask_words(wcols), F.count(F.lit(1)).alias("n")),
+        )
+        .select(
+            F.col("doc_id").alias("d1"),
+            F.col("band").alias("p_band"),
+            F.col("sig").alias("p_sig"),
+            "n",
+            *[F.col(c).alias(f"p_{c}") for c in wcols],
+        )
     )
-    verified = carrier_sigs.join(
+    carriers = index.filter(F.col(wcols[0]).isNotNull())
+    shared = sum(
+        (F.bit_count(F.col(f"p_{c}").bitwiseAND(F.col(c))) for c in wcols),
+        F.lit(0),
+    )
+    n_carrier = sum((F.bit_count(F.col(c)) for c in wcols), F.lit(0))
+    jac = shared * F.lit(1.0) / (F.col("n") + n_carrier - shared)
+    verified = carriers.join(
         F.broadcast(batch),
-        (F.col("p.band") == F.col("c.band"))
-        & (F.col("p.sig") == F.col("c.sig"))
-        & (g.jac >= threshold),
+        (F.col("p_band") == F.col("band"))
+        & (F.col("p_sig") == F.col("sig"))
+        & (jac >= threshold),
     )
-    return verified.groupBy("d1").agg(F.min("c.doc_id").alias("near_m"))
+    return verified.groupBy("d1").agg(F.min("doc_id").alias("near_m"))
 
 
 @query("g32_dedup_band_probe", oracle=None)  # approximate — rows-only tier
@@ -4041,14 +4147,15 @@ def g32_dedup_band_probe(
     """g30's near layer at its designed 100 TB shape: the new batch
     (doc_id % 7 = 0, same split as g30) probes the corpus's band-
     signature INDEX instead of running exact Jaccard over the union —
-    index built once, probe cost O(batch), exact verify on the
-    candidates only.  Round 14: the index is genuinely PERSISTED
-    (``BandSignatureIndex`` — a VersionedTable of (doc_id, band, sig)
-    parquet) and ``BandSignatureIndex.probe`` reads it back through
+    index built once (with the corpus's rep space), probe cost
+    O(batch x bands + carrier rows), exact verify inside the band join.
+    Round 14: the index is genuinely PERSISTED (``BandSignatureIndex``
+    — a VersionedTable of (doc_id, band, sig) parquet plus the stored
+    rep space) and ``BandSignatureIndex.probe`` reads it back through
     the manifest, so this driver row exercises the same store-then-
     probe path the two-session test (tests/test_band_index.py) proves
-    across SparkSessions.  Rows-only tier (banding recall, like g02b); g30 is
-    the exact twin carrying the hash burden, and
+    across SparkSessions.  Rows-only tier (banding recall, like g02b);
+    g30 is the exact twin carrying the hash burden, and
     tests/test_dedup_recall.py pins this probe's agreement with g30's
     exact near layer.
 
@@ -4057,15 +4164,27 @@ def g32_dedup_band_probe(
     if the store at that root has no published version yet, and every
     later invocation probes the existing latest (bench.py's
     g32_probe_amortized entry measures exactly this).  The default
-    (None) keeps the registered driver row self-contained: fresh temp
-    store, build-then-probe, full path coverage per invocation."""
+    (None) keeps the registered driver row self-contained: a fresh
+    temp store, build-then-probe, full path coverage per invocation;
+    the answer is checkpointed and the temp store removed before
+    returning, so no call leaves an index directory behind."""
+    import shutil
     import tempfile
 
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     newdocs = d.filter(F.col("doc_id") % 7 == 0)
     corpus = d.filter(F.col("doc_id") % 7 != 0)
-    idx_root = index_root or tempfile.mkdtemp(prefix="dlse_bandidx_")
-    store = BandSignatureIndex(idx_root, spark)
-    if store.table.latest() is None:
+    if index_root is not None:
+        store = BandSignatureIndex(index_root, spark)
+        if store.table.latest() is None:
+            store.build(corpus)
+        return store.probe(newdocs, corpus, threshold=0.8)
+    root = tempfile.mkdtemp(prefix="dlse_bandidx_")
+    try:
+        store = BandSignatureIndex(root, spark)
         store.build(corpus)
-    return store.probe(newdocs, corpus, threshold=0.8)
+        return store.probe(newdocs, corpus, threshold=0.8).localCheckpoint(
+            eager=True
+        )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

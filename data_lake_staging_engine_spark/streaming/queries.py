@@ -467,7 +467,14 @@ def e08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sides pass the event-time validity gate (_gate_event_time,
     mirrored in the oracle) BEFORE the watermark: epoch-adjacent rows
     are born late against the initial epoch-0 watermark and a corrupt
-    far-future clock would poison it — see the gate comment above."""
+    far-future clock would poison it — see the gate comment above.
+
+    The drain skips the no-data micro-batch that would only evict
+    expired state (``no_data_batches=False``): an inner join emits on
+    match, never on eviction, and the state is discarded with the
+    checkpoint anyway (measured: that batch removed 119,924 of 120,102
+    state rows for 1.0-1.4 s and 4 MB written per call).  e12's outer
+    join keeps it, because its unmatched rows come from it."""
     landing, schema = landing_copy(spark, sf_dir, "events")
     s1 = _gate_event_time(
         spark.readStream.schema(schema).parquet(landing), "e08_gate_left"
@@ -498,7 +505,11 @@ def e08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     ).select("signup_id", "user_id", "follow_id", "follow_type")
     return run_to_memory(
-        joined, spark, "append", state_partitions=_state_parts(spark, sf_dir)
+        joined,
+        spark,
+        "append",
+        state_partitions=_state_parts(spark, sf_dir),
+        no_data_batches=False,
     )
 
 

@@ -110,6 +110,7 @@ def run_to_memory(
     output_mode: str,
     timeout_s: int = 180,
     state_partitions: int | None = None,
+    no_data_batches: bool = True,
 ) -> DataFrame:
     """Start ``writer_builder`` (a function stream_df -> DataStreamWriter
     precursor, i.e. the transformed streaming DataFrame), drain it with
@@ -124,22 +125,34 @@ def run_to_memory(
     degrade over the sweep (measured: e06 ran 4s fresh but 30.7s after
     130 prior queries before this cleanup).
 
-    Concurrency contract (ADVICE r03): when ``state_partitions`` is set,
-    the session-global ``spark.sql.shuffle.partitions`` is temporarily
-    overridden for the drain and restored after.  Callers are assumed
-    single-threaded per SparkSession — the driver sweep, pytest, and
-    bench all are.  A host embedding this runner in a multi-threaded
-    session must serialize calls or hand each drain its own
-    ``SparkSession.newSession()`` so a concurrently-planned query can't
-    observe the temporary value."""
+    ``no_data_batches=False`` skips the trailing micro-batch that only
+    advances the watermark and evicts state.  Pass it only for a query
+    whose output never comes from eviction (an inner join emits on
+    match); outer joins and append-mode window aggregates emit exactly
+    there.  The checkpoint is deleted after the drain, so the evicted
+    state is never read again.
+
+    Concurrency contract (ADVICE r03): ``state_partitions`` (as
+    ``spark.sql.shuffle.partitions``) and ``no_data_batches`` (as
+    ``spark.sql.streaming.noDataMicroBatches.enabled``) temporarily
+    override session-global confs for the drain; both are restored
+    after.  Callers are assumed single-threaded per SparkSession — the
+    driver sweep, pytest, and bench all are.  A host embedding this
+    runner in a multi-threaded session must serialize calls or hand
+    each drain its own ``SparkSession.newSession()`` so a
+    concurrently-planned query can't observe the temporary values."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
     checkpoint = _tmpdir("ckpt")
-    saved_shuffle = None
+    # The streaming query reads these at (micro-batch) planning time;
+    # restore the session values only after the drain.
+    overrides = {}
     if state_partitions is not None:
-        # The streaming query reads shuffle partitions at (micro-batch)
-        # planning time; restore the session value only after the drain.
-        saved_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
+    if not no_data_batches:
+        overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    saved = {key: spark.conf.get(key) for key in overrides}
+    for key, value in overrides.items():
+        spark.conf.set(key, value)
     try:
         q = drain(
             spark,
@@ -162,8 +175,8 @@ def run_to_memory(
         # Python traffic and the same schema and row order.
         return spark.table(name).localCheckpoint(eager=True)
     finally:
-        if saved_shuffle is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", saved_shuffle)
+        for key, value in saved.items():
+            spark.conf.set(key, value)
         spark.catalog.dropTempView(name)
         shutil.rmtree(checkpoint, ignore_errors=True)
 

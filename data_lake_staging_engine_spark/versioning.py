@@ -52,6 +52,7 @@ import os
 import re
 import uuid
 import warnings
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -156,7 +157,8 @@ class VersionedTable:
         self,
         df: DataFrame,
         partition_by: tuple[str, ...] = (),
-        extra: dict | None = None,
+        extra: dict | Callable[[], dict] | None = None,
+        sidecars: dict[str, DataFrame] | None = None,
     ) -> int:
         """Write the next version directory, then flip the pointer.
         The data write completes before the manifest references it, so
@@ -166,7 +168,14 @@ class VersionedTable:
         ``partition_by`` lays the version out as a partitioned tree
         (the compaction consumer keeps its date layout for pruning);
         ``extra`` records caller metadata on the version entry (e.g.
-        ``compacted_through`` — the highest micro-batch folded in).
+        ``compacted_through`` — the highest micro-batch folded in); a
+        function there is called after the data writes, so the entry
+        can record what they observed.  ``sidecars`` maps
+        ``_``-prefixed names to frames written as parquet dirs INSIDE
+        the version dir after the main frame and before the flip:
+        Spark's reader of the version skips them (the leading ``_``),
+        and pinning, the orphan sweep and ``vacuum`` cover them with
+        the version (the band index stores its vocab this way).
 
         Contention (VERDICT r14 #4): the manifest is re-read after the
         data write and the flip REFUSES (``ConcurrentPublishError``)
@@ -180,6 +189,12 @@ class VersionedTable:
         genuinely an orphan the next vacuum sweeps, and the winner's
         version is untouched.  Readers resolve paths only through the
         manifest entry, never by constructing ``v<N>`` names."""
+        sidecars = sidecars or {}
+        if any(not name.startswith("_") for name in sidecars):
+            raise ValueError(
+                f"sidecar names {sorted(sidecars)} must start with '_', or "
+                "a read of the version would scan them as table data"
+            )
         meta = self._meta()
         version = (meta["latest"] or 0) + 1
         vdir = os.path.join(self.root, f"v{version}-{uuid.uuid4().hex[:8]}")
@@ -187,6 +202,8 @@ class VersionedTable:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(vdir)
+        for name, side in sidecars.items():
+            side.write.mode("overwrite").parquet(os.path.join(vdir, name))
         current = self._meta()
         if _manifest_state(current) != _manifest_state(meta):
             raise ConcurrentPublishError(
@@ -198,8 +215,7 @@ class VersionedTable:
                 "publish on top of the current manifest."
             )
         entry = {"version": version, "path": vdir}
-        if extra:
-            entry.update(extra)
+        entry.update((extra() if callable(extra) else extra) or {})
         meta["versions"].append(entry)
         meta["latest"] = version
         self._flip(meta)

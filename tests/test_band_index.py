@@ -16,6 +16,11 @@ The contract proven here:
   probing version=1 still answers from the old signatures, and an
   unpinned probe reads ONE manifest entry for both the signatures and
   the banding parameters.
+- the rep space is stored: a bitmap-route version answers a probe
+  without reading the corpus, verifies batch tokens outside its vocab
+  exactly, and a warm probe stays within its job budget; versions
+  published before the rep space was stored probe on the open route
+  with the same rows.
 """
 
 import os
@@ -399,3 +404,152 @@ def test_probe_cost_is_corpus_size_flat(spark, tmp_path):
         f"probe cost grew with corpus size: small={times['small']} "
         f"big={times['big']} — the O(batch) posture is broken"
     )
+
+
+# ---------------------------------------------------------------------------
+# The stored rep space: a bitmap-route version carries the corpus's
+# carriers (mask words on their signature rows) and its vocab, so a
+# probe tokenizes and bands only the batch.
+# ---------------------------------------------------------------------------
+
+
+def test_bitmap_route_probe_never_reads_the_corpus(spark, tmp_path):
+    """A probe against a bitmap-route version answers from the stored
+    rep space alone: handed a corpus whose text raises when read, it
+    returns exactly the rows of a probe handed the real corpus."""
+    newdocs, corpus = _split(spark)
+    idx = BandSignatureIndex(str(tmp_path / "idx"))
+    idx.build(corpus)
+    assert idx.table.entry()["route"] == "bitmap"
+    poisoned = corpus.withColumn(
+        "text", F.raise_error(F.lit("the probe read the corpus text"))
+    )
+    want = _rows(idx.probe(newdocs, corpus))
+    assert any(v == "near" for _d, v, _m in want)  # not vacuous
+    assert _rows(idx.probe(newdocs, poisoned)) == want
+
+
+def test_out_of_vocab_batch_tokens_verify_exactly(spark, tmp_path):
+    """Batch docs made of a corpus doc's tokens plus tokens the corpus
+    never saw sit just above (k = n // 4 new tokens, J >= 0.8) and just
+    below (k = n // 4 + 1, J < 0.8) the threshold against their source.
+    The new tokens set no bit of the stored masks but count in the
+    batch doc's size, so the verdicts must equal an exact Jaccard
+    reference over the same stored candidates."""
+    _newdocs, corpus = _split(spark)
+    idx = BandSignatureIndex(str(tmp_path / "idx"))
+    idx.build(corpus)
+    assert idx.table.entry()["route"] == "bitmap"
+    texts = {r.doc_id: r.text for r in corpus.collect()}
+    vocab = {t for text in texts.values() for t in text.split(" ")}
+    sources = [d for d in sorted(texts) if len(set(texts[d].split(" "))) >= 8][:40]
+    rows = []
+    for i, d in enumerate(sources):
+        n = len(set(texts[d].split(" ")))
+        for side, k in ((0, n // 4), (1, n // 4 + 1)):
+            new = [f"oov{i}x{side}x{j}" for j in range(k)]
+            assert not set(new) & vocab
+            rows.append((10_000_000 + 2 * i + side, " ".join([texts[d], *new])))
+    batch = spark.createDataFrame(rows, "doc_id bigint, text string")
+
+    index = {}
+    for r in idx.signatures(spark).collect():
+        index.setdefault((r.band, r.sig), set()).add(r.doc_id)
+    n_hashes, bands = idx.params()
+    cands = {}
+    for r in _band_signatures(_tokens(batch), n_hashes, bands).collect():
+        cands.setdefault(r.doc_id, set()).update(index.get((r.band, r.sig), ()))
+    want = []
+    for d, text in rows:
+        a = set(text.split(" "))
+        hits = [
+            c
+            for c in cands.get(d, ())
+            if len(a & set(texts[c].split(" ")))
+            / len(a | set(texts[c].split(" ")))
+            >= 0.8
+        ]
+        m = min(hits) if hits else None
+        want.append((d, "near" if m is not None else "unique", m))
+    # not vacuous: an above-threshold doc matches its source, and a
+    # below-threshold doc collides with its source but is rejected
+    src = {10_000_000 + 2 * i + s: d for i, d in enumerate(sources) for s in (0, 1)}
+    assert any(m == src[d] for d, _v, m in want if d % 2 == 0)
+    assert any(
+        src[d] in cands.get(d, ()) and m != src[d] for d, _v, m in want if d % 2
+    )
+    assert _rows(idx.probe(batch, corpus)) == sorted(want)
+
+
+def test_legacy_version_probes_on_the_open_route(spark, tmp_path, monkeypatch):
+    """A version published before the rep space was stored (signatures
+    plus n_hashes/bands only) has no carriers to verify against: it
+    probes on the token-join route, with exactly the rows of a freshly
+    built index."""
+    from data_lake_staging_engine_spark.operators import llmops
+
+    newdocs, corpus = _split(spark)
+    fresh = BandSignatureIndex(str(tmp_path / "fresh"))
+    fresh.build(corpus)
+    legacy = BandSignatureIndex(str(tmp_path / "legacy"))
+    legacy.table.publish(
+        _band_signatures(_tokens(corpus)), extra={"n_hashes": 16, "bands": 4}
+    )
+    calls = []
+    verify = llmops._verify_pairs_token_join
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return verify(*a, **kw)
+
+    monkeypatch.setattr(llmops, "_verify_pairs_token_join", spy)
+    want = _rows(fresh.probe(newdocs, corpus))
+    assert not calls, "a fresh bitmap-route version took the token join"
+    assert _rows(legacy.probe(newdocs, corpus)) == want
+    assert calls, "the legacy version did not take the token-join route"
+
+
+def test_warm_probe_job_budget(spark, sf_dir, tmp_path):
+    """A warm probe of a bitmap-route version at sf0.01 runs at most 12
+    Spark jobs: it bands and masks the batch in one aggregate and
+    verifies in one scan of the stored carriers.  Re-deriving the rep
+    space from the corpus text took 28."""
+    d = load(spark, sf_dir, "documents").select("doc_id", "text")
+    newdocs = d.filter(F.col("doc_id") % 7 == 0)
+    corpus = d.filter(F.col("doc_id") % 7 != 0)
+    idx = BandSignatureIndex(str(tmp_path / "idx"), spark)
+    idx.build(corpus)
+    idx.probe(newdocs, corpus).collect()  # warm
+    sc = spark.sparkContext
+    sc.setJobGroup("warm_band_probe", "warm band probe")
+    try:
+        idx.probe(newdocs, corpus).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("warm_band_probe")
+    assert 0 < len(jobs) <= 12, len(jobs)
+
+
+def test_g32_without_index_root_leaves_no_index_dir(spark):
+    """g32 without ``index_root`` builds its index in a temp store; it
+    returns a checkpointed answer and removes the store, so calls leave
+    no ``dlse_bandidx_*`` dir behind."""
+    import tempfile
+
+    from data_lake_staging_engine_spark.operators.llmops import (
+        g32_dedup_band_probe,
+    )
+
+    def leftovers():
+        return {
+            n
+            for n in os.listdir(tempfile.gettempdir())
+            if n.startswith("dlse_bandidx_")
+        }
+
+    before = leftovers()
+    for _ in range(2):
+        rows = g32_dedup_band_probe(spark, _SF).collect()
+        assert rows
+    assert leftovers() == before

@@ -97,10 +97,13 @@ def test_fits_broadcast_is_inclusive_at_the_budget(monkeypatch):
 
 
 # Hinted broadcasts the rule does not decide, so they stay in the final
-# plan at a zero budget: g30's two batch-id frames, and g32's two
-# batch-sized probe sides (the batch signatures, and the batch side of
-# the verifying band join).  g12's label sides carry no hint (one row
-# per document), so Spark's estimate decides.
+# plan at a zero budget: g30's two batch-id frames.  g32 returns a local
+# checkpoint of its answer (it removes its temporary index before
+# returning), so its final plan holds none; its probe's hinted
+# broadcasts (the vocab and the batch side of the verifying band join)
+# are bounded by construction, and the stored rep space leaves it no
+# size-gated side.  g12's label sides carry no hint (one row per
+# document), so Spark's estimate decides.
 _UNGATED = {
     "g02_dedup_near": 0,
     "g02b_dedup_lsh": 0,
@@ -109,7 +112,7 @@ _UNGATED = {
     "g21_dedup_agreement": 0,
     "g26_dedup_clusters": 0,
     "g30_dedup_incremental": 2,
-    "g32_dedup_band_probe": 2,
+    "g32_dedup_band_probe": 0,
 }
 
 

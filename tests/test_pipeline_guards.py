@@ -107,6 +107,20 @@ def test_timed_out_memory_drain_releases_sink(spark, sf_dir, monkeypatch):
     assert {t.name for t in spark.catalog.listTables() if t.isTemporary} == views
 
 
+def test_e08_drains_in_one_micro_batch(spark, sf_dir):
+    """e08's inner join emits on match, never on state eviction, so its
+    drain skips the no-data micro-batch that would only evict state:
+    one micro-batch runs, and the session's conf is restored after."""
+    from data_lake_staging_engine_spark.registry import registry
+    from data_lake_staging_engine_spark.streaming import runner
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key)
+    assert registry()["e08_stream_stream_join"].fn(spark, sf_dir).count() > 0
+    assert runner.LAST_RUN_STATS["batches"] == 1
+    assert spark.conf.get(key) == before
+
+
 def test_legacy_precompact_leftover_is_refused_not_healed(spark, sf_dir, tmp_path):
     """A table parked beside staged_dir by a crashed rename-swap
     compaction (older releases) stops every pipeline entry with an

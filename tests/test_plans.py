@@ -562,14 +562,24 @@ def test_kmeans_iterates_over_cache_without_window(spark, sf_dir, monkeypatch):
     assert "Window" not in seen[0], seen[0]
 
 
-def test_band_probe_verifies_inside_the_band_join(spark, sf_dir):
+def test_band_probe_verifies_inside_the_band_join(spark, sf_dir, monkeypatch):
     """g32: the popcount verify is the (band, sig) join's own condition,
     so no candidate-pair frame exists — no aggregate keyed on (batch
     doc, candidate), and no exchange between the band join and the
-    verify."""
-    df = _REG["g32_dedup_band_probe"].fn(spark, sf_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    verify.  g32 returns a local checkpoint of the probe's answer, so
+    the plan is the one of the last frame it checkpoints."""
+    cls = type(spark.range(1))
+    plans = []
+    checkpoint = cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    _REG["g32_dedup_band_probe"].fn(spark, sf_dir)
+    plan = plans[-1]
     lines = plan.split("== Initial Plan ==")[0].splitlines()  # final plan
     for line in lines:
         m = re.search(r"HashAggregate\(keys=\[([^\]]*)\]", line)

@@ -219,15 +219,16 @@ def test_open_vocab_branch_matches_bitmap_branch(
 def test_g32_open_vocab_route_matches_bitmap_route(
     spark, sf_dir, monkeypatch, tmp_path
 ):
-    """g32's band-index probe on the open-vocabulary route (forced by a
-    zero bitmap cutoff, so its candidate pairs are verified by the
-    token join) must emit exactly the rows of the default rep-space
-    route.  Both runs probe one stored index."""
+    """g32's band-index probe on the open-vocabulary route (an index
+    built under a zero bitmap cutoff stores no rep space, so its
+    candidate pairs are verified by the token join) must emit exactly
+    the rows of the default rep-space route."""
     import data_lake_staging_engine_spark.operators.llmops as llmops
 
-    root = str(tmp_path / "bandidx")
     fn = llmops.g32_dedup_band_probe
-    base = sorted(tuple(r) for r in fn(spark, sf_dir, root).collect())
+    base = sorted(
+        tuple(r) for r in fn(spark, sf_dir, str(tmp_path / "bitmap")).collect()
+    )
     calls = []
     verify = llmops._verify_pairs_token_join
 
@@ -237,7 +238,9 @@ def test_g32_open_vocab_route_matches_bitmap_route(
 
     monkeypatch.setattr(llmops, "_BITMAP_MAX_VOCAB", 0)
     monkeypatch.setattr(llmops, "_verify_pairs_token_join", spy)
-    forced = sorted(tuple(r) for r in fn(spark, sf_dir, root).collect())
+    forced = sorted(
+        tuple(r) for r in fn(spark, sf_dir, str(tmp_path / "open")).collect()
+    )
     monkeypatch.undo()
     assert calls, "the token-join route was not taken"
     assert any(v == "near" for _d, v, _m in base)
