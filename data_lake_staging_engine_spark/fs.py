@@ -1,33 +1,26 @@
-"""Filesystem abstraction for the maintenance ops (VERDICT r12 #9).
+"""Filesystem primitives and the staging layer's one commit protocol.
 
-``compact_staged`` (commit-marker listing, leaf sweep) and
-``VersionedTable`` (manifest flip, vacuum) need a handful of metadata
-primitives (list, rename, recursive delete, small-file read/write)
-that the DataFrame API does not expose.  Until round 13 they were
-local-POSIX only and REFUSED URI paths; this module lifts that through
-the Hadoop FileSystem API (``spark._jvm.org.apache.hadoop.fs``), which
-is how Spark itself reaches hdfs://, s3a://, abfs://, gs://, and
-file:// — so the maintenance ops now run where the data actually
-lives, with the local path keeping its exact pre-round-13 primitives.
+The maintenance ops need metadata primitives (list, rename, recursive
+delete, small-file read/write) that the DataFrame API does not expose.
+``filesystem_for(path, spark)`` picks the backend:
 
-Semantics by backend (stated, not hidden):
+- ``LocalFS`` for bare paths — POSIX; ``replace`` is ``os.replace``,
+  ATOMIC.
+- ``HadoopFS`` for URI-schemed paths (hdfs://, s3a://, file://, ...),
+  through the Hadoop FileSystem API Spark itself uses; it needs a live
+  SparkSession.  ``rename`` is atomic on HDFS and local ``file://``,
+  a copy+delete on object stores.  ``replace`` is delete-dst +
+  rename-src (the API has no portable overwrite-rename), which opens a
+  crash window where the destination is MISSING.
 
-- ``LocalFS`` — POSIX.  ``replace`` is ``os.replace``: ATOMIC.
-- ``HadoopFS`` — whatever the scheme's FileSystem provides.
-  ``rename`` (to a non-existent destination) is atomic on HDFS and
-  on local ``file://``; on object stores (s3a://) it is a copy+delete
-  — correct but neither atomic nor O(1).  ``replace`` is implemented
-  as create-tmp + delete-dst + rename-tmp (the FileSystem API has no
-  portable overwrite-rename), which opens a crash window where the
-  destination is MISSING and the ``.tmp`` holds the new content;
-  callers that need crash safety must implement tmp-adoption recovery
-  on read (``VersionedTable._meta`` does).  Single-writer discipline
-  (already the documented contract for every maintenance op here) is
-  assumed throughout.
-
-``filesystem_for(path, spark)`` picks the backend: URI-schemed paths
-get ``HadoopFS`` (a live SparkSession is required for the JVM
-gateway), bare paths get ``LocalFS``.
+The commit protocol: staged state that is replaced whole — the
+``VersionedTable`` manifest and ``IncrementalLoader``'s processed-files
+list — is a small JSON file written by ``write_json_replace`` (new
+content to ``<path>.tmp``, then replace) and read by
+``read_json_replaced`` (which adopts the ``.tmp`` left in the crash
+window).  A kill at any point leaves the old or the new content
+readable, never an empty or half-written file.  One writer per file at
+a time is assumed.
 """
 
 from __future__ import annotations
@@ -121,7 +114,7 @@ class HadoopFS:
 
     def replace(self, src: str, dst: str) -> None:
         """delete-then-rename — NOT atomic (see module docstring);
-        callers needing crash safety must adopt the ``.tmp`` on read."""
+        ``read_json_replaced`` covers the crash window."""
         dstp = self._p(dst)
         if self._fs.exists(dstp):
             self._fs.delete(dstp, False)
@@ -170,11 +163,45 @@ def filesystem_for(path: str, spark: SparkSession | None = None):
     return LocalFS()
 
 
-def write_json_replace(fs, path: str, obj: dict) -> None:
+def write_json_replace(fs, path: str, obj) -> None:
     """Write ``obj`` to ``path`` via the ``.tmp`` + replace protocol:
     atomic on LocalFS; on HadoopFS the crash window leaves ``.tmp``
-    holding the NEW content and possibly no ``path`` — readers adopt
-    the tmp (see VersionedTable._meta)."""
+    holding the NEW content and possibly no ``path`` — read it back
+    with ``read_json_replaced``, which adopts the tmp."""
     tmp = path + ".tmp"
     fs.write_text(tmp, json.dumps(obj))
     fs.replace(tmp, path)
+
+
+def read_json_replaced(fs, path: str, default):
+    """Read what ``write_json_replace`` wrote to ``path``; ``default``
+    when nothing was ever written."""
+    if not fs.exists(path):
+        # A HadoopFS replace cut after its delete and before its
+        # rename: the .tmp holds the COMPLETE new content (written
+        # before the delete), so adopt it.  A stray .tmp next to a live
+        # ``path`` is pre-replace debris, ignored because ``path``
+        # exists.
+        tmp = path + ".tmp"
+        if not fs.exists(tmp):
+            # TOCTOU: between the two exists() checks a CONCURRENT
+            # reader may have adopted the tmp — ``path`` exists again
+            # and "no tmp" must not be read as "nothing written".
+            # Re-check before concluding emptiness.
+            if fs.exists(path):
+                return json.loads(fs.read_text(path))
+            return default
+        try:
+            fs.rename(tmp, path)
+        except Exception:
+            # Two readers can race the adoption (the loser's rename
+            # fails once the winner consumed the .tmp), and a read-only
+            # reader may lack write permission.  Either way the CONTENT
+            # is still reachable: re-check ``path`` (the winner's
+            # rename landed) and fall back to reading the .tmp directly
+            # without mutating.
+            if not fs.exists(path):
+                if fs.exists(tmp):
+                    return json.loads(fs.read_text(tmp))
+                return default
+    return json.loads(fs.read_text(path))

@@ -58,7 +58,11 @@ from pyspark.sql.types import ArrayType, StructType
 
 from data_lake_staging_engine_spark.functions.determinism import as_long, dec_sum, duck_round
 from data_lake_staging_engine_spark.registry import query
-from data_lake_staging_engine_spark.session import _n_shuffle_parts, release_local_checkpoint
+from data_lake_staging_engine_spark.session import (
+    _n_shuffle_parts,
+    local_checkpoint_rdd,
+    release_local_checkpoint,
+)
 from data_lake_staging_engine_spark.sources import load
 
 
@@ -3154,18 +3158,6 @@ def _min_label_components(pairs: DataFrame, max_rounds: int = 64) -> DataFrame:
     return labels
 
 
-def _local_ckpt_rdd_id(df: DataFrame) -> int | None:
-    """RDD id behind a localCheckpoint-ed frame (None when the frame is
-    not a checkpoint) — observation seam for the posture tests."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            return plan.rdd().id()
-    except Exception:
-        pass
-    return None
-
-
 def _min_label_components_rounds(
     pairs: DataFrame, max_rounds: int = 64, round_log: list | None = None
 ) -> tuple[DataFrame, int]:
@@ -3297,9 +3289,9 @@ def _min_label_components_rounds(
                         "broadcast": will_broadcast,
                         "plan_broadcast": "BroadcastHashJoin"
                         in neigh._jdf.queryExecution().executedPlan().toString(),
-                        "ckpt_rdd_id": _local_ckpt_rdd_id(new_labels),
-                        "released_rdd_id": _local_ckpt_rdd_id(prev_ckpt),
-                        "frontier_checkpointed": _local_ckpt_rdd_id(frontier)
+                        "ckpt_rdd_id": local_checkpoint_rdd(new_labels).id(),
+                        "released_rdd_id": local_checkpoint_rdd(prev_ckpt).id(),
+                        "frontier_checkpointed": local_checkpoint_rdd(frontier)
                         is not None,
                     }
                 )

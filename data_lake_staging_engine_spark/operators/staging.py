@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from data_lake_staging_engine_spark.catalog import SessionCatalogSync, drop_managed_table
+from data_lake_staging_engine_spark.fs import filesystem_for
 from data_lake_staging_engine_spark.functions.determinism import (
     as_long,
     dec_sum,
@@ -49,6 +50,7 @@ from data_lake_staging_engine_spark.functions.determinism import (
 from data_lake_staging_engine_spark.registry import query
 from data_lake_staging_engine_spark.sources import load
 from data_lake_staging_engine_spark.sources.incremental import IncrementalLoader
+from data_lake_staging_engine_spark.versioning import VersionedTable
 
 
 def _tmpdir(tag: str) -> str:
@@ -493,53 +495,56 @@ def make_keyed_upsert(
     key_cols: tuple[str, ...] = ("user_id",),
     order_cols: tuple[str, ...] = ("ts", "event_id"),
 ):
-    """foreachBatch callable maintaining a keep-latest state table via
-    read-merge-ATOMIC-SWAP — the production body behind a19, exported
-    so the kill/restart recovery tests exercise THIS code rather than
-    a copy that could silently drift (round-11 review finding).
+    """foreachBatch callable maintaining a keep-latest state table at
+    ``state_dir`` — the production body behind a19, exported so the
+    kill/restart recovery tests exercise THIS code rather than a copy
+    that could drift.
 
-    Crash recovery: a kill between the two renames of a previous
-    attempt of the SAME batch leaves no 'current' but an intact
-    pre-batch snapshot under old{batch_id} — restore it and recompute
-    (the merge is deterministic, so the replay converges).  Every
-    other interruption point is already safe: mid-write kills leave a
-    partial v{batch_id} that the replay overwrites, and a kill after
-    the final rename replays onto the post-state, where keep-latest is
-    idempotent."""
+    The state is a ``VersionedTable``: each batch reads the latest
+    version, merges its own latest row per key in, publishes the
+    result as the next version and vacuums down to it.  Crash
+    recovery is the table's commit protocol: a kill before the
+    manifest flip leaves an orphan version dir the next vacuum sweeps
+    and the pre-batch state intact, so the replay recomputes the same
+    merge; a kill after the flip replays onto the post-batch state,
+    where keep-latest is idempotent.  A ``state_dir`` in the layout
+    older releases wrote (``current/`` or ``old<N>/``, no manifest) is
+    refused."""
+    table = VersionedTable(state_dir, spark)
+    fs = filesystem_for(state_dir, spark)
+    if table.latest() is None and fs.isdir(state_dir):
+        legacy = sorted(
+            n for n in fs.listdir(state_dir) if re.fullmatch(r"current|old\d+", n)
+        )
+        if legacy:
+            raise RuntimeError(
+                f"{state_dir!r} holds keyed-upsert state in the layout "
+                f"older releases wrote ({legacy}, no manifest).  To keep "
+                "it, publish current/ (or old<N>/ if current/ is missing) "
+                "as the first version with VersionedTable(state_dir, "
+                "spark).publish(...), then delete those dirs; to start "
+                "over, delete the dir."
+            )
     w = Window.partitionBy(*key_cols).orderBy(
         *[F.desc(c) for c in order_cols]
     )
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch_latest = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
+    def keep_latest(df: DataFrame) -> DataFrame:
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        current_path = os.path.join(state_dir, "current")
-        tmp_old = os.path.join(state_dir, f"old{batch_id}")
-        if not os.path.isdir(current_path) and os.path.isdir(tmp_old):
-            os.rename(tmp_old, current_path)
-        if os.path.isdir(current_path):
-            current = spark.read.schema(batch_df.schema).parquet(current_path)
-            merged = (
-                current.unionByName(batch_latest)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        merged = keep_latest(batch_df)
+        if table.latest() is not None:
+            current = spark.read.schema(batch_df.schema).parquet(
+                table.entry()["path"]
             )
-        else:
-            merged = batch_latest
-        next_path = os.path.join(state_dir, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(next_path)
-        # atomic-swap the 'current' pointer (rename is atomic per-dir);
-        # clear any leftover old{batch_id} from a replayed attempt
-        # first — rename onto an existing dir raises.
-        shutil.rmtree(tmp_old, ignore_errors=True)
-        if os.path.isdir(current_path):
-            os.rename(current_path, tmp_old)
-        os.rename(next_path, current_path)
-        shutil.rmtree(tmp_old, ignore_errors=True)
+            merged = keep_latest(current.unionByName(merged))
+        table.publish(merged)
+        table.vacuum(1)
 
     return upsert
 
@@ -557,38 +562,41 @@ def a19_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming keyed upsert (CDC-style merge) via foreachBatch: a
     multi-batch replay maintains a 'current state per user' table —
     each micro-batch's latest row per key replaces that key's previous
-    state (read current + union batch + keep-latest + atomic swap).
+    state (read latest version + union batch + keep-latest + publish).
 
     Equals the batch keep-latest dedup (a07 semantics) regardless of
     how files were split into micro-batches — the exactly-once upsert
-    argument. At warehouse scale the read-modify-write swap is what
-    MERGE INTO does on a transactional table format (Delta/Iceberg);
-    on plain parquet the atomic-directory-swap here is the idempotent
-    equivalent. Tie-break (ts, event_id) keeps replays deterministic."""
+    argument. At warehouse scale the read-modify-write is what MERGE
+    INTO does on a transactional table format (Delta/Iceberg); on
+    plain parquet the VersionedTable manifest flip is the idempotent
+    equivalent. Tie-break (ts, event_id) keeps replays deterministic.
+    The answer is checkpointed and the state dir removed before
+    returning, so no call leaves a state directory behind."""
     from data_lake_staging_engine_spark.streaming.runner import drain, landing_copy
-
     landing_dir, schema = landing_copy(spark, sf_dir, "events", n_files=4)
     state_dir = _tmpdir("upsert_state")
     checkpoint = _tmpdir("ckpt19")
-    upsert = make_keyed_upsert(spark, state_dir)
     try:
         drain(
             spark,
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(landing_dir)
-            .writeStream.foreachBatch(upsert)
+            .writeStream.foreachBatch(make_keyed_upsert(spark, state_dir))
             .option("checkpointLocation", checkpoint),
             180,
         )
+        final = spark.read.schema(schema).parquet(
+            VersionedTable(state_dir).entry()["path"]
+        )
+        return final.select(
+            "user_id",
+            F.col("event_id").alias("last_event_id"),
+            F.col("event_type").alias("last_event_type"),
+        ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(checkpoint, ignore_errors=True)
-    final = spark.read.schema(schema).parquet(os.path.join(state_dir, "current"))
-    return final.select(
-        "user_id",
-        F.col("event_id").alias("last_event_id"),
-        F.col("event_type").alias("last_event_type"),
-    )
+        shutil.rmtree(state_dir, ignore_errors=True)
 
 
 @query(
@@ -746,8 +754,6 @@ def a22_versioned_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``versioning.VersionedTable`` (which adds the ``vacuum`` retention
     lifecycle — tests/test_versioning.py); this query now drives that
     surface."""
-    from data_lake_staging_engine_spark.versioning import VersionedTable
-
     table = VersionedTable(_tmpdir("versioned"))
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "value", "ts")
 

@@ -15,9 +15,12 @@ with ``start()`` leaves a continuous micro-batch loop. The registered
 query ``a13_stream_ingest_foreachbatch`` is this pipeline driven
 end-to-end under the driver's oracle check.
 
-At cluster scale nothing here changes: the file-source checkpoint
-tracks S3 listings, the partitioned append is executor-parallel, and
-the catalog sync is a driver-side metadata call per batch.
+At cluster scale the file-source checkpoint tracks S3 listings and
+the partitioned append is executor-parallel.  The catalog sync is NOT
+a metadata call yet: ``SessionCatalogSync.sync_table`` drops the
+catalog table and rewrites the whole staged view into the warehouse on
+every ``sync()`` (each drain ends in one), O(table) per drain.  Making
+it metadata-only is ROADMAP open item 1.
 """
 
 from __future__ import annotations
@@ -42,6 +45,7 @@ from data_lake_staging_engine_spark.session import DEFAULT_SF_DIR, get_spark, tu
 from data_lake_staging_engine_spark.sources import TABLES, load, register_views
 from data_lake_staging_engine_spark.streaming.runner import drain
 from data_lake_staging_engine_spark.fs import filesystem_for
+from data_lake_staging_engine_spark.versioning import VersionedTable
 
 
 class StagingPipeline:
@@ -344,20 +348,13 @@ class StagingPipeline:
     def _versions_root(self) -> str:
         return self.staged_dir + ".versions"
 
-    def _versions_manifest_exists(self) -> bool:
-        fs = self._staged_fs
-        manifest = os.path.join(self._versions_root, "manifest.json")
-        return fs.exists(manifest) or fs.exists(manifest + ".tmp")
-
     def _versioned_table(self):
-        from data_lake_staging_engine_spark.versioning import VersionedTable
-
         return VersionedTable(self._versions_root, self.spark)
 
     def _staged_view(self) -> DataFrame:
         """The staged table as readers must see it — the one read path.
 
-        The latest compacted snapshot (if a manifest exists) UNION the
+        The latest compacted snapshot (if one was published) UNION the
         live staged_dir leaves (if staged_dir exists).  Under a
         snapshot only live leaves with ``_ingest_batch`` above its
         ``compacted_through`` count, so folded leaves whose delete has
@@ -370,8 +367,9 @@ class StagingPipeline:
         read = self.spark.read.schema(schema).parquet
         frames: list[DataFrame] = []
         through = None
-        if self._versions_manifest_exists():
-            entry = self._versioned_table().entry()
+        vt = self._versioned_table()
+        if vt.latest() is not None:
+            entry = vt.entry()
             frames.append(read(entry["path"]))
             through = int(entry.get("compacted_through", -1))
         if self._staged_fs.isdir(self.staged_dir):
@@ -604,6 +602,4 @@ class Engine:
         """Manifest-versioned parquet table (a22's shape as a reusable
         surface) — publish/read/time-travel/vacuum; see
         versioning.VersionedTable."""
-        from data_lake_staging_engine_spark.versioning import VersionedTable
-
         return VersionedTable(root, self.spark)

@@ -156,27 +156,32 @@ def _n_shuffle_parts(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+def local_checkpoint_rdd(df):
+    """The JVM RDD behind a ``localCheckpoint``-ed DataFrame — the
+    analyzed plan's ``LogicalRDD`` holds it — or None when ``df`` is
+    not a checkpoint.  Also None if a future Spark hides the plan
+    internals: callers treat the RDD as best-effort."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            return plan.rdd()
+    except Exception:
+        pass
+    return None
+
+
 def release_local_checkpoint(df) -> None:
     """Free the block-manager storage behind a ``localCheckpoint``-ed
     DataFrame once nothing will read it again.
 
     ``Dataset.unpersist()`` is a NO-OP for checkpoints — they never
-    register with the CacheManager — so the one operator family that
-    checkpoints per round (the g26/g28 components delta-iteration)
-    would otherwise hold every superseded round's blocks until session
-    end (ADVICE r07).  The other iterative operators (g13 k-means,
-    g03e's IVF build) re-derive their loop state lazily and take a
-    SINGLE final checkpoint that the caller still needs — nothing to
-    release there (ADVICE r08 premise probed round 9). The checkpointed RDD lives inside the analyzed plan's
-    ``LogicalRDD``; unpersisting THAT rdd releases the blocks (verified
-    against ``sc.getRDDStorageInfo`` on pyspark 4.1.2).
-
-    Best-effort by design: storage is bounded (max_rounds-capped) even
-    if a future Spark hides the internals, so failure to release must
-    never fail the query."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
+    register with the CacheManager — so the per-round checkpoints of
+    the g26/g28 components delta-iteration would otherwise live until
+    session end.  Unpersisting the checkpointed RDD
+    (``local_checkpoint_rdd``) releases the blocks (verified against
+    ``sc.getRDDStorageInfo`` on pyspark 4.1.2).  Best-effort: a frame
+    whose RDD cannot be reached is left alone, since storage stays
+    bounded by the round cap."""
+    rdd = local_checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)

@@ -9,9 +9,10 @@ missing: immutable version dirs accumulate unboundedly without a
 Design (same discipline as the table formats it miniaturizes):
 
 - Each ``publish`` writes an IMMUTABLE ``v<N>`` directory, then flips
-  the manifest pointer atomically (``os.replace``).  Readers resolve
-  every access through the manifest, so an in-progress publish can
-  never be half-read and old versions stay queryable.
+  the manifest pointer through ``fs.write_json_replace`` (the one
+  commit protocol, see ``fs``).  Readers resolve every access through
+  the manifest, so an in-progress publish can never be half-read and
+  old versions stay queryable.
 - ``vacuum(keep_last=N)`` prunes old versions MANIFEST-FIRST: the
   pruned manifest is flipped in atomically BEFORE any directory is
   deleted.  A crash mid-vacuum therefore leaves only orphan dirs no
@@ -25,29 +26,19 @@ Design (same discipline as the table formats it miniaturizes):
   knob); the current and previous versions are always retained
   (``keep_last`` is floored at 1, and ``latest`` is always kept).
 
-Storage backends (round 13, VERDICT r12 #9): bare paths use POSIX
-primitives (``os.replace`` manifest flip — atomic), URI-schemed roots
-(hdfs://, s3a://, file://) go through the Hadoop FileSystem gateway
-(``fs.HadoopFS``) and require a live SparkSession at construction.
-The Hadoop flip is ``.tmp`` + delete + rename — atomic per-op on
-HDFS-class stores but with a crash window where the manifest is
-missing and ``manifest.json.tmp`` holds the NEW content; ``_meta``
-ADOPTS the tmp in that state, so the journal protocol stays
-crash-safe.  Single-writer discipline (one publisher/vacuumer at a
-time) is the documented contract on every backend; for concurrent
-multi-writer commits use a transactional table format.  Round 15
-(VERDICT r14 #4): ``publish`` re-reads the manifest before its flip
-and raises ``ConcurrentPublishError`` if ``latest`` moved since its
-snapshot — contention is DETECTED (loud error, store consistent),
-not serialized.  Round 16 (ADVICE r15): each publish writes a
-collision-free ``v<N>-<token>`` dir, so a CAS-losing publish can
-never have overwritten the winner's already-referenced data — the
-loser's dir really is an orphan the next vacuum sweeps.
+Users: the compacted staged table (``StagingPipeline.compact_staged``),
+the band index (``llmops.BandSignatureIndex``), a19's keyed-upsert state
+(``operators.staging.make_keyed_upsert``) and a22.  The root is created
+by the first ``publish``; reading a root nothing was published to
+creates nothing.  URI-schemed roots (hdfs://, s3a://, file://) go
+through ``fs.HadoopFS`` and need a live SparkSession.  Single-writer
+discipline is the contract on every backend: ``publish`` and
+``vacuum`` DETECT a concurrent writer (``ConcurrentWriterError``), they
+do not serialize it.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import uuid
@@ -57,8 +48,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from data_lake_staging_engine_spark.fs import (
-    URI_SCHEME as _URI_SCHEME,
     filesystem_for,
+    read_json_replaced,
     write_json_replace,
 )
 
@@ -105,43 +96,12 @@ class VersionedTable:
         # the POSIX primitives and need none (pre-round-13 behavior).
         self._fs = filesystem_for(root, spark)
         self.manifest = os.path.join(root, "manifest.json")
-        self._fs.makedirs(root)
 
     # -- manifest ---------------------------------------------------------
     def _meta(self) -> dict:
-        if not self._fs.exists(self.manifest):
-            # Hadoop-backend crash window: the flip's delete landed but
-            # its rename did not — the .tmp holds the COMPLETE new
-            # manifest (written before the delete), so adopt it.  On
-            # the POSIX backend os.replace is atomic and a stray .tmp
-            # next to a live manifest is just pre-replace debris
-            # (ignored here because the manifest exists).
-            tmp = self.manifest + ".tmp"
-            if not self._fs.exists(tmp):
-                # TOCTOU (found by the round-14 adoption-race stress
-                # test, beyond ADVICE r13's scenario): between the two
-                # exists() checks a CONCURRENT reader may have adopted
-                # the tmp — the manifest exists again and "no tmp"
-                # must not be read as "empty table".  Re-check before
-                # concluding emptiness.
-                if self._fs.exists(self.manifest):
-                    return json.loads(self._fs.read_text(self.manifest))
-                return {"latest": None, "versions": []}
-            try:
-                self._fs.rename(tmp, self.manifest)
-            except Exception:
-                # ADVICE r13: two readers can race the adoption (the
-                # loser's rename fails once the winner consumed the
-                # .tmp), and a read-only reader may lack write
-                # permission on the root.  Either way the CONTENT is
-                # still reachable — re-check the manifest (winner's
-                # rename landed) and fall back to reading the .tmp
-                # directly without mutating.
-                if not self._fs.exists(self.manifest):
-                    if self._fs.exists(tmp):
-                        return json.loads(self._fs.read_text(tmp))
-                    return {"latest": None, "versions": []}
-        return json.loads(self._fs.read_text(self.manifest))
+        return read_json_replaced(
+            self._fs, self.manifest, {"latest": None, "versions": []}
+        )
 
     def _flip(self, meta: dict) -> None:
         write_json_replace(self._fs, self.manifest, meta)
@@ -197,6 +157,7 @@ class VersionedTable:
             )
         meta = self._meta()
         version = (meta["latest"] or 0) + 1
+        self._fs.makedirs(self.root)
         vdir = os.path.join(self.root, f"v{version}-{uuid.uuid4().hex[:8]}")
         w = df.write.mode("overwrite")
         if partition_by:

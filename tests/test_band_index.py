@@ -51,10 +51,6 @@ from data_lake_staging_engine_spark.operators.llmops import BandSignatureIndex
 from data_lake_staging_engine_spark.plans.inspect import physical_plan
 from data_lake_staging_engine_spark.sources import load
 
-import pytest
-# Slow tier (pytest.ini): 10x-replica / persisted-store studies: racing-republish contention, corpus-size-flat probe cost, multi-batch daily loop, cross-session build/dispose.
-pytestmark = pytest.mark.slow
-
 d = load(spark, {sf!r}, "documents").select("doc_id", "text")
 corpus = d.filter(F.col("doc_id") % 7 != 0)
 v = BandSignatureIndex({root!r}).build(corpus)

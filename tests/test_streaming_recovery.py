@@ -31,8 +31,10 @@ Recovery-hardening these tests pinned into the engine:
   is a partition column written with dynamic partition overwrite), so
   even a kill after a partial parquet append but before the checkpoint
   commit replays cleanly — pipeline.py:_stage_batch.
-- a19's read-merge-atomic-swap restores the pre-batch snapshot when a
-  kill between the two renames left no 'current' — staging.py:upsert.
+- a19's keyed upsert publishes each merged state as a VersionedTable
+  version: a kill before the manifest flip leaves the pre-batch state
+  (and an orphan dir the next vacuum sweeps), a kill after it replays
+  onto the post-batch state — staging.py:make_keyed_upsert.
 - The keyed-dedup test relies on the parquet STREAMING sink's own
   transactional _spark_metadata log plus dropDuplicates state restored
   from the checkpoint: the post-restart batches see the pre-kill seen-
@@ -209,6 +211,7 @@ def test_upsert_kill_restart_converges(spark, sf_dir):
     from data_lake_staging_engine_spark.operators.staging import (
         make_keyed_upsert,
     )
+    from data_lake_staging_engine_spark.versioning import VersionedTable
 
     e = load(spark, sf_dir, "events")
     schema = e.schema
@@ -234,9 +237,10 @@ def test_upsert_kill_restart_converges(spark, sf_dir):
 
     q = writer().trigger(processingTime="3 seconds").start()
     _stop_after_first_commit(q)
-    assert os.path.isdir(os.path.join(state_dir, "current"))
+    state = VersionedTable(state_dir)
+    assert state.latest() is not None
     n_partial = spark.read.schema(schema).parquet(
-        os.path.join(state_dir, "current")
+        state.entry()["path"]
     ).count()
     land_rest()
     assert 0 < n_partial < e.count(), "stop was not mid-stream"
@@ -244,7 +248,7 @@ def test_upsert_kill_restart_converges(spark, sf_dir):
     q2 = writer().trigger(availableNow=True).start()
     q2.awaitTermination(180)
 
-    final = spark.read.schema(schema).parquet(os.path.join(state_dir, "current"))
+    final = spark.read.schema(schema).parquet(state.entry()["path"])
     expected = (
         spark.read.schema(schema)
         .parquet(landing)
@@ -253,6 +257,74 @@ def test_upsert_kill_restart_converges(spark, sf_dir):
         .drop("_rn")
     )
     _assert_frames_equal(final, expected)
+
+
+@pytest.mark.parametrize("kill", ["before_flip", "after_flip"])
+def test_upsert_kill_points_converge(spark, sf_dir, monkeypatch, kill):
+    """a19's keyed upsert commits each batch through VersionedTable.
+    Fail batch 1 (of 4) once before its manifest flip and once after it
+    (before its vacuum): the drain dies with the pre-batch or the
+    post-batch state published, and a restart from the same checkpoint
+    converges on the batch keep-latest, with the orphan swept."""
+    from data_lake_staging_engine_spark.operators.staging import (
+        make_keyed_upsert,
+    )
+    from data_lake_staging_engine_spark.streaming.runner import drain
+    from data_lake_staging_engine_spark.versioning import VersionedTable
+
+    e = load(spark, sf_dir, "events")
+    schema = e.schema
+    landing, land_rest = _split_landing(
+        spark, e, n_parts=4, key="event_id", prefix="dlse_rec19k_landing_"
+    )
+    land_rest()
+    state_dir = tempfile.mkdtemp(prefix="dlse_rec19k_state_")
+    ckpt = tempfile.mkdtemp(prefix="dlse_rec19k_ckpt_")
+    upsert = make_keyed_upsert(spark, state_dir)
+
+    def writer():
+        return (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(landing)
+            .writeStream.foreachBatch(upsert)
+            .option("checkpointLocation", ckpt)
+        )
+
+    # Batch 0 calls _flip once (its publish; its vacuum has nothing to
+    # prune) and vacuum once, so the second call of either is batch 1's.
+    target = "_flip" if kill == "before_flip" else "vacuum"
+    real = getattr(VersionedTable, target)
+    calls = []
+
+    def failing(self, *args):
+        calls.append(args)
+        if len(calls) == 2:
+            raise RuntimeError(f"injected kill {kill}")
+        return real(self, *args)
+
+    with monkeypatch.context() as m:
+        m.setattr(VersionedTable, target, failing)
+        with pytest.raises(Exception, match=f"injected kill {kill}"):
+            drain(spark, writer(), 180)
+    state = VersionedTable(state_dir)
+    assert state.latest() == (1 if kill == "before_flip" else 2)
+
+    drain(spark, writer(), 180)
+    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
+    expected = (
+        spark.read.schema(schema)
+        .parquet(landing)
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    _assert_frames_equal(
+        spark.read.schema(schema).parquet(state.entry()["path"]), expected
+    )
+    assert [d for d in os.listdir(state_dir) if d.startswith("v")] == [
+        os.path.basename(state.entry()["path"])
+    ]
 
 
 def test_dedup_state_survives_restart(spark, sf_dir, state_backend):
