@@ -20,9 +20,12 @@ Scale design notes:
   `BandSignatureIndex.probe` is its one probe route: it reads one
   manifest entry for the stored version and the parameters the batch
   is banded with, tokenizes only the batch, and verifies inside its
-  (band, sig) join against the stored carriers, so its candidates
+  band join against the stored carriers, so its candidates
   never form a frame of their own.  Open universes use the
-  AllPairs-style prefix-filtered token join.  Pair consumers call
+  AllPairs-style prefix-filtered token join; both exact routes share
+  one PPJoin filter (`_prefix_rows`, `_prefix_side`, `_prefix_keep`).
+  Every banding or LSH join keys on one long (`_band_key`; g02c and
+  g03c pack their key index above the chunk).  Pair consumers call
   `_jaccard_pairs`; rep-space consumers (g26, g30) call
   `_near_rep_pairs`, which on open vocabularies returns the lazy
   token-join doc pairs and no group map.
@@ -47,6 +50,7 @@ Scale design notes:
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 import warnings
@@ -343,9 +347,11 @@ _DEGENERATE_COLLISIONS_PER_REP = 16_384
 # prefix collision join, round 16, 10x replica); the largest side any
 # site ships at that replica is 14.8 MB, so no decision at sf0.01,
 # sf0.1 or 10x depends on the exact value.  The hash relation built
-# from a side measured 1.6-6x its estimate there (page rounding; 6x
-# for the two-column (band, sig) key), so a side at the budget holds
-# up to ~600 MB of heap.
+# from a side measured 1.6-2.7x its estimate (page rounding; the
+# single-long banding keys at sf0.1: 2.4x for g03c's 2.3 MB side, 2.7x
+# for g02c's 4.5 MB, with a ~1 MB floor under small sides — the
+# two-column keys they replace built 64-68 MB whatever the side), so
+# a side at the budget holds up to ~270 MB of heap.
 _BROADCAST_BYTES = 100 * 1024 * 1024
 
 
@@ -650,6 +656,63 @@ def _prefix_len(n: Column, threshold: float) -> Column:
     return n - F.ceil(F.lit(threshold) * n - F.lit(1e-9)) + 1
 
 
+# The one PPJoin candidate filter of both exact routes — the bitmap
+# route over (rep, n, tok_id) members, the token join over (doc_id, n,
+# tok) — in three pieces: the prefix rows, the two sides of their
+# collision join, and the keep predicate over a collision.
+
+
+def _prefix_rows(mem: DataFrame, key: str, tok: str, threshold: float) -> DataFrame:
+    """(key, n, rnk, tok): each (key, n, tok) member's first
+    ``_prefix_len`` tokens of the global order, ranked from 1."""
+    # Global token order: ascending document frequency over the
+    # members, token tiebreak (any total order is sound; rare-first
+    # minimizes collisions).
+    df_ = mem.groupBy(tok).agg(F.count(F.lit(1)).alias("df"))
+    ranked = mem.join(df_, tok).withColumn(
+        "rnk",
+        F.row_number().over(Window.partitionBy(key).orderBy("df", tok)),
+    )
+    return ranked.filter(F.col("rnk") <= _prefix_len(F.col("n"), threshold)).select(
+        key, "n", "rnk", tok
+    )
+
+
+def _prefix_side(pref: DataFrame, key: str, tok: str, i: str, masks=()) -> DataFrame:
+    """Side ``p{i}`` of the collision join: (r{i}, n{i}, i{i}, tok, *masks)."""
+    return pref.select(
+        F.col(key).alias(f"r{i}"),
+        F.col("n").alias(f"n{i}"),
+        F.col("rnk").alias(f"i{i}"),
+        tok,
+        *masks,
+    ).alias(f"p{i}")
+
+
+def _length_ok(n1: Column, n2: Column, threshold: float) -> Column:
+    """PPJoin length filter: J >= t forces t*|B| <= |A| <= |B|/t (same
+    1e-9 float-ceil guard as the prefix length)."""
+    return F.least(n1, n2) >= (F.lit(threshold) * F.greatest(n1, n2) - F.lit(1e-9))
+
+
+def _prefix_keep(threshold: float) -> Column:
+    """The collisions that go on to the verify: r1 < r2, the length
+    filter and the positional filter."""
+    # PPJoin POSITIONAL filter: a collision at prefix positions
+    # (i1, i2) can still reach the required overlap alpha =
+    # ceil(t/(1+t)*(n1+n2)) only if 1 + min(n1-i1, n2-i2) >= alpha.
+    # Exact: a pair's first common token in the global order is a
+    # collision in both prefixes, and every later common token sits
+    # after it on both sides.  On the dense-universe shape this kills
+    # most of the duplicate collisions (a pair sharing k prefix tokens
+    # otherwise flows through the verify k times: 1.84G collision rows
+    # vs ~124M viable pairs on the 10x study's gram corpus).
+    n1, n2 = F.col("n1"), F.col("n2")
+    alpha = F.lit(threshold / (1.0 + threshold)) * (n1 + n2) - F.lit(1e-9)
+    pos_ok = (F.least(n1 - F.col("i1"), n2 - F.col("i2")) + 1) >= alpha
+    return (F.col("r1") < F.col("r2")) & _length_ok(n1, n2, threshold) & pos_ok
+
+
 def _g02_bitmask(
     toks: DataFrame,
     vocab_n: int,
@@ -713,24 +776,13 @@ def _g02_bitmask(
             F.explode(F.expr(f"flatten(array({ids_exprs}))")).alias("tok_id"),
         )
 
-        # Global token order: ascending document frequency over DISTINCT
-        # sets, tok_id tiebreak (any total order is sound; rare-first
-        # minimizes collisions).
-        df_ = mem.groupBy("tok_id").agg(F.count(F.lit(1)).alias("df"))
-        ranked = mem.join(df_, "tok_id").withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("rep").orderBy("df", "tok_id")
-            ),
-        )
         # Staged once (reps x prefix_len rows — linear, tiny next to
         # the collision stream): read by the collision-budget probe
         # below and by BOTH join sides, instead of re-running the
         # membership window three times.
         obs_pref = Observation()
         pref = (
-            ranked.filter(F.col("rnk") <= _prefix_len(F.col("n"), threshold))
-            .select("rep", "n", "rnk", "tok_id")
+            _prefix_rows(mem, "rep", "tok_id", threshold)
             .observe(obs_pref, F.count(F.lit(1)).alias("rows"))
             .localCheckpoint(eager=True)
         )
@@ -806,22 +858,12 @@ def _g02_bitmask(
         # rows — interleaved 10x A/B read a wash-to-slight-loss for
         # inline there, so expanded outputs take the plain-BHJ tier.
         pref_rows = int(obs_pref.get["rows"])  # observed at checkpoint
-
-        def side(src: DataFrame, i: str, masks: list[Column]) -> DataFrame:
-            return src.select(
-                F.col("rep").alias(f"r{i}"),
-                F.col("n").alias(f"n{i}"),
-                F.col("rnk").alias(f"i{i}"),
-                "tok_id",
-                *masks,
-            ).alias(f"p{i}")
-
         p1m = pref.join(g.reps.select("rep", *wcols), "rep")
         inline = not expand and _fits_broadcast(
-            side(p1m, "2", g.cols("b")), pref_rows
+            _prefix_side(p1m, "rep", "tok_id", "2", g.cols("b")), pref_rows
         )
         src, m1, m2 = (p1m, g.cols("a"), g.cols("b")) if inline else (pref, [], [])
-        p2 = side(src, "2", m2)
+        p2 = _prefix_side(src, "rep", "tok_id", "2", m2)
         bc = _fits_broadcast(p2, pref_rows)
         # Probe-side spread (round 16, second finding): pref is a
         # checkpointed AGGREGATE output small enough for AQE to have
@@ -839,32 +881,8 @@ def _g02_bitmask(
         # so an exchange in its lineage would be pure cost.  The SMJ
         # fallback reshuffles both sides by key anyway, so it keeps
         # the downstream rebalance instead.
-        p1 = side(
-            src.repartition(_n_shuffle_parts(toks.sparkSession)) if bc else src,
-            "1",
-            m1,
-        )
-        # PPJoin length filter: J >= t forces t*|B| <= |A| <= |B|/t, so
-        # size-incompatible collisions are dropped inside the join
-        # (same 1e-9 float-ceil guard as the prefix length).
-        size_ok = F.least("n1", "n2") >= (
-            F.lit(threshold) * F.greatest("n1", "n2") - F.lit(1e-9)
-        )
-        # PPJoin POSITIONAL filter: a collision at prefix positions
-        # (i1, i2) can still reach the required overlap alpha =
-        # ceil(t/(1+t)*(n1+n2)) only if 1 + min(n1-i1, n2-i2) >= alpha
-        # — true near-dups must collide EARLY in the frequency order.
-        # On the dense-universe shape this kills most of the duplicate
-        # collisions (a pair sharing k prefix tokens otherwise flows
-        # through the verify k times: 1.84G collision rows vs ~124M
-        # viable pairs on the 10x study's gram corpus).
-        alpha = F.lit(threshold / (1.0 + threshold)) * (
-            F.col("n1") + F.col("n2")
-        ) - F.lit(1e-9)
-        pos_ok = (
-            F.least(F.col("n1") - F.col("i1"), F.col("n2") - F.col("i2"))
-            + 1
-        ) >= alpha
+        spread = src.repartition(_n_shuffle_parts(toks.sparkSession)) if bc else src
+        p1 = _prefix_side(spread, "rep", "tok_id", "1", m1)
         # NO pre-verify distinct: surviving collisions flow through the
         # (map-side) popcount verify once per survivor instead of
         # paying a candidate-stream-sized shuffle — the dedup happens
@@ -874,7 +892,9 @@ def _g02_bitmask(
             F.broadcast(p2) if bc else p2,
             F.col("p1.tok_id") == F.col("p2.tok_id"),
         )
-        keep = (F.col("r1") < F.col("r2")) & size_ok & pos_ok
+        # The length and positional filters drop size-incompatible and
+        # late collisions inside the join.
+        keep = _prefix_keep(threshold)
         if inline:
             # Fused collision join + popcount verify: the masks ride
             # the rows, qualified pairs dedup after.
@@ -1009,32 +1029,20 @@ def _g02_token_join(toks: DataFrame, threshold: float = 0.8) -> DataFrame:
     magnitude — fixture-dense universes are instead routed to the
     bitmap path by ``_jaccard_pairs``).
 
+    The PPJoin filter is the bitmap route's (``_prefix_rows``,
+    ``_prefix_side``, ``_prefix_keep``): size-incompatible and late
+    collisions drop inside the collision join, before the distinct.
+
     100 TB: shuffle volume is O(docs * prefix_len) on the rare-token
     keys; the verify join is bounded by the candidate count, not the
     corpus square."""
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-    ranked = (
-        toks.join(freq, "tok")
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                Window.partitionBy("doc_id").orderBy("df", "tok")
-            ),
-        )
-        .join(sizes, "doc_id")
-    )
-    pref = ranked.filter(F.col("rnk") <= _prefix_len(F.col("n"), threshold)).select(
-        "doc_id", "tok"
-    )
-    p1, p2 = pref.alias("p1"), pref.alias("p2")
+    pref = _prefix_rows(toks.join(sizes, "doc_id"), "doc_id", "tok", threshold)
+    p1, p2 = (_prefix_side(pref, "doc_id", "tok", i) for i in "12")
     cands = (
-        p1.join(
-            p2,
-            (F.col("p1.tok") == F.col("p2.tok"))
-            & (F.col("p1.doc_id") < F.col("p2.doc_id")),
-        )
-        .select(F.col("p1.doc_id").alias("d1"), F.col("p2.doc_id").alias("d2"))
+        p1.join(p2, F.col("p1.tok") == F.col("p2.tok"))
+        .filter(_prefix_keep(threshold))
+        .select(F.col("r1").alias("d1"), F.col("r2").alias("d2"))
         .distinct()
     )
     return _verify_pairs_token_join(cands, toks, threshold)
@@ -1082,7 +1090,7 @@ def g02b_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k=16 hash functions (seeded xxhash64 variants), 4 bands x 4 rows:
     docs sharing any band signature become candidate pairs via an
-    equi-join on (band, band_signature). Candidates are then verified
+    equi-join on its one long key (``_band_key``). Candidates are then verified
     with exact Jaccard. Approximate recall => rows-only tier; the exact
     twin g02 carries the hash-match burden (SURVEY.md §7 hard-list #6).
 
@@ -1102,19 +1110,31 @@ def g02b_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_lsh_neardup(_tokens(d), probe=_tokens_raw(d))
 
 
+def _band_key(band: Column, sig: Column) -> Column:
+    """The one blocking key of a band bucket: a long hash of the band
+    number and that band's signature."""
+    # Every banding join keys on this single long, so Spark builds a
+    # long-keyed hash relation instead of the page-sized one a
+    # two-column key gets.  Two buckets share a key only if two
+    # distinct (band, sig) pairs hash alike: about n^2 * bands^2 / 2^64
+    # over n docs.
+    return F.xxhash64(band.cast("int"), sig)
+
+
 def _band_signatures(
     toks: DataFrame,
     n_hashes: int = 16,
     bands: int = 4,
     per_doc: tuple[Column, ...] = (),
 ) -> DataFrame:
-    """(doc_id, band, sig) MinHash band signatures over any (doc_id,
-    tok) set stream — the unit the banding family joins on, and the
-    thing a production signature STORE persists (g32 probes new
-    batches against exactly this frame).  One corpus scan, one agg
-    shuffle (see the posexplode note below).  ``per_doc``: aliased
-    aggregates over the same stream computed in that one groupBy and
-    carried on every band row (the band-index probe's mask words)."""
+    """(doc_id, sig) MinHash band signatures over any (doc_id, tok) set
+    stream, one row per band, ``sig`` the band's ``_band_key`` — the
+    unit the banding family joins on, and the thing a production
+    signature STORE persists (g32 probes new batches against exactly
+    this frame).  One corpus scan, one agg shuffle (see the explode
+    note below).  ``per_doc``: aliased aggregates over the same stream
+    computed in that one groupBy and carried on every band row (the
+    band-index probe's mask words)."""
     rows_per_band = n_hashes // bands
     # minhash_i(doc) = min over tokens of hash_i(tok). Hash the (cheap
     # to re-read, expensive to hash) string ONCE per row, then derive
@@ -1129,24 +1149,22 @@ def _band_signatures(
         ],
         *per_doc,
     )
-    # band signature = hash of the band's rows. Emitted as ONE
-    # posexplode over an array of the per-band hashes (pos = band id)
+    # band signature = hash of the band's rows, keyed with its band
+    # number. Emitted as ONE explode over an array of the per-band keys
     # rather than a union of per-band selects: a union re-derives the
     # minhash aggregate per band, which at plan level means re-scanning
     # and re-aggregating the corpus ONCE PER BAND (round-7 PLANS.md
     # audit: 8 documents scans, 11 shuffles for g02b). The array form
     # computes signatures in the same single projection the aggregate
-    # feeds — one corpus scan, one agg shuffle, identical (band, sig)
-    # values.
-    band_sigs = [
-        F.xxhash64(
-            *[F.col(f"h{i}") for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        )
+    # feeds — one corpus scan, one agg shuffle.
+    h = [F.col(f"h{i}") for i in range(n_hashes)]
+    band_keys = [
+        _band_key(F.lit(b), F.xxhash64(*h[b * rows_per_band:(b + 1) * rows_per_band]))
         for b in range(bands)
     ]
     return minhashes.select(
         "doc_id",
-        F.posexplode(F.array(*band_sigs)).alias("band", "sig"),
+        F.explode(F.array(*band_keys)).alias("sig"),
         *minhashes.columns[1 + n_hashes:],
     )
 
@@ -1161,7 +1179,8 @@ def _minhash_lsh_candidates(
 ) -> DataFrame:
     """MinHash banding candidate generation over any (doc_id, tok) set
     stream: docs sharing any band signature (``_band_signatures``)
-    become a candidate (d1 < d2) pair via an equi-join on (band, sig).
+    become a candidate (d1 < d2) pair via an equi-join on its one
+    long key.
     Shuffle volume O(docs * bands).  ``threshold`` is the caller's
     verify cut; it prunes here only with ``g`` (the length filter).
 
@@ -1186,14 +1205,14 @@ def _minhash_lsh_candidates(
     everything fused after it (the popcount verify) run serially
     (measured: 28.1M pairs verified on 1 task = 140-317 s; spread,
     the identical fused verify is ~8 s).  Round-robin beats
-    partition-by-(band,sig) here: a hot bucket's rows spread evenly,
+    partition-by-sig here: a hot bucket's rows spread evenly,
     so per-task pair output balances by construction instead of
     concentrating a b^2/2 block in one task."""
     sigs = _band_signatures(toks, n_hashes=n_hashes, bands=bands)
     # PPJoin LENGTH filter inside the collision join (round 17,
     # VERDICT r16 #4): with mask groups each rep's exact set size is
-    # known (``reps.n``, a popcount), and J >= t forces
-    # t*|B| <= |A| <= |B|/t, so size-incompatible collisions drop
+    # known (``reps.n``, a popcount), so ``_length_ok``'s
+    # size-incompatible collisions drop
     # BEFORE the downstream verify ever fetches their ~480 B of mask
     # words from the rm hashtables — which the 10x component profile
     # showed IS the verify's cost (rm joins + popcount filter: 29.6 s
@@ -1214,8 +1233,8 @@ def _minhash_lsh_candidates(
     # (round 17 regression fix): joining the sizes onto the signature
     # stream above inflates Catalyst's size ESTIMATE (join output =
     # left x right heuristic), so the self-join that auto-broadcast
-    # used to pick BHJ for fell back to a sort-merge — two new (band,
-    # sig) exchanges + sorts on the collision path at bench scale
+    # used to pick BHJ for fell back to a sort-merge — two new
+    # signature exchanges + sorts on the collision path at bench scale
     # (test_plans caught the 9 -> 11 exchange count).  The exact
     # signature row count is n_reps x bands (n_reps OBSERVED at the
     # groups' checkpoint, no extra job).  Past the budget the
@@ -1224,18 +1243,11 @@ def _minhash_lsh_candidates(
     if g is not None and _fits_broadcast(sigs, g.n_reps * bands):
         build = F.broadcast(build)
     a, b_ = sigs.repartition(n_parts).alias("a"), build.alias("b")
-    cond = (
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.sig") == F.col("b.sig"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
+    cond = (F.col("a.sig") == F.col("b.sig")) & (
+        F.col("a.doc_id") < F.col("b.doc_id")
     )
     if g is not None:
-        cond = cond & (
-            F.least(F.col("a.n"), F.col("b.n"))
-            >= F.lit(threshold)
-            * F.greatest(F.col("a.n"), F.col("b.n"))
-            - F.lit(1e-9)
-        )
+        cond = cond & _length_ok(F.col("a.n"), F.col("b.n"), threshold)
     pairs = a.join(b_, cond).select(
         F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
     )
@@ -1255,7 +1267,7 @@ def _minhash_lsh_neardup(toks: DataFrame, probe: DataFrame | None = None) -> Dat
     (the output-sized step, unavoidable).  Sound because band
     signatures are a pure function of the token set and (on this
     branch) mask equality <=> set equality: every doc in a group
-    carries identical (band, sig) rows, so doc-space banding and
+    carries identical signature rows, so doc-space banding and
     rep-space banding produce the same qualified groups and the same
     expanded pairs, jaccard values included (same-mask pairs are 1.0
     by identity on both paths).  Template corpora collapse: the 10x
@@ -1352,25 +1364,25 @@ def g02c_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         sum([F.col(f"b{b}") for b in range(64)], F.lit(0).cast("long")).alias("simhash"),
     )
-    # One posexplode over the 28 two-block keys (pos = key id) instead
-    # of a union of per-key selects: the union form re-derives the
-    # 64-bit signature aggregate per key, re-scanning and
-    # re-aggregating the corpus 28x (round-7 PLANS.md audit: same
-    # defect and same fix as g02b's minhash banding).  Each key packs
-    # two 8-bit blocks into 16 bits.
+    # One explode over the 28 two-block keys instead of a union of
+    # per-key selects: the union form re-derives the 64-bit signature
+    # aggregate per key, re-scanning and re-aggregating the corpus 28x
+    # (round-7 PLANS.md audit: same defect and same fix as g02b's
+    # minhash banding).  Each key packs two 8-bit blocks into a 16-bit
+    # chunk and its block-pair index k above it (k << 16 | chunk), so
+    # the join keys on one long.
     blocks = [
         F.shiftrightunsigned("simhash", i * 8).bitwiseAND(F.lit(0xFF))
         for i in range(8)
     ]
     pair_keys = [
-        F.shiftleft(blocks[i], 8).bitwiseOR(blocks[j])
-        for i in range(8)
-        for j in range(i + 1, 8)
+        F.lit(k << 16).bitwiseOR(F.shiftleft(blocks[i], 8).bitwiseOR(blocks[j]))
+        for k, (i, j) in enumerate(itertools.combinations(range(8), 2))
     ]
     bands = sim.select(
         "doc_id",
         "simhash",
-        F.posexplode(F.array(*pair_keys)).alias("band", "chunk"),
+        F.explode(F.array(*pair_keys)).alias("chunk"),
     )
     a, b_ = bands.alias("a"), bands.alias("b")
     # Hamming verify INSIDE the join (round 17, VERDICT r16 #5): block
@@ -1394,8 +1406,7 @@ def g02c_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         a.join(
             b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
+            (F.col("a.chunk") == F.col("b.chunk"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (
                 F.bit_count(
@@ -1671,8 +1682,10 @@ def g03c_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     real near-dup detection targets, the same construction reaches
     ~0.99 recall with a small fraction of pairs.
 
-    100 TB shape: the bucket join carries only (table, bucket, vec_id)
-    — 48 index rows + 13x48 probe rows per vector, never the
+    100 TB shape: the bucket join carries only (bucket, vec_id), the
+    bucket key packing its table above its 12 bits (table << 12 |
+    bucket; the Hamming-1 probes flip only the low bits) — 48 index
+    rows + 13x48 probe rows per vector, never the
     embeddings; candidate pairs are deduped across tables and the
     vectors join back once for scoring, so the scored set is bounded by
     true collisions, not N^2. b=12 (4096 buckets/table) is what bounds
@@ -1700,8 +1713,9 @@ def g03c_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         x = np.stack(emb.to_numpy()).astype(np.float64)
         sig = (x @ planes) > 0
         weights = (1 << np.arange(n_bits)).astype(np.int64)
+        # one long key per (table, bucket): table << n_bits | bucket
         packed = sig.reshape(len(x), n_tables, n_bits) @ weights
-        return pd.Series(list(packed))
+        return pd.Series(list(packed + (np.arange(n_tables) << n_bits)))
 
     _lsh_buckets.__annotations__ = {"emb": pd.Series, "return": pd.Series}
     lsh_buckets = F.pandas_udf(ArrayType(LongType()))(_lsh_buckets)
@@ -1717,8 +1731,8 @@ def g03c_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe expansion and the index join side otherwise each re-run the
     # whole lineage INCLUDING the Arrow matmul UDF, doubling the
     # dominant per-vector cost (round-7 PLANS.md audit: 4 embeddings
-    # scans). The materialized table is (vec_id, table, bucket) — 48
-    # small rows per vector, never the embeddings.
+    # scans). The materialized table is (vec_id, bucket) — 48 small
+    # rows per vector, never the embeddings.
     # Round 17 negative result (measured, reverted — recorded so a
     # later round does not re-try): checkpointing the full vector
     # frame v instead (embeddings + norms + buckets; q/c then read the
@@ -1728,14 +1742,13 @@ def g03c_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus-sized embedding materialization is strictly worse local
     # I/O than two column-pruned parquet scans.  The skinny-checkpoint
     # form stands.
-    sigs = v.select(
-        "vec_id", F.posexplode("buckets").alias("table", "bucket")
-    ).localCheckpoint(eager=True)
-    # Probe side: each (table, bucket) expands to itself + the 12
-    # single-bit flips, so an exact-bucket join reaches Hamming<=1.
+    sigs = v.select("vec_id", F.explode("buckets").alias("bucket")).localCheckpoint(
+        eager=True
+    )
+    # Probe side: each bucket expands to itself + the 12 single-bit
+    # flips, so an exact-bucket join reaches Hamming<=1.
     probes = sigs.select(
         "vec_id",
-        "table",
         F.explode(
             F.concat(
                 F.array(F.col("bucket")),
@@ -1752,8 +1765,7 @@ def g03c_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = (
         a1.join(
             a2,
-            (F.col("a1.table") == F.col("a2.table"))
-            & (F.col("a1.bucket") == F.col("a2.bucket"))
+            (F.col("a1.bucket") == F.col("a2.bucket"))
             & (F.col("a1.vec_id") < F.col("a2.vec_id")),
         )
         .select(F.col("a1.vec_id").alias("qid"), F.col("a2.vec_id").alias("cid"))
@@ -3801,7 +3813,7 @@ class BandSignatureIndex:
     composing the machinery a22/fs.py already provide).
 
     ``build(corpus)`` computes ``_band_signatures`` over the corpus
-    ONCE and publishes the (doc_id, band, sig) frame as an immutable
+    ONCE and publishes the (doc_id, sig) frame as an immutable
     ``VersionedTable`` version (plain parquet behind an atomically
     flipped manifest — works on bare paths and on hdfs://s3a://
     roots).  Any LATER SparkSession then probes new batches against
@@ -3875,26 +3887,26 @@ class BandSignatureIndex:
         carrier = F.col("doc_id") == F.col("rep")
         obs = Observation()
         stored = sigs.observe(
-            obs, F.sum((carrier & (F.col("band") == 0)).cast("long")).alias("n")
+            obs, F.sum(carrier.cast("long")).alias("n")
         ).select(
             "doc_id",
-            "band",
             "sig",
             *[F.when(carrier, F.col(c)).alias(c) for c in wcols],
         )
         extra.update(route="bitmap", vocab_n=vocab_n, schema=_ddl(stored.schema))
+        # every doc has exactly ``bands`` signature rows
         return self.table.publish(
             stored,
-            extra=lambda: {**extra, "carriers": int(obs.get["n"] or 0)},
+            extra=lambda: {**extra, "carriers": int(obs.get["n"] or 0) // bands},
             sidecars={_VOCAB_SIDECAR: vocab},
         )
 
     def signatures(
         self, spark: SparkSession, version: int | None = None
     ) -> DataFrame:
-        """The (doc_id, band, sig) rows of one version, every corpus doc."""
+        """The (doc_id, sig) rows of one version, every corpus doc."""
         return _read_index(spark, self.table.entry(version)).select(
-            "doc_id", "band", "sig"
+            "doc_id", "sig"
         )
 
     def params(self, version: int | None = None) -> tuple[int, int]:
@@ -3911,12 +3923,12 @@ class BandSignatureIndex:
         """Probe a new batch against the stored index — the 100 TB
         INCREMENTAL near-dup path that g30's docstring prescribes: the
         batch computes only its OWN signatures and probes the index by
-        (band, sig), and the surviving candidates get the exact Jaccard
+        band key, and the surviving candidates get the exact Jaccard
         verify.
 
         Bitmap-route versions (``_probe_rep_space``): the batch is
         tokenized and banded once, and its tokens are mapped to the
-        stored token ids; the verify runs inside the (band, sig) join
+        stored token ids; the verify runs inside the band join
         against the stored carriers and is min-aggregated straight to
         the answer.  ``corpus`` is not read.  Open-route and older
         versions: the candidate corpus docs (a semi-join of the index
@@ -3977,11 +3989,17 @@ def _ddl(schema: StructType) -> str:
 def _read_index(spark: SparkSession, entry: dict) -> DataFrame:
     """One index version's parquet, read with the schema its build
     recorded, so no schema-inference job runs.  Versions published
-    before the schema was recorded infer it."""
+    before the schema was recorded infer it.  Versions published
+    before the one-column band key hold (doc_id, band, sig): their two
+    columns fold through ``_band_key`` here, so they probe on the same
+    key as a fresh version."""
     reader = spark.read
     if "schema" in entry:
         reader = reader.schema(entry["schema"])
-    return reader.parquet(entry["path"])
+    index = reader.parquet(entry["path"])
+    if "band" in index.columns:
+        index = index.withColumn("sig", _band_key(F.col("band"), F.col("sig"))).drop("band")
+    return index
 
 
 def _band_params(entry: dict) -> tuple[int, int]:
@@ -3995,13 +4013,13 @@ def _band_params(entry: dict) -> tuple[int, int]:
 def _probe_candidates(probe_sigs: DataFrame, index: DataFrame) -> DataFrame:
     """Candidate (d1=batch, d2=corpus) pairs: the batch's band
     signatures (banded with the index's recorded parameters) equi-
-    joined to the stored index on (band, sig).  The corpus is never
+    joined to the stored index on the band key.  The corpus is never
     banded here — the plan carries the index scan and only the batch's
     minhash aggregate, which tests/test_band_index.py pins as the
     no-re-banding property."""
     return (
         probe_sigs.alias("p")
-        .join(index.alias("i"), ["band", "sig"])
+        .join(index.alias("i"), "sig")
         .select(
             F.col("p.doc_id").alias("d1"), F.col("i.doc_id").alias("d2")
         )
@@ -4033,8 +4051,8 @@ def _probe_token_join(
     obs_cands = Observation()
     cand_ids = (
         index.join(
-            F.broadcast(probe_sigs.select("band", "sig").distinct()),
-            ["band", "sig"],
+            F.broadcast(probe_sigs.select("sig").distinct()),
+            "sig",
             "left_semi",
         )
         .select("doc_id")
@@ -4067,14 +4085,14 @@ def _probe_rep_space(
 ) -> DataFrame:
     """Rep-space band probe against a bitmap-route version: per-batch-
     doc (d1, near_m = MIN matching corpus id), with the exact popcount
-    verify inside the (band, sig) join, so no candidate pair is ever
+    verify inside the band join, so no candidate pair is ever
     materialized and the corpus text is never read.
 
     The closure property that makes this exact: the stored vocab is
     the corpus's COMPLETE distinct token set, so mask equality <=>
     token-set equality, and the band signatures are a pure function of
     the token set — every doc in a distinct-mask group carries
-    identical (band, sig) rows, so the group is candidate-to-a-batch-
+    identical signature rows, so the group is candidate-to-a-batch-
     doc as a UNIT, its Jaccard against any batch doc is one popcount,
     and its min member (the carrier, whose index rows hold the group's
     mask words) answers match_id.  A batch doc's tokens outside the
@@ -4110,7 +4128,6 @@ def _probe_rep_space(
         )
         .select(
             F.col("doc_id").alias("d1"),
-            F.col("band").alias("p_band"),
             F.col("sig").alias("p_sig"),
             "n",
             *[F.col(c).alias(f"p_{c}") for c in wcols],
@@ -4125,9 +4142,7 @@ def _probe_rep_space(
     jac = shared * F.lit(1.0) / (F.col("n") + n_carrier - shared)
     verified = carriers.join(
         F.broadcast(batch),
-        (F.col("p_band") == F.col("band"))
-        & (F.col("p_sig") == F.col("sig"))
-        & (jac >= threshold),
+        (F.col("p_sig") == F.col("sig")) & (jac >= threshold),
     )
     return verified.groupBy("d1").agg(F.min("doc_id").alias("near_m"))
 
@@ -4142,7 +4157,7 @@ def g32_dedup_band_probe(
     index built once (with the corpus's rep space), probe cost
     O(batch x bands + carrier rows), exact verify inside the band join.
     Round 14: the index is genuinely PERSISTED (``BandSignatureIndex``
-    — a VersionedTable of (doc_id, band, sig) parquet plus the stored
+    — a VersionedTable of (doc_id, sig) parquet plus the stored
     rep space) and ``BandSignatureIndex.probe`` reads it back through
     the manifest, so this driver row exercises the same store-then-
     probe path the two-session test (tests/test_band_index.py) proves

@@ -14,6 +14,7 @@ landing bucket would have.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
@@ -32,6 +33,15 @@ def _tmpdir(tag: str) -> str:
 _LANDING_CACHE: dict[tuple, tuple] = {}
 
 
+@atexit.register
+def _remove_landing_copies() -> None:
+    """Remove this process's landing copies when the interpreter exits:
+    the cache is per process, so no later process can reuse them."""
+    for landing, _schema in _LANDING_CACHE.values():
+        shutil.rmtree(landing, ignore_errors=True)
+    _LANDING_CACHE.clear()
+
+
 def landing_copy(
     spark: SparkSession, sf_dir: str, table: str, n_files: int = 1, copies: int = 1
 ):
@@ -42,7 +52,8 @@ def landing_copy(
     Copies are content-immutable once written (streaming queries only
     READ them; each query keeps its own checkpoint), so identical
     (sf_dir, table, n_files, copies) requests reuse one directory per
-    process — one write job instead of one per streaming query."""
+    process — one write job instead of one per streaming query — and
+    are removed when the process exits."""
     from data_lake_staging_engine_spark.sources import load
 
     key = (sf_dir, table, n_files, copies)

@@ -21,6 +21,9 @@ The contract proven here:
   exactly, and a warm probe stays within its job budget; versions
   published before the rep space was stored probe on the open route
   with the same rows.
+- versions published in the two-column (doc_id, band, sig) layout
+  fold to the one band key on read and probe, on either route, to the
+  rows of a freshly built index.
 """
 
 import os
@@ -57,6 +60,30 @@ v = BandSignatureIndex({root!r}).build(corpus)
 print("BUILT_VERSION", v)
 spark.stop()
 """
+
+
+def _two_column_signatures(toks, n_hashes=16, bands=4):
+    """(doc_id, band, sig): the band signatures in the layout index
+    versions were published in before the one-column band key — the
+    same seeded minhashes, one row per (band, band hash)."""
+    rows = n_hashes // bands
+    mins = (
+        toks.withColumn("h0", F.xxhash64("tok"))
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.min(F.xxhash64(F.col("h0"), F.lit(i))).alias(f"h{i}")
+                for i in range(n_hashes)
+            ]
+        )
+    )
+    band_sigs = [
+        F.xxhash64(*[F.col(f"h{i}") for i in range(b * rows, (b + 1) * rows)])
+        for b in range(bands)
+    ]
+    return mins.select(
+        "doc_id", F.posexplode(F.array(*band_sigs)).alias("band", "sig")
+    )
 
 
 def _split(spark):
@@ -236,15 +263,11 @@ def test_params_default_for_legacy_manifest_entries(spark, tmp_path):
     14) carry no n_hashes/bands keys; params() must fall back to the
     build defaults — the only parameterization that could have
     produced them."""
-    from data_lake_staging_engine_spark.operators.llmops import (
-        _band_signatures,
-    )
-
     root = str(tmp_path / "legacy")
     _newdocs, corpus = _split(spark)
     idx = BandSignatureIndex(root)
     # simulate a round-14 publish: signatures without extra metadata
-    idx.table.publish(_band_signatures(_tokens(corpus)))
+    idx.table.publish(_two_column_signatures(_tokens(corpus)))
     assert idx.params() == (16, 4)
 
 
@@ -450,11 +473,11 @@ def test_out_of_vocab_batch_tokens_verify_exactly(spark, tmp_path):
 
     index = {}
     for r in idx.signatures(spark).collect():
-        index.setdefault((r.band, r.sig), set()).add(r.doc_id)
+        index.setdefault(r.sig, set()).add(r.doc_id)
     n_hashes, bands = idx.params()
     cands = {}
     for r in _band_signatures(_tokens(batch), n_hashes, bands).collect():
-        cands.setdefault(r.doc_id, set()).update(index.get((r.band, r.sig), ()))
+        cands.setdefault(r.doc_id, set()).update(index.get(r.sig, ()))
     want = []
     for d, text in rows:
         a = set(text.split(" "))
@@ -478,10 +501,10 @@ def test_out_of_vocab_batch_tokens_verify_exactly(spark, tmp_path):
 
 
 def test_legacy_version_probes_on_the_open_route(spark, tmp_path, monkeypatch):
-    """A version published before the rep space was stored (signatures
-    plus n_hashes/bands only) has no carriers to verify against: it
-    probes on the token-join route, with exactly the rows of a freshly
-    built index."""
+    """A version published before the rep space was stored (two-column
+    signatures plus n_hashes/bands only) has no carriers to verify
+    against: it probes on the token-join route, with exactly the rows
+    of a freshly built index."""
     from data_lake_staging_engine_spark.operators import llmops
 
     newdocs, corpus = _split(spark)
@@ -489,7 +512,7 @@ def test_legacy_version_probes_on_the_open_route(spark, tmp_path, monkeypatch):
     fresh.build(corpus)
     legacy = BandSignatureIndex(str(tmp_path / "legacy"))
     legacy.table.publish(
-        _band_signatures(_tokens(corpus)), extra={"n_hashes": 16, "bands": 4}
+        _two_column_signatures(_tokens(corpus)), extra={"n_hashes": 16, "bands": 4}
     )
     calls = []
     verify = llmops._verify_pairs_token_join
@@ -549,3 +572,49 @@ def test_g32_without_index_root_leaves_no_index_dir(spark):
         rows = g32_dedup_band_probe(spark, _SF).collect()
         assert rows
     assert leftovers() == before
+
+
+def test_two_column_bitmap_version_probes_like_a_fresh_one(spark, tmp_path):
+    """A bitmap-route version published in the two-column (doc_id,
+    band, sig) layout — carrier mask words on its rows, its vocab
+    sidecar — reads back with the fresh version's one-column keys and
+    answers a probe from its stored rep space (a corpus whose text
+    raises is never read) with exactly the fresh version's rows.  The
+    open route is pinned by the legacy test above."""
+    from data_lake_staging_engine_spark.operators.llmops import (
+        _VOCAB_SIDECAR,
+        _ddl,
+    )
+
+    newdocs, corpus = _split(spark)
+    fresh = BandSignatureIndex(str(tmp_path / "fresh"))
+    fresh.build(corpus)
+    entry = fresh.table.entry()
+    assert entry["route"] == "bitmap"
+    want = _rows(fresh.probe(newdocs, corpus))
+    assert any(v == "near" for _d, v, _m in want)  # not vacuous
+
+    stored = spark.read.schema(entry["schema"]).parquet(entry["path"])
+    words = stored.drop("sig").dropDuplicates(["doc_id"])
+    old = _two_column_signatures(_tokens(corpus)).join(words, "doc_id")
+    legacy = BandSignatureIndex(str(tmp_path / "legacy"))
+    legacy.table.publish(
+        old,
+        extra={
+            **{k: entry[k] for k in ("n_hashes", "bands", "route", "vocab_n", "carriers")},
+            "schema": _ddl(old.schema),
+        },
+        sidecars={
+            _VOCAB_SIDECAR: spark.read.parquet(
+                os.path.join(entry["path"], _VOCAB_SIDECAR)
+            )
+        },
+    )
+    assert "band" in legacy.table.entry()["schema"]
+    assert sorted(legacy.signatures(spark).collect()) == sorted(
+        fresh.signatures(spark).collect()
+    )
+    poisoned = corpus.withColumn(
+        "text", F.raise_error(F.lit("the probe read the corpus text"))
+    )
+    assert _rows(legacy.probe(newdocs, poisoned)) == want

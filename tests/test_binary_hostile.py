@@ -27,6 +27,7 @@ Engine behavior pinned:
 
 import hashlib
 import os
+import shutil
 import tempfile
 
 import duckdb
@@ -176,30 +177,33 @@ def test_binaryfile_scan_handles_huge_and_empty_objects(spark):
     count vs scanned count) is the operator-level guard a 100 TB
     pipeline should run when zero-byte objects mean upstream failure."""
     out = tempfile.mkdtemp(prefix="dlse_binhuge_")
-    big = os.path.join(out, "big.bin")
-    chunk = bytes(range(256)) * 4096  # 1 MiB, non-constant
-    h = hashlib.md5()
-    with open(big, "wb") as fh:
-        for _ in range(256):
-            fh.write(chunk)
-            h.update(chunk)
-    open(os.path.join(out, "empty.bin"), "wb").close()
+    try:
+        big = os.path.join(out, "big.bin")
+        chunk = bytes(range(256)) * 4096  # 1 MiB, non-constant
+        h = hashlib.md5()
+        with open(big, "wb") as fh:
+            for _ in range(256):
+                fh.write(chunk)
+                h.update(chunk)
+        open(os.path.join(out, "empty.bin"), "wb").close()
 
-    rows = {
-        r.file_name: r
-        for r in spark.read.format("binaryFile")
-        .load(out)
-        .select(
-            F.element_at(F.split("path", "/"), -1).alias("file_name"),
-            F.col("length"),
-            F.md5("content").alias("content_md5"),
-        )
-        .collect()
-    }
-    assert rows["big.bin"].length == 256 << 20
-    assert rows["big.bin"].content_md5 == h.hexdigest()
-    # Spark drops 0-length files at split planning: the empty object
-    # never reaches the scan.  If a Spark upgrade changes this, the
-    # a26 docstring's reconciliation note must change with it.
-    assert "empty.bin" not in rows
-    assert len(rows) == 1
+        rows = {
+            r.file_name: r
+            for r in spark.read.format("binaryFile")
+            .load(out)
+            .select(
+                F.element_at(F.split("path", "/"), -1).alias("file_name"),
+                F.col("length"),
+                F.md5("content").alias("content_md5"),
+            )
+            .collect()
+        }
+        assert rows["big.bin"].length == 256 << 20
+        assert rows["big.bin"].content_md5 == h.hexdigest()
+        # Spark drops 0-length files at split planning: the empty object
+        # never reaches the scan.  If a Spark upgrade changes this, the
+        # a26 docstring's reconciliation note must change with it.
+        assert "empty.bin" not in rows
+        assert len(rows) == 1
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

@@ -45,12 +45,11 @@ def _masks(side: str, words: int) -> list[str]:
             StructType(
                 [
                     StructField("doc_id", LongType()),
-                    StructField("band", IntegerType()),
                     StructField("sig", LongType()),
                     StructField("n", IntegerType()),
                 ]
             ),
-            8 + 4 * 8,
+            8 + 3 * 8,
         ),
         (_longs("doc_id", "n"), 8 + 2 * 8),
         # rep-id semi join

@@ -116,7 +116,7 @@ WITH toks AS (
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY doc_id),
 cands AS (
   SELECT DISTINCT b.doc_id AS d1, i.doc_id AS d2
-  FROM batch_sigs b JOIN index_sigs i USING (band, sig)
+  FROM batch_sigs b JOIN index_sigs i USING (sig)
 ),
 shared AS (
   SELECT c.d1, c.d2, COUNT(*) AS s
@@ -142,7 +142,7 @@ WHERE d.doc_id % 7 = 0
 def test_g32_band_probe_matches_duckdb_reference(spark, sf_dir, tmp_path):
     """The index probe against a doc-space answer computed without the
     engine's verify: per batch doc, the min corpus doc that shares a
-    stored (band, sig) with it and has token-set Jaccard >= 0.8,
+    stored band key with it and has token-set Jaccard >= 0.8,
     computed in DuckDB from the stored index and Spark's signatures of
     the batch.  Pins the probe's candidate set and its rep-space
     verify exactly, where the test above only bounds recall."""

@@ -466,7 +466,7 @@ def test_event_funnel_joins_broadcast(spark, sf_dir):
 
 
 def test_lsh_banding_single_corpus_pass(spark, sf_dir):
-    """g02b: the 4 band signatures must come from ONE posexplode over
+    """g02b: the 4 band signatures must come from ONE explode over
     the minhash aggregate, not a union of per-band selects — the union
     form re-scans and re-aggregates the whole corpus once per band
     (round-7 PLANS.md audit caught 8 documents scans / 11 shuffles; at
@@ -495,7 +495,7 @@ def test_lsh_banding_single_corpus_pass(spark, sf_dir):
     assert plan.count("documents.parquet") <= 2, plan.count("documents.parquet")
     assert plan.count("hashpartitioning(") <= 9, plan.count("hashpartitioning(")
     # g02c's simhash banding had the identical union defect (8 scans, 8
-    # shuffles) and takes the identical posexplode fix.
+    # shuffles) and takes the identical explode fix.
     plan_c = physical_plan(_REG["g02c_dedup_simhash"].fn(spark, sf_dir))
     assert plan_c.count("documents.parquet") <= 2, plan_c.count("documents.parquet")
     assert plan_c.count("hashpartitioning(") <= 2, plan_c.count("hashpartitioning(")
@@ -563,7 +563,7 @@ def test_kmeans_iterates_over_cache_without_window(spark, sf_dir, monkeypatch):
 
 
 def test_band_probe_verifies_inside_the_band_join(spark, sf_dir, monkeypatch):
-    """g32: the popcount verify is the (band, sig) join's own condition,
+    """g32: the popcount verify is the band join's own condition,
     so no candidate-pair frame exists — no aggregate keyed on (batch
     doc, candidate), and no exchange between the band join and the
     verify.  g32 returns a local checkpoint of the probe's answer, so
@@ -586,8 +586,56 @@ def test_band_probe_verifies_inside_the_band_join(spark, sf_dir, monkeypatch):
         if m and "d1#" in m.group(1):
             assert m.group(1).count("#") == 1, line
     band_joins = [
-        line for line in lines if re.search(r"Join \[band#\d+, sig#\d+L?\]", line)
+        line for line in lines if re.search(r"Join \[sig#\d+L?\]", line)
     ]
     assert band_joins, plan
     for line in band_joins:
         assert "bit_count(" in line, line
+
+
+def _banding_join_keys(plan):
+    """The (left, right) key lists of every equi-join in ``plan``'s
+    final plan that keys on a banding or LSH bucket column."""
+    final = plan.split("== Initial Plan ==")[0]
+    joins = re.findall(r"\w+Join \[([^\]]*)\], \[([^\]]*)\]", final)
+    return [
+        (left, right)
+        for left, right in joins
+        if re.search(r"(sig|chunk|bucket)#", left + right)
+    ]
+
+
+def test_banding_joins_key_on_one_long(spark, sf_dir, monkeypatch):
+    """Every banding and LSH equi-join (g02b, g02c, g02e, g03c and the
+    g32 probe) keys on exactly one column: a multi-column key makes
+    Spark build a hash relation of a whole memory page however small
+    the side is.  g32 returns a local checkpoint, so its plans are the
+    ones of the frames it checkpoints."""
+    from pyspark.sql import functions as F
+
+    plans = {}
+    for name in (
+        "g02b_dedup_lsh",
+        "g02c_dedup_simhash",
+        "g02e_dedup_lsh_shingle",
+        "g03c_simsearch_lsh",
+    ):
+        digest = _REG[name].fn(spark, sf_dir).agg(F.count(F.lit(1)))
+        digest.collect()
+        plans[name] = [digest._jdf.queryExecution().executedPlan().toString()]
+    cls = type(spark.range(1))
+    checkpoint = cls.localCheckpoint
+    probe_plans = plans["g32_dedup_band_probe"] = []
+
+    def spy(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        probe_plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    _REG["g32_dedup_band_probe"].fn(spark, sf_dir)
+    for name, executed in plans.items():
+        keys = [k for plan in executed for k in _banding_join_keys(plan)]
+        assert keys, (name, executed)  # not vacuous
+        for left, right in keys:
+            assert left.count("#") == right.count("#") == 1, (name, left, right)

@@ -187,6 +187,48 @@ def test_token_join_prefix_survives_float_overshoot(spark):
     assert got == [(0, 1, 0.55)]
 
 
+def test_token_join_filters_collisions_before_the_verify(spark, monkeypatch):
+    """The token join's collision join applies the PPJoin length and
+    positional filters, so a colliding pair that cannot reach J >= 0.8
+    never becomes a verify candidate.  The c tokens recur in five
+    filler docs, so each doc's rarest tokens lead its prefix.  Docs 0
+    ({x, c0}) and 1 ({x, c0..c8}) collide on x, but sizes 2 and 10
+    fail the length filter.  Docs 2 and 3 (size 10 each) collide only
+    on y, third in both prefixes: 1 + min(10 - 3, 10 - 3) = 8 shared
+    tokens at most, short of the ceil(0.8 / 1.8 * 20) = 9 needed."""
+    import data_lake_staging_engine_spark.operators.llmops as llmops
+
+    common = [f"c{j}" for j in range(9)]
+    docs = {
+        0: ["x", "c0"],
+        1: ["x", *common],
+        2: ["a1", "a2", "y", *common[:7]],
+        3: ["b1", "b2", "y", *common[:7]],
+        **{10 + k: [f"f{k}", *common] for k in range(5)},
+    }
+    rows = [(d, " ".join(t)) for d, t in docs.items()]
+    toks = _tokens(spark.createDataFrame(rows, "doc_id long, text string"))
+    seen = []
+    verify = llmops._verify_pairs_token_join
+
+    def spy(cands, *a, **kw):
+        seen.extend(tuple(r) for r in cands.collect())
+        return verify(cands, *a, **kw)
+
+    monkeypatch.setattr(llmops, "_verify_pairs_token_join", spy)
+    got = {(r.d1, r.d2) for r in _g02_token_join(toks, 0.8).collect()}
+    want = {
+        (a, b)
+        for a in docs
+        for b in docs
+        if a < b
+        and len(set(docs[a]) & set(docs[b])) / len(set(docs[a]) | set(docs[b]))
+        >= 0.8
+    }
+    assert want and got == want  # not vacuous
+    assert (0, 1) not in seen and (2, 3) not in seen, sorted(seen)
+
+
 @pytest.mark.parametrize(
     "name", ["g26_dedup_clusters", "g30_dedup_incremental"]
 )

@@ -1,6 +1,7 @@
 """Rows-only streaming semantics the DuckDB oracle can't check
 (SURVEY.md §2.E e04/e07 behavior half): watermark late-drop across
-micro-batches.
+micro-batches, and the removal of the per-process landing copies at
+interpreter exit.
 
 Determinism technique: two AvailableNow runs sharing one checkpoint.
 Run 1 drains the recent half of events and commits its watermark
@@ -10,6 +11,9 @@ far behind it). This avoids relying on file-listing order within a
 single run, which is not contractual.
 """
 
+import os
+import subprocess
+import sys
 import tempfile
 import time
 
@@ -117,3 +121,37 @@ def test_capture_run_stats_handles_both_progress_json_shapes(tmp_path):
         "state_dir_bytes": 0,
         "batches": 3,
     }
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_LANDING = """
+import sys
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+spark = SparkSession.builder.master("local[2]").getOrCreate()
+from data_lake_staging_engine_spark.streaming.runner import landing_copy
+landing, _schema = landing_copy(spark, {sf!r}, "events", n_files=2)
+print("LANDING", landing)
+"""
+
+
+def test_landing_copies_are_removed_at_exit(sf_dir, tmp_path):
+    """``landing_copy`` reuses one copy per request within a process;
+    a process that made one and exits leaves none of its
+    ``dlse_stream_landing_*`` dirs behind."""
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _LANDING.format(repo=_REPO, sf=sf_dir)],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    landing = proc.stdout.split("LANDING ", 1)[1].split()[0]
+    assert landing.startswith(str(tmp_path)), landing  # not vacuous
+    assert not os.path.exists(landing)
+    assert not list(tmp_path.glob("dlse_stream_landing_*"))
