@@ -16,6 +16,20 @@ partial/final aggregation across thousands of partitions.
 
 The matching oracle-side pattern is
 ``ROUND(CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE), r)``.
+
+Python twins.  Pandas folds (e06/e10 state, f03, f10) cannot use the
+Column helpers, so the same two rules have one Python form each:
+
+- ``make_cents()`` returns ``cents(x)``: integer cents exactly as
+  DuckDB casts a double to DECIMAL(18,2) (the oracle's per-row cast).
+- ``make_py_duck_round()`` returns ``duck_round(x, n)``: the
+  std::round mirror of DuckDB's ROUND(double, n), as ``duck_round``.
+
+Both are factories because their results are shipped to executors:
+cloudpickle pickles a module-level function by reference, so a worker
+without this package on its path fails with ModuleNotFoundError.  The
+returned closures use only the stdlib and closure variables and pickle
+by value.
 """
 
 from __future__ import annotations
@@ -83,6 +97,47 @@ def dec_sum_expr(expr: Column, scale: int = 4, round_to: int = 2) -> Column:
         F.sum(duck_round(expr, scale).cast(f"decimal(18,{scale})")).cast("double"),
         round_to,
     )
+
+
+def make_cents():
+    """Return ``cents(x)``: the integer cents of DuckDB's
+    ``CAST(x AS DECIMAL(18,2))`` for a finite double ``x``.
+
+    DuckDB scales the double by 100, nudges it 1e-9 away from zero and
+    rounds half to even, so 1.005 (whose double sits just below the
+    half cent) casts to 1.01.  ``floor(|x|*100 + 0.5)`` gives 1.00
+    there.  On exact 2-decimal doubles (the fixtures' events.value)
+    every formula agrees; on other values only this one matches the
+    oracles.
+    """
+
+    def cents(x: float) -> int:
+        y = x * 100.0
+        if y > 0:
+            y += 1e-9
+        elif y < 0:
+            y -= 1e-9
+        return int(round(y))  # round() is half-to-even, like nearbyint
+
+    return cents
+
+
+def make_py_duck_round():
+    """Return ``duck_round(x, n)``, the Python twin of ``duck_round``
+    (same exact std::round mirror; see its docstring for why
+    ``floor(y + 0.5)`` is wrong one ulp below a half-integer)."""
+    import math
+
+    def duck_round(x: float, n: int) -> float:
+        p = float(10**n)
+        y = abs(x) * p
+        t = math.floor(y)
+        mag = (t + (1 if y - t >= 0.5 else 0)) / p
+        # copysign keeps the sign of ZERO too (-0.0 and small negatives
+        # round to -0.0, exactly like std::round / DuckDB)
+        return math.copysign(mag, x)
+
+    return duck_round
 
 
 def safe_corr(x: Column | str, y: Column | str) -> Column:

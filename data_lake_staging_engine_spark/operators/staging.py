@@ -42,11 +42,7 @@ from pyspark.sql.types import (
 
 from data_lake_staging_engine_spark.catalog import SessionCatalogSync, drop_managed_table
 from data_lake_staging_engine_spark.fs import filesystem_for
-from data_lake_staging_engine_spark.functions.determinism import (
-    as_long,
-    dec_sum,
-    duck_round,
-)
+from data_lake_staging_engine_spark.functions.determinism import as_long, dec_sum
 from data_lake_staging_engine_spark.registry import query
 from data_lake_staging_engine_spark.sources import load
 from data_lake_staging_engine_spark.sources.incremental import IncrementalLoader
@@ -624,9 +620,7 @@ def a20_observed_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("value").isNull().cast("long")).alias("null_values"),
-        duck_round(
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-        ).alias("total_value"),
+        dec_sum("value").alias("total_value"),
     )
     observed.write.format("noop").mode("overwrite").save()  # the ingest pass
     m = obs.get

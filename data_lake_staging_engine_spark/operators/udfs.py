@@ -32,22 +32,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from data_lake_staging_engine_spark.functions.determinism import duck_round
+from data_lake_staging_engine_spark.functions.determinism import (
+    make_cents,
+    make_py_duck_round,
+)
 from data_lake_staging_engine_spark.registry import query
 from data_lake_staging_engine_spark.sources import load, register_views
-
-
-def _pyduck_round(x: float, n: int) -> float:
-    """Python twin of functions.determinism.duck_round (same formula:
-    exact std::round mirror — see duck_round's docstring for why
-    ``floor(y + 0.5)`` is wrong one ulp below a half-integer)."""
-    p = float(10**n)
-    y = abs(x) * p
-    t = math.floor(y)
-    mag = (t + (1 if y - t >= 0.5 else 0)) / p
-    # copysign keeps the sign of ZERO too (-0.0 and small negatives
-    # round to -0.0, exactly like std::round / DuckDB)
-    return math.copysign(mag, x)
 
 
 _BAND_ORACLE = """
@@ -152,8 +142,8 @@ def f02_pandas_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f03_pandas_udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-aggregate pandas UDF: 10%-trimmed mean of value per
     event_type. Exactness: the trimmed slice is summed in integer cents
-    (values are exact 2-decimal doubles), mirroring the oracle's
-    decimal-sum — no float accumulation anywhere.
+    as the oracle's decimal cast gives them — no float accumulation
+    anywhere.
 
     NULL handling (round-9 adversarial audit): the trim ranks and sums
     NON-NULL values only — SQL aggregate semantics — instead of
@@ -161,26 +151,17 @@ def f03_pandas_udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's LEFT JOIN from the distinct-type spine yields the same)."""
     import pandas as pd
 
+    cents = make_cents()
+    py_round = make_py_duck_round()
+
     def _trimmed_mean(v):
         vals = v.dropna().sort_values().to_numpy()
         if len(vals) == 0:
             return None
         k = len(vals) // 10
         mid = vals[k : len(vals) - k]
-        # sign-preserving round-to-cents (mirrors _pyduck_round)
-        cents = sum(
-            -int(math.floor(abs(x) * 100.0 + 0.5))
-            if x < 0
-            else int(math.floor(abs(x) * 100.0 + 0.5))
-            for x in mid
-        )
-        # inline duck-round to 4 places (self-contained for executor
-        # pickling; exact std::round mirror — see duck_round)
-        x = (cents / 100.0) / len(mid)
-        y = abs(x) * 1e4
-        t = math.floor(y)
-        mag = (t + (1 if y - t >= 0.5 else 0)) / 1e4
-        return math.copysign(mag, x)  # sign of zero survives
+        total = sum(cents(x) for x in mid)
+        return py_round((total / 100.0) / len(mid), 4)
 
     _trimmed_mean.__annotations__ = {"v": pd.Series, "return": float}
     trimmed_mean = F.pandas_udf(DoubleType())(_trimmed_mean)
@@ -883,9 +864,9 @@ def f10_cogroup_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pandas function sees one (events_frame, customer_frame) pair
     per key. Money accumulates in integer cents, mirroring the
     decimal-sum oracle."""
-    import math as _m
-
     import pandas as pd
+
+    cents = make_cents()
 
     # The customer side's c_custkey < 200 predicate transits the
     # cogroup key: an event with user_id >= 200 (or NULL) can never
@@ -919,21 +900,13 @@ def f10_cogroup_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the oracle's COALESCE: a user with no events AND a user whose
         # events are all NULL-valued both total 0.0 (unlike e06/e10,
         # whose un-COALESCEd SUM oracles emit NULL for the latter).
-        cents = int(
-            sum(
-                -_m.floor(abs(v) * 100.0 + 0.5)
-                if v < 0
-                else _m.floor(abs(v) * 100.0 + 0.5)
-                for v in events_pdf["value"]
-                if pd.notna(v)
-            )
-        )
+        total = sum(cents(v) for v in events_pdf["value"] if pd.notna(v))
         return pd.DataFrame(
             {
                 "user_id": [int(cust_pdf["user_id"].iloc[0])],
                 "c_mktsegment": [cust_pdf["c_mktsegment"].iloc[0]],
                 "n_events": [len(events_pdf)],
-                "total_value": [cents / 100.0],
+                "total_value": [total / 100.0],
             }
         )
 

@@ -15,7 +15,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_lake_staging_engine_spark.functions.determinism import as_long, duck_round
+from data_lake_staging_engine_spark.functions.determinism import (
+    as_long,
+    dec_sum,
+    duck_round,
+)
 from data_lake_staging_engine_spark.registry import query
 from data_lake_staging_engine_spark.sources import load
 
@@ -331,9 +335,7 @@ def c08_win_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = e.groupBy(
         F.date_trunc("hour", "ts").alias("h"), "event_type"
     ).agg(
-        duck_round(
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-        ).alias("hour_sum")
+        dec_sum("value").alias("hour_sum")
     )
     types = e.select("event_type").distinct()
     grid = _dense_hour_grid(e).crossJoin(F.broadcast(types))

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_lake_staging_engine_spark.functions.determinism import as_long, duck_round
+from data_lake_staging_engine_spark.functions.determinism import dec_sum, make_cents
 from data_lake_staging_engine_spark.registry import query
 from data_lake_staging_engine_spark.streaming.runner import (
     drain,
@@ -31,16 +31,49 @@ from data_lake_staging_engine_spark.streaming.runner import (
 
 
 def _events_stream(spark: SparkSession, sf_dir: str, n_files: int = 1, copies: int = 1):
+    """A stream over the events landing copy, with the copy's
+    input-sized state partition count (see ``scaled_state_partitions``)."""
     landing, schema = landing_copy(spark, sf_dir, "events", n_files, copies)
-    return spark.readStream.schema(schema).parquet(landing)
+    stream = spark.readStream.schema(schema).parquet(landing)
+    return stream, scaled_state_partitions(spark, landing)
 
 
-def _state_parts(spark: SparkSession, sf_dir: str, n_files: int = 1, copies: int = 1):
-    """Input-sized state partition count for the events landing copy
-    (see ``scaled_state_partitions``); the landing cache makes the
-    extra lookup free."""
-    landing, _schema = landing_copy(spark, sf_dir, "events", n_files, copies)
-    return scaled_state_partitions(spark, landing)
+def _make_spend_fold():
+    """Return ``(fold, frame)``, the one per-user spend fold of e06,
+    e10 and e10_batch_twin.
+
+    ``fold(state, frames)`` adds the frames' ``value`` column to an
+    ``(n, cents, m)`` state: ``n`` counts every row, ``cents`` sums the
+    non-NULL values as the oracle's DECIMAL(18,2) cast does and ``m``
+    counts them (SQL SUM skips NULLs).  ``frame(key, state)`` is the
+    user's output row; an all-NULL user (``m == 0``) totals NULL, as
+    SQL SUM does.  A factory, so both closures pickle by value (see
+    functions.determinism)."""
+    import pandas as pd
+
+    cents = make_cents()
+
+    def fold(state, frames):
+        n, c, m = state
+        for pdf in frames:
+            n += len(pdf)
+            for v in pdf["value"]:
+                if pd.notna(v):
+                    m += 1
+                    c += cents(v)
+        return n, c, m
+
+    def frame(key, state):
+        n, c, m = state
+        return pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [n],
+                "total_spend": pd.Series([c / 100.0 if m else None], dtype=object),
+            }
+        )
+
+    return fold, frame
 
 
 _DEC_SUM_ORACLE = "ROUND(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2)"
@@ -110,22 +143,19 @@ def _gate_event_time(df, observe_name=None):
 )
 def e01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windowed aggregation, complete mode."""
-    s = _events_stream(spark, sf_dir)
+    s, parts = _events_stream(spark, sf_dir)
     agg = s.groupBy(F.window("ts", "1 hour"), "event_type").agg(
-        duck_round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2).alias(
-            "sum_value"
-        ),
+        dec_sum("value").alias("sum_value"),
         F.count(F.lit(1)).alias("n"),
     )
-    out = run_to_memory(
+    return run_to_memory(
         agg.select(
             F.col("window.start").alias("ws"), "event_type", "n", "sum_value"
         ),
         spark,
         "complete",
-        state_partitions=_state_parts(spark, sf_dir),
+        state_partitions=parts,
     )
-    return out
 
 
 @query(
@@ -161,18 +191,16 @@ def e02_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     the c10 edge suite caught (the r06 review discovery;
     tests/test_negative_values.py pins this query on the pre-1970
     corpus too)."""
-    s = _events_stream(spark, sf_dir)
+    s, parts = _events_stream(spark, sf_dir)
     agg = s.groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type").agg(
-        duck_round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2).alias(
-            "sum_value"
-        ),
+        dec_sum("value").alias("sum_value"),
         F.count(F.lit(1)).alias("n"),
     )
     return run_to_memory(
         agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value"),
         spark,
         "complete",
-        state_partitions=_state_parts(spark, sf_dir),
+        state_partitions=parts,
     )
 
 
@@ -213,11 +241,9 @@ def e03_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary, and the round-9 time-hostile corpus caught the pre-fix
     ``>=`` emitting 634 vs Spark's 535 sessions — same merge rule as
     c10's `> 1800` sessionizer)."""
-    s = _events_stream(spark, sf_dir)
+    s, parts = _events_stream(spark, sf_dir)
     agg = s.groupBy(F.session_window("ts", "30 minutes"), "user_id").agg(
-        duck_round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2).alias(
-            "sum_value"
-        ),
+        dec_sum("value").alias("sum_value"),
         F.count(F.lit(1)).alias("n"),
     )
     return run_to_memory(
@@ -226,7 +252,7 @@ def e03_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         spark,
         "complete",
-        state_partitions=_state_parts(spark, sf_dir),
+        state_partitions=parts,
     )
 
 
@@ -244,14 +270,12 @@ def e04_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equals e01 — the hash-checkable half of watermark semantics.
     The drop-behavior half (late rows across micro-batches) is
     covered rows-only in tests/test_streaming_behavior.py."""
-    s = _events_stream(spark, sf_dir)
+    s, parts = _events_stream(spark, sf_dir)
     agg = (
         s.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
-            duck_round(
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-            ).alias("sum_value"),
+            dec_sum("value").alias("sum_value"),
             F.count(F.lit(1)).alias("n"),
         )
     )
@@ -259,7 +283,7 @@ def e04_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value"),
         spark,
         "complete",
-        state_partitions=_state_parts(spark, sf_dir),
+        state_partitions=parts,
     )
 
 
@@ -278,7 +302,7 @@ def e05_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads (redelivery). Duplicate ids with DIFFERING payloads make
     the survivor arrival-order-dependent on any engine — that input is
     an upstream defect to normalize with a07_dedup_keep_latest."""
-    s = _events_stream(spark, sf_dir, n_files=2, copies=2)
+    s, parts = _events_stream(spark, sf_dir, n_files=2, copies=2)
     dedup = s.select("event_id", "user_id", "event_type", "value").dropDuplicates(
         ["event_id"]
     )
@@ -286,7 +310,7 @@ def e05_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup,
         spark,
         "append",
-        state_partitions=_state_parts(spark, sf_dir, n_files=2, copies=2),
+        state_partitions=parts,
     )
 
 
@@ -328,36 +352,14 @@ def e06_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("m", LongType()),
         ]
     )
+    fold, frame = _make_spend_fold()
 
     def track_user(key, pdf_iter, state: GroupState):
-        import math
+        total = fold(state.get if state.exists else (0, 0, 0), pdf_iter)
+        state.update(total)
+        yield frame(key, total)
 
-        import pandas as pd
-
-        n, cents, m = state.get if state.exists else (0, 0, 0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            # duck_round-to-cents per NON-NULL row (sign-preserving,
-            # mirrors _pyduck_round; SQL SUM skips NULLs — round-9
-            # adversarial audit), then exact integer accumulation
-            for v in pdf["value"]:
-                if not pd.notna(v):
-                    continue
-                m += 1
-                c = math.floor(abs(v) * 100.0 + 0.5)
-                cents += -c if v < 0 else c
-        state.update((n, cents, m))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_spend": pd.Series(
-                    [cents / 100.0 if m else None], dtype=object
-                ),
-            }
-        )
-
-    s = _events_stream(spark, sf_dir, n_files=1)
+    s, parts = _events_stream(spark, sf_dir, n_files=1)
     # Prune to the two columns the fold reads BEFORE the pandas
     # boundary: applyInPandasWithState's input deserializer still casts
     # timestamps to Arrow timestamp[ns] (unlike the us-preserving batch
@@ -373,9 +375,7 @@ def e06_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_memory(
-        stateful, spark, "update", state_partitions=_state_parts(spark, sf_dir)
-    )
+    return run_to_memory(stateful, spark, "update", state_partitions=parts)
 
 
 @query(
@@ -388,12 +388,12 @@ def e06_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e07_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Late-data accounting: multi-batch replay (maxFilesPerTrigger=1
-    over 4 files) with a 1-hour watermark; foreachBatch tags rows older
-    than the batch's entry watermark in a per-batch accounting log.
+    over 4 files) with a 1-hour watermark; foreachBatch records each
+    micro-batch's row count.
 
-    WHICH rows get tagged late depends on nondeterministic file->batch
-    assignment — but the tags live only in the side log; the EMITTED
-    result is (n_batches, n_rows), and both are deterministic:
+    WHICH rows are late depends on nondeterministic file->batch
+    assignment, but the EMITTED result is (n_batches, n_rows), and both
+    are deterministic:
     maxFilesPerTrigger=1 over the 4-file landing gives exactly 4 data
     batches (this passthrough plan has no stateful operator, so no
     trailing no-data batch fires foreachBatch), and row conservation
@@ -401,21 +401,14 @@ def e07_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     both), so the query carries a hash oracle — the 4 literal is the
     landing_copy n_files below. The late-tagging internals stay covered
     behaviorally in tests/test_streaming_behavior.py."""
-    import json
-    import os
     import shutil
     import tempfile
 
     landing, schema = landing_copy(spark, sf_dir, "events", n_files=4)
-    fd, acc_path = tempfile.mkstemp(prefix="dlse_late_")
-    os.close(fd)
-    counts = {"late": 0, "total": 0}
+    batch_rows = []  # foreachBatch runs in the driver process
 
     def account(batch_df: DataFrame, batch_id: int) -> None:
-        total = batch_df.count()
-        counts["total"] += total
-        with open(acc_path, "a") as f:
-            f.write(json.dumps({"batch": batch_id, "rows": total}) + "\n")
+        batch_rows.append(batch_df.count())
 
     s = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(landing)
     flagged = s.withWatermark("ts", "1 hour")
@@ -428,13 +421,10 @@ def e07_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             180,
         )
-        with open(acc_path) as f:
-            batches = [json.loads(line) for line in f]
     finally:
-        os.unlink(acc_path)
         shutil.rmtree(checkpoint, ignore_errors=True)
     return spark.createDataFrame(
-        [(len(batches), int(counts["total"]))], "n_batches bigint, n_rows bigint"
+        [(len(batch_rows), sum(batch_rows))], "n_batches bigint, n_rows bigint"
     )
 
 
@@ -508,7 +498,7 @@ def e08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         spark,
         "append",
-        state_partitions=_state_parts(spark, sf_dir),
+        state_partitions=scaled_state_partitions(spark, landing),
         no_data_batches=False,
     )
 
@@ -528,7 +518,7 @@ def e09_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the join itself, only for the aggregation."""
     from data_lake_staging_engine_spark.sources import load
 
-    s = _events_stream(spark, sf_dir)
+    s, parts = _events_stream(spark, sf_dir)
     dim = F.broadcast(
         load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
@@ -537,14 +527,10 @@ def e09_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            duck_round(
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-            ).alias("sum_value"),
+            dec_sum("value").alias("sum_value"),
         )
     )
-    return run_to_memory(
-        agg, spark, "complete", state_partitions=_state_parts(spark, sf_dir)
-    )
+    return run_to_memory(agg, spark, "complete", state_partitions=parts)
 
 
 def _tws_supported() -> bool:
@@ -570,13 +556,12 @@ def _e10_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     backed per key at scale. Spend accumulates in integer cents inside
     the state, so the emitted total is exact and equals the decimal-sum
     oracle."""
-    import math
-
-    import pandas as pd
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
     )
+
+    fold, frame = _make_spend_fold()
 
     class SpendTracker(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -585,30 +570,11 @@ def _e10_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def handleInputRows(self, key, rows, timerValues):
-            # identical fold to e06's track_user: n counts all rows,
-            # cents/m accumulate NON-NULL values only (SQL SUM skips
-            # NULLs), and an all-NULL user emits a NULL total
-            n, cents, m = (
-                self._state.get() if self._state.exists() else (0, 0, 0)
+            total = fold(
+                self._state.get() if self._state.exists() else (0, 0, 0), rows
             )
-            for pdf in rows:
-                n += len(pdf)
-                for v in pdf["value"]:
-                    if not pd.notna(v):
-                        continue
-                    m += 1
-                    c = math.floor(abs(v) * 100.0 + 0.5)
-                    cents += -c if v < 0 else c
-            self._state.update((n, cents, m))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_spend": pd.Series(
-                        [cents / 100.0 if m else None], dtype=object
-                    ),
-                }
-            )
+            self._state.update(total)
+            yield frame(key, total)
 
         def close(self) -> None:
             pass
@@ -622,16 +588,14 @@ def _e10_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        s = _events_stream(spark, sf_dir, n_files=1)
+        s, parts = _events_stream(spark, sf_dir, n_files=1)
         out = s.groupBy("user_id").transformWithStateInPandas(
             SpendTracker(),
             outputStructType="user_id BIGINT, n_events BIGINT, total_spend DOUBLE",
             outputMode="Update",
             timeMode="None",
         )
-        return run_to_memory(
-            out, spark, "update", state_partitions=_state_parts(spark, sf_dir)
-        )
+        return run_to_memory(out, spark, "update", state_partitions=parts)
     finally:
         if prev is None:
             spark.conf.unset(provider_key)
@@ -657,35 +621,16 @@ def e10_batch_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     dependency-gated off (google.protobuf absent). Where the gate opens,
     e10_transform_with_state must equal this query by construction
     (AvailableNow over a bounded landing = one batch = one fold)."""
-    import math
-
-    import pandas as pd
-
     from data_lake_staging_engine_spark.sources import load
 
-    def fold(key, pdf):
-        n, cents, m = 0, 0, 0  # the ValueState init
-        n += len(pdf)
-        for v in pdf["value"]:
-            # SQL SUM skips NULLs; all-NULL user => NULL total
-            if not pd.notna(v):
-                continue
-            m += 1
-            c = math.floor(abs(v) * 100.0 + 0.5)
-            cents += -c if v < 0 else c
-        return pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_spend": pd.Series(
-                    [cents / 100.0 if m else None], dtype=object
-                ),
-            }
-        )
+    fold, frame = _make_spend_fold()
+
+    def fold_user(key, pdf):
+        return frame(key, fold((0, 0, 0), [pdf]))  # (0, 0, 0): the ValueState init
 
     e = load(spark, sf_dir, "events").select("user_id", "value")
     return e.groupBy("user_id").applyInPandas(
-        fold, "user_id bigint, n_events bigint, total_spend double"
+        fold_user, "user_id bigint, n_events bigint, total_spend double"
     )
 
 
@@ -720,19 +665,17 @@ def e11_stream_dedup_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicatesWithinWatermark, exercised in e05) to stay bounded.
     Same identity contract as e05: duplicate ids must carry identical
     payloads (see e05's docstring / BASELINE.md duplicate-key probe)."""
-    s = _events_stream(spark, sf_dir, n_files=2, copies=2)
+    s, parts = _events_stream(spark, sf_dir, n_files=2, copies=2)
     deduped = s.dropDuplicates(["event_id"])
     agg = deduped.groupBy(F.window("ts", "1 hour"), "event_type").agg(
-        duck_round(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2).alias(
-            "sum_value"
-        ),
+        dec_sum("value").alias("sum_value"),
         F.count(F.lit(1)).alias("n"),
     )
     return run_to_memory(
         agg.select(F.col("window.start").alias("ws"), "event_type", "n", "sum_value"),
         spark,
         "complete",
-        state_partitions=_state_parts(spark, sf_dir, n_files=2, copies=2),
+        state_partitions=parts,
     )
 
 
@@ -858,5 +801,8 @@ def e12_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "left_outer",
     ).select("signup_id", "user_id", "follow_id", "follow_type")
     return run_to_memory(
-        joined, spark, "append", state_partitions=_state_parts(spark, sf_dir)
+        joined,
+        spark,
+        "append",
+        state_partitions=scaled_state_partitions(spark, landing),
     )

@@ -1207,22 +1207,18 @@ def test_decimal_downcast_divergence_pin(spark, fuzz_duck):
 
 
 def test_cents_cast_contract_and_divergence_pin(fuzz_duck):
-    """The cents closures (f03/f10/e06/e10 batch twin) convert doubles
-    to integer cents as sign-restored ``floor(|v|*100 + 0.5)``,
-    mirroring their oracles' ``CAST(v AS DECIMAL(18,2))``.  Round-9
-    probe sharpened the r08 audit: the two agree on the one-ulp-below-
-    half boundary values AND on every exact-2-decimal double (the
-    events.value contract — fuzzed below), but DIVERGE on off-contract
-    3-decimal midpoints: 1.005's double is below the midpoint, the
-    formula gives 100 cents, while DuckDB's cast gives 101 (it does
-    not round the binary value).  Both facts pinned — if either engine
-    moves, or a cents closure is ever fed a non-2-decimal column, this
+    """The pandas money folds (f03/f10/e06/e10 batch twin) convert
+    doubles to integer cents with ``functions.determinism.make_cents``,
+    the Python twin of their oracles' ``CAST(v AS DECIMAL(18,2))``.
+    They agree on the one-ulp-below-half boundary values, on every
+    exact-2-decimal double (fuzzed below) and on off-contract 3-decimal
+    midpoints: 1.005's double is below the midpoint, yet DuckDB's cast
+    gives 101 cents (it nudges the scaled value 1e-9 away from zero
+    before rounding), and so does the twin.  If either side moves, this
     is the test that says so."""
-    import math
+    from data_lake_staging_engine_spark.functions.determinism import make_cents
 
-    def cents(x: float) -> int:
-        c = math.floor(abs(x) * 100.0 + 0.5)
-        return -c if x < 0 else c
+    cents = make_cents()
 
     def duck_cents(x: float) -> int:
         return int(
@@ -1238,26 +1234,24 @@ def test_cents_cast_contract_and_divergence_pin(fuzz_duck):
     ]
     for x in agree:
         assert cents(x) == duck_cents(x), x
-    # known off-contract divergence: double(1.005)*100 sits one ulp
-    # BELOW 100.5, formula floors to 100; DuckDB's cast emits 101
-    assert cents(1.005) == 100 and duck_cents(1.005) == 101
-    assert cents(-1.005) == -100 and duck_cents(-1.005) == -101
+    # double(1.005)*100 sits one ulp BELOW 100.5, and both emit 101
+    assert cents(1.005) == 101 and duck_cents(1.005) == 101
+    assert cents(-1.005) == -101 and duck_cents(-1.005) == -101
 
 
 @_FUZZ
 @given(k=st.lists(st.integers(-(10**13), 10**13), min_size=0, max_size=40))
 def test_fuzz_cents_cast_exact_2decimal_contract(fuzz_duck, k):
     """Property behind the contract: for ANY exact-2-decimal double
-    v = k/100, the cents formula recovers k exactly and DuckDB's
+    v = k/100, the cents twin recovers k exactly and DuckDB's
     DECIMAL(18,2) cast agrees — |v*100| lands within one ulp of the
-    integer k, never near a half, so the +0.5 form cannot cross."""
-    import math
+    integer k, never near a half."""
+    from data_lake_staging_engine_spark.functions.determinism import make_cents
 
+    cents = make_cents()
     for ki in k:
         v = ki / 100.0
-        c = math.floor(abs(v) * 100.0 + 0.5)
-        mine = -c if v < 0 else c
-        assert mine == ki, (ki, v, mine)
+        assert cents(v) == ki, (ki, v, cents(v))
     if k:
         rows = fuzz_duck.execute(
             "SELECT CAST(CAST(x / 100.0 AS DOUBLE) AS DECIMAL(18,2)) * 100 "

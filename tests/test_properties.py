@@ -9,8 +9,14 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
+from data_lake_staging_engine_spark.functions.determinism import (
+    make_cents,
+    make_py_duck_round,
+)
 from data_lake_staging_engine_spark.operators.staging import normalize_name
-from data_lake_staging_engine_spark.operators.udfs import _pyduck_round
+
+_pyduck_round = make_py_duck_round()
+_cents = make_cents()
 
 
 @settings(max_examples=500, deadline=None)
@@ -59,6 +65,35 @@ def test_pyduck_round_matches_duckdb(x, n):
 
 
 test_pyduck_round_matches_duckdb._con = duckdb.connect()
+
+# every value test_fuzz_parity's cents contract test pins, plus 1e12
+_CENTS_PINS = [
+    0.004999999999999999, 0.005, 2.675, 101112.72499999999, 0.0, -0.0,
+    123.456, -0.001, 2.5, 0.015, 0.025, 1.005, 1e12,
+]
+
+
+def test_cents_matches_duckdb_decimal_cast():
+    """``cents`` is DuckDB's ``CAST(x AS DECIMAL(18,2)) * 100`` — the
+    per-row cast of every money oracle — on both signs of the half-cent
+    ladders (c + 0.5) / 100 for c < 200,000, where a doubled midpoint
+    sits just above or just below the half and the naive
+    ``floor(|x|*100 + 0.5)`` misses 18,346 of the 400,000."""
+    xs = [(c + 0.5) / 100.0 for c in range(200_000)] + _CENTS_PINS
+    xs += [-x for x in xs]
+    con = duckdb.connect()
+    want = [
+        int(r[0])
+        for r in con.execute(
+            "SELECT CAST(CAST(x AS DECIMAL(18,2)) * 100 AS BIGINT) "
+            "FROM (SELECT UNNEST(?) AS x, generate_subscripts(?, 1) AS i) "
+            "ORDER BY i",
+            [xs, xs],
+        ).fetchall()
+    ]
+    bad = [(x, _cents(x), w) for x, w in zip(xs, want) if _cents(x) != w]
+    assert not bad, (len(bad), bad[:5])
+    assert _cents(1.005) == 101 and _cents(-1.005) == -101
 
 
 @settings(max_examples=300, deadline=None)

@@ -31,7 +31,7 @@ for name in [
     "f01_udf_python", "f02_pandas_udf_scalar", "f03_pandas_udf_grouped_agg",
     "f04_apply_in_pandas", "f05_map_in_pandas", "f06_udtf", "f07_arrow_udf",
     "f08_multimodal_decode", "f10_cogroup_in_pandas", "a18_python_datasource",
-    "e10_batch_twin", "a13_stream_ingest_foreachbatch",
+    "e06_stream_stateful", "e10_batch_twin", "a13_stream_ingest_foreachbatch",
 ]:
     n = qs[name](spark, "/root/testdata/sf0.001").count()
     print("DROVE", name, n)
